@@ -396,9 +396,7 @@ class NewsleakAPI:
         self.transcripts via brute matching_docs, which carries no
         invalidation signal — the index-state key would not notice a
         transcripts-source change, serving stale results."""
-        if self.index_dir is None or not (
-            spec.all_scored_terms() or spec.boost_terms
-        ):
+        if self.index_dir is None or not spec.scored():
             self.agg_runs += 1
             return compute()
         full_key = (key, index_state_key(self.index_dir))
@@ -416,7 +414,7 @@ class NewsleakAPI:
         """Query-filtered doc set for aggregation endpoints. Indexed
         path: posting-list intersection supplies the doc ids (no text
         re-tokenization), semi-joined back for the facet columns."""
-        if self.index_dir is not None and (spec.all_scored_terms() or spec.boost_terms):
+        if self.index_dir is not None and spec.scored():
             ids = matching_doc_ids(self.spark, self.index_dir, spec)
             return self.transcripts.join(ids, "doc_id", "left_semi")
         return matching_docs(self.transcripts, spec, self.mode)

@@ -5,6 +5,7 @@
     → docmeta + collection stats (N, avgdl)        [stage: docmeta]
     → postings groupBy (doc_id, term)              [stage: postings]
     → dictionary (term, df, cf, is_hot)            [stage: dictionary]
+    → hot-pair bigram sidecar (positions indexes)  [stage: bigrams]
     → salted repartition by (shard, bucket, salt)
     → delta+varint block encode (applyInPandas,
       whole-bucket vectorized numpy)               [stage: segments]
@@ -24,6 +25,13 @@ Postings are computed ONCE and checkpointed; the dictionary is a cheap
 re-aggregation of that checkpoint (the reference recomputes nothing
 because it never scales past one node; we pay one parquet write to
 avoid re-tokenizing the collection twice).
+
+Bigram sidecar (stage 4b) is the one place the sidecar is built, for
+builds, appends and compactions: the hot set is the dictionary's top
+``bigram_top_terms`` by (cf desc, term asc); pairs are extracted from
+the tokenized checkpoint when it exists and from the postings'
+positions when it does not (a compacted index). Indexes without
+positions build no sidecar — they reject phrase queries.
 
 Skew (north_rule "skew handled explicitly"): terms with
 df ≥ hot_df_ratio·N get ``salt = doc_id % n_salts`` in the encode
@@ -197,9 +205,7 @@ def _postings(tokenized: DataFrame, with_positions: bool) -> DataFrame:
     )
 
 
-def _bigram_postings(
-    tokenized: DataFrame, hot_terms: list[str], with_positions: bool
-) -> DataFrame:
+def _bigram_postings(tokenized: DataFrame, hot_terms: list[str]) -> DataFrame:
     """Hot-pair bigram sidecar postings: one row per (doc, pair key)
     — the pair key joins the two tokens with BIGRAM_SEP (\\x1f; see
     the comment at its definition for why NUL cannot be used) —
@@ -214,9 +220,7 @@ def _bigram_postings(
     candidate docs by each covered pair's doc list before any position
     IO (a fully covered len-2 phrase needs no positions at all —
     membership is adjacency; longer phrases verify with unigram
-    positions over the pruned set). Positions of the first token are
-    computed here for the per-(doc,pair) tf/run-length grouping but
-    are not persisted (with_positions=False at the call site).
+    positions over the pruned set), so no positions are emitted.
 
     MAP-ONLY like _postings: adjacency is doc-local, detected on the
     flattened token stream with one vectorized pass (same-doc mask +
@@ -249,9 +253,7 @@ def _bigram_postings(
             dls = batch.column("dl").to_numpy(zero_copy_only=False).astype(np.int64)
             shards = batch.column("shard").to_numpy(zero_copy_only=False).astype(np.int64)
 
-            n_per = np.diff(offs)
-            doc_idx = np.repeat(np.arange(n_rows), n_per)
-            pos = (np.arange(total) - np.repeat(offs[:-1], n_per)).astype(np.int64)
+            doc_idx = np.repeat(np.arange(n_rows), np.diff(offs))
             adj = (
                 (doc_idx[1:] == doc_idx[:-1])
                 & hot_code[codes[:-1]]
@@ -262,9 +264,8 @@ def _bigram_postings(
                 continue
             d = doc_idx[hits]
             key = codes[hits] * len(dic) + codes[hits + 1]
-            p = pos[hits]
-            order = np.lexsort((key, d))  # primary doc, secondary pair, stable
-            fd, fk, fp = d[order], key[order], p[order]
+            order = np.lexsort((key, d))  # primary doc, secondary pair
+            fd, fk = d[order], key[order]
             new = np.empty(fd.size, dtype=bool)
             new[0] = True
             new[1:] = (fd[1:] != fd[:-1]) | (fk[1:] != fk[:-1])
@@ -278,20 +279,14 @@ def _bigram_postings(
                 [dic[k // len(dic)] + BIGRAM_SEP + dic[k % len(dic)] for k in uk.tolist()],
                 dtype=object,
             )
-            if with_positions:
-                positions = pa.ListArray.from_arrays(
-                    pa.array(np.append(starts, fd.size).astype(np.int32)),
-                    pa.array(fp.astype(np.int32), type=pa.int32()),
-                )
-            else:
-                # EMPTY lists, not nulls: bigram rows ride the shared
-                # segment encoder, whose positions path consumes the
-                # ListArray buffers unconditionally when the index
-                # stores positions
-                positions = pa.ListArray.from_arrays(
-                    pa.array(np.zeros(starts.size + 1, dtype=np.int32)),
-                    pa.array([], type=pa.int32()),
-                )
+            # EMPTY lists, not nulls: bigram rows ride the shared
+            # segment encoder, whose positions path consumes the
+            # ListArray buffers unconditionally when the index stores
+            # positions
+            positions = pa.ListArray.from_arrays(
+                pa.array(np.zeros(starts.size + 1, dtype=np.int32)),
+                pa.array([], type=pa.int32()),
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(doc_ids[gd], type=pa.int64()),
@@ -314,11 +309,13 @@ def _bigram_from_postings(postings: DataFrame, hot_terms: list[str]) -> DataFram
     the tokenized text: pair (a, b) is adjacent at token index p iff
     p ∈ positions(a) and p+1 ∈ positions(b) — the stored positions are
     the doc's token-stream indexes, so adjacency survives the postings
-    representation exactly. Used by compact_index, which has no
-    tokenized checkpoint: re-extracting here lets compaction RESTORE
-    coverage to the merged collection's own top-K hot set (identical
-    to a from-scratch build's) rather than inherit the parts'
-    intersection, which can only shrink as deltas accumulate.
+    representation exactly. Stage 4b uses it when the index has no
+    tokenized checkpoint (a compacted index): re-extracting here lets
+    compaction RESTORE coverage to the merged collection's own top-K
+    hot set (identical to a from-scratch build's) rather than inherit
+    the parts' intersection, which can only shrink as deltas
+    accumulate. The tokens pass (_bigram_postings) gives identical
+    rows faster, so builds and appends keep it.
 
     Declarative and skew-free: explode the ≤|hot| terms' postings to
     (doc, pos, term) occurrence rows, self-equi-join on
@@ -573,15 +570,19 @@ def build_index(
     big_dict_path = os.path.join(index_dir, "bigram_dictionary")
     seg_path = os.path.join(index_dir, "segments")
 
+    # The sidecar only serves phrase queries, which need positions, so
+    # an index without positions never builds one.
+    sidecar = cfg.hot_bigrams and cfg.with_positions
+
     # A prior build of this dir may have left a sidecar behind. If this
-    # build won't (re)produce one — hot_bigrams off, or a full rebuild
-    # whose stage 4b only overwrites big_post_path when it finds pairs —
+    # build won't (re)produce one — no sidecar, or a full rebuild whose
+    # stage 4b only overwrites big_post_path when it finds pairs —
     # stale stats.bigram_terms would make the reader treat pairs as
     # COVERED while the rebuilt segments carry no sidecar postings:
     # silent false negatives on phrase queries. Reset the manifest
     # coverage signal and remove the on-disk leftovers up front; stage
     # 4b re-sets both when it actually runs.
-    if not cfg.hot_bigrams or not resume:
+    if not sidecar or not resume:
         if man.stats.get("bigram_terms") or int(
             man.stats.get("n_bigram_postings") or 0
         ):
@@ -702,10 +703,9 @@ def build_index(
     # rare-term lookup. The set of hot terms the extraction used is
     # recorded in the manifest (stats.bigram_terms): the reader treats
     # a pair as COVERED — "bigram absent ⇒ no adjacency anywhere" —
-    # only for pairs inside that set. Compaction commits this stage as
-    # satisfied (per-part sidecar union + coverage intersection) before
-    # entering this function, exactly like the tokenized checkpoint.
-    if cfg.hot_bigrams and not (resume and man.stage_done("bigrams", chash)):
+    # only for pairs inside that set. This stage is the only code that
+    # builds the sidecar — for builds, appends and compactions alike.
+    if sidecar and not (resume and man.stage_done("bigrams", chash)):
         t0 = time.time()
         # bounded driver collect: exactly bigram_top_terms strings;
         # (cf desc, term asc) ordering keeps the set deterministic
@@ -718,11 +718,12 @@ def build_index(
         )
         n_big = 0
         if hot_terms:
-            # positions are never stored for bigram rows: the phrase
-            # filter uses them as a membership pre-filter only (a len-2
-            # covered phrase's membership IS adjacency; longer phrases
-            # verify with unigram positions over the pruned candidates)
-            bp = _bigram_postings(_tokenized(), hot_terms, False)
+            # both extractors give identical rows; the tokens pass is
+            # faster, and a compacted index has only its merged postings
+            if os.path.exists(tok_path):
+                bp = _bigram_postings(_tokenized(), hot_terms)
+            else:
+                bp = _bigram_from_postings(postings, hot_terms)
             obs = Observation("bigrams")
             bp = bp.observe(obs, F.count(F.lit(1)).alias("rows"))
             bp.write.mode("overwrite").parquet(big_post_path)
@@ -754,7 +755,7 @@ def build_index(
         joined = postings.join(
             dictionary.select("term", "df", "bucket", "is_hot"), "term"
         )
-        if cfg.hot_bigrams and int(man.stats.get("n_bigram_postings") or 0) > 0:
+        if sidecar and int(man.stats.get("n_bigram_postings") or 0) > 0:
             # bigram sidecar rows ride the same salted encode: their
             # synthetic terms bucket/salt/encode like any other term
             joined = joined.unionByName(
@@ -904,10 +905,12 @@ def compact_index(
     (and docmeta) are unioned into ``out_dir``, their stage records are
     committed, and the normal resumable build pipeline finishes from
     stage 4 — dictionary re-aggregation (df/cf over the merged
-    postings, so hot-term salting follows the COMBINED frequencies)
-    and the salted segment encode. Tokenization — the dominant build
-    cost — is never re-run; compaction costs ~stages 4-5 of a fresh
-    build plus two columnar unions.
+    postings, so hot-term salting follows the COMBINED frequencies),
+    the bigram sidecar (stage 4b re-extracts it from the merged
+    postings' positions with the merged collection's own hot set) and
+    the salted segment encode. Tokenization — the dominant build cost
+    — is never re-run; compaction costs ~stages 4-5 of a fresh build
+    plus two columnar unions.
 
     The source index is NOT mutated; ``out_dir`` (default
     ``{index_dir}_compacted``) is a complete standalone index whose
@@ -997,79 +1000,6 @@ def compact_index(
             )
         )
 
-    # bigram sidecar. With stored positions (the default), compaction
-    # RE-EXTRACTS the sidecar from the merged unigram postings
-    # (_bigram_from_postings): the hot set is recomputed as the merged
-    # collection's own top-K by cf — the same (cf desc, term asc)
-    # criterion stage 4b applies — so coverage is RESTORED to exactly
-    # what a from-scratch build of the full collection would carry.
-    # Without compaction, multi-part coverage is the INTERSECTION of
-    # the parts' hot sets (IndexReader), which can only shrink as
-    # deltas with different term heads accumulate; this is the
-    # maintenance step that folds it back. Positions-less indexes fall
-    # back to unioning the per-part extractions with intersection
-    # coverage. Committed before the build resumes so stage 4b never
-    # re-enters (no tokenized checkpoint).
-    if cfg.hot_bigrams and not man.stage_done("bigrams", chash):
-        t0 = time.time()
-        n_big = 0
-        bp_out = os.path.join(out_dir, "bigram_postings")
-        bd_out = os.path.join(out_dir, "bigram_dictionary")
-        if cfg.with_positions:
-            merged_posts = spark.read.parquet(post_path)
-            cover = sorted(
-                r["term"]
-                for r in merged_posts.groupBy("term")
-                .agg(F.sum("tf").alias("cf"))
-                .orderBy(F.desc("cf"), F.asc("term"))
-                .limit(cfg.bigram_top_terms)
-                .collect()
-            )
-            if cover:
-                obs = Observation("compact_bigrams")
-                bp = _bigram_from_postings(merged_posts, cover).observe(
-                    obs, F.count(F.lit(1)).alias("rows")
-                )
-                bp.write.mode("overwrite").parquet(bp_out)
-                n_big = int(obs.get["rows"])
-        else:
-            part_mans = [Manifest(p) for p in parts]
-            covers = [set(m.stats.get("bigram_terms") or []) for m in part_mans]
-            cover = sorted(set.intersection(*covers)) if covers else []
-            srcs = [
-                os.path.join(p, "bigram_postings")
-                for p, m in zip(parts, part_mans)
-                if int(m.stats.get("n_bigram_postings") or 0) > 0
-            ]
-            if srcs:
-                obs = Observation("compact_bigrams")
-                merged = reduce(
-                    lambda a, b: a.unionByName(b), [spark.read.parquet(s) for s in srcs]
-                ).observe(obs, F.count(F.lit(1)).alias("rows"))
-                merged.write.mode("overwrite").parquet(bp_out)
-                n_big = int(obs.get["rows"])
-        if n_big:
-            n_docs_c = float(man.stats["n_docs"])
-            bd = (
-                spark.read.parquet(bp_out)
-                .groupBy("term")
-                .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-                .withColumn("bucket", _bucket_col(F.col("term"), cfg.n_term_buckets))
-                .withColumn(
-                    "is_hot",
-                    F.col("df") >= F.lit(cfg.hot_df_ratio) * F.lit(n_docs_c),
-                )
-            )
-            bd.write.mode("overwrite").partitionBy("bucket").parquet(bd_out)
-        man.set_stats(n_bigram_postings=n_big, bigram_terms=cover)
-        man.commit_stage(
-            StageRecord(
-                "bigrams", n_big, time.time() - t0,
-                dir_bytes(bp_out) if n_big else 0, chash,
-                extra={"compacted_from": len(parts)},
-            )
-        )
-
     # carry the streaming ingest ledger: a stream repointed at the
     # compacted dir (same source checkpoint) must keep skipping batches
     # whose rows are already folded in, or the replay would duplicate
@@ -1080,6 +1010,7 @@ def compact_index(
     if os.path.exists(ledger):
         shutil.copy(ledger, os.path.join(out_dir, BATCH_LEDGER))
 
-    # stages 4-5 (dictionary, segments) run via the normal build with
-    # stages 1-3 already committed; transcripts is never touched
+    # stages 4-5 (dictionary, bigrams, segments) run via the normal
+    # build with stages 1-3 already committed; transcripts is never
+    # touched
     return build_index(spark, None, out_dir, cfg, resume=True)

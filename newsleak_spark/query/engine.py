@@ -277,14 +277,12 @@ def _make_shard_scorer(
     safe_bounds: bool = False,
     neg_terms: tuple[str, ...] = (),
     phrase_plans: tuple | None = None,
-    emit_shard: bool = False,
 ):
-    """Returns the applyInPandas function scoring one shard's blocks.
-
-    ``emit_shard`` adds the shard id to the output rows (schema
-    "shard int, doc_id long, score double") so the serving layer can
-    cache the PER-SHARD top-k heaps and compute how deep the merged
-    ranking is exact (deep pagination without growing-k re-runs).
+    """Returns the applyInPandas function scoring one shard's blocks
+    into rows (shard, doc_id, score). The shard id lets the serving
+    layer cache the PER-SHARD top-k heaps and compute how deep the
+    merged ranking is exact (deep pagination without growing-k
+    re-runs).
 
     With metadata/date filters the function is used through cogroup:
     the second frame carries the shard's FILTER-SURVIVING doc_ids, so
@@ -323,9 +321,9 @@ def _make_shard_scorer(
     req_order = sorted(required, key=lambda m: (m.df, m.term))  # rarest first
 
     def _score(pdf: pd.DataFrame, allowed_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
-        if emit_shard:
-            empty.insert(0, "shard", pd.Series(dtype="int32"))
+        empty = pd.DataFrame(
+            {"shard": np.empty(0, np.int32), "doc_id": np.empty(0, np.int64), "score": np.empty(0)}
+        )
         allowed = None
         if allowed_pdf is not None:
             allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
@@ -396,10 +394,8 @@ def _make_shard_scorer(
             # tie-break
             order = np.lexsort((out_docs, -np.round(out_scores * 1e6)))[:k]
             out_docs, out_scores = out_docs[order], out_scores[order]
-        out = pd.DataFrame({"doc_id": out_docs.astype(np.int64), "score": out_scores})
-        if emit_shard:
-            out.insert(0, "shard", np.int32(pdf["shard"].iloc[0]))
-        return out
+        shard = np.int32(pdf["shard"].iloc[0])
+        return pd.DataFrame({"shard": shard, "doc_id": out_docs.astype(np.int64), "score": out_scores})
 
     def _member_mask(docs, allowed):
         idx = np.searchsorted(allowed, docs)
@@ -788,16 +784,31 @@ def _cached_reader(spark: SparkSession, index_dir: str) -> IndexReader:
     return rd
 
 
+def _reader(
+    spark: SparkSession, index_dir: str, reader: IndexReader | None
+) -> IndexReader:
+    """The caller's reader or the cached one for ``index_dir``, after
+    shipping the package to the workers that will run the scorer."""
+    from newsleak_spark.session import ensure_workers_can_import
+
+    ensure_workers_can_import(spark)
+    return reader or _cached_reader(spark, index_dir)
+
+
+CANDIDATE_SCHEMA = "shard int, doc_id long, score_e6 long"
+
+
 def _candidates(
-    spark: SparkSession, rd: IndexReader, spec: QuerySpec, truncate: bool,
-    emit_shard: bool = False,
-) -> DataFrame | None:
-    """Shared candidate pipeline of search() and matching_doc_ids():
-    dictionary lookup → segment scan (bucket-pruned) → shard-local
-    scoring applyInPandas (cogrouped with the filtered docmeta when
-    F2/F5 filters are present). ``truncate`` keeps the per-shard top-k
-    heap on (ranked search) or off (full doc-set). Returns None when a
-    required term is absent from the collection (AND → no hits)."""
+    spark: SparkSession, rd: IndexReader, spec: QuerySpec, truncate: bool
+) -> DataFrame:
+    """The one candidate pipeline behind every engine result of a
+    scored spec: dictionary lookup → segment scan (bucket-pruned) →
+    shard-local scoring applyInPandas (cogrouped with the filtered
+    docmeta when F2/F5 filters are present). ``truncate`` keeps the
+    per-shard top-k heap on (ranked search) or off (full doc-set).
+    Returns (shard, doc_id, score_e6); empty when the spec cannot
+    match (a required term absent from the collection → AND has no
+    hits)."""
     if spec.phrases and not rd.man.config.get("with_positions", True):
         raise ValueError(
             f"index at {rd.index_dir} was built with with_positions=False; "
@@ -807,7 +818,8 @@ def _candidates(
     required = list(spec.all_scored_terms())
     boost = [t for t in spec.boost_terms if t not in required]
     if any(t in spec.not_terms for t in required):
-        return None  # `a -a`: must AND must_not on one term → no hits
+        # `a -a`: must AND must_not on one term → no hits
+        return spark.createDataFrame([], CANDIDATE_SCHEMA)
     neg = [t for t in spec.not_terms if t not in boost]
     all_terms = required + boost
     # hot-pair bigram sidecar plan: an adjacent phrase pair with BOTH
@@ -836,14 +848,12 @@ def _candidates(
         phrase_plans = tuple(plans)
         bigram_fetch = sorted({bt for _p, prs, _f in plans for _i, bt in prs if bt})
     dict_rows = rd.dictionary_rows(all_terms + neg + bigram_fetch)
-    if any(t not in dict_rows for t in required):
-        return None
-    if any(bt not in dict_rows for bt in bigram_fetch):
-        # a COVERED pair absent from the combined bigram dictionary was
-        # extracted by every part and found nowhere → the phrase has no
-        # adjacency anywhere in the collection → no hits (phrases are
-        # required terms)
-        return None
+    # a COVERED pair absent from the combined bigram dictionary was
+    # extracted by every part and found nowhere → the phrase has no
+    # adjacency anywhere in the collection → no hits (phrases are
+    # required terms)
+    if any(t not in dict_rows for t in required + bigram_fetch):
+        return spark.createDataFrame([], CANDIDATE_SCHEMA)
     all_terms = [t for t in all_terms if t in dict_rows]
     # a must_not term absent from the collection excludes nothing; a
     # negated boost term stays in the fetch list only once (the scorer
@@ -863,51 +873,41 @@ def _candidates(
     scorer = _make_shard_scorer(
         metas, spec.phrases, rd.avgdl, spec.k, truncate=truncate,
         safe_bounds=rd.multi, neg_terms=neg, phrase_plans=phrase_plans,
-        emit_shard=emit_shard,
     )
-    schema = ("shard int, " if emit_shard else "") + "doc_id long, score double"
+    schema = "shard int, doc_id long, score double"
     if has_filters:
         # shard-local filtering: cogroup the shard's blocks with its
         # filter-surviving doc_ids (docmeta is shard-partitioned, so
         # the filter scan prunes columns + pushes predicates); with
         # truncate on, only k rows leave each shard
         meta = _apply_meta_filters(rd.docmeta(), spec).select("shard", "doc_id")
-        return (
+        scored = (
             seg.groupBy("shard")
             .cogroup(meta.groupBy("shard"))
             .applyInPandas(scorer.cogrouped, schema)
         )
-    return seg.groupBy("shard").applyInPandas(scorer, schema)
+    else:
+        scored = seg.groupBy("shard").applyInPandas(scorer, schema)
+    return scored.select(
+        "shard", "doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6")
+    )
 
 
 def search(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> DataFrame:
-    """Top-k search against a built index. Returns (doc_id, score_e6)."""
-    from newsleak_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-    rd = reader or _cached_reader(spark, index_dir)
-
-    if not spec.all_scored_terms() and not spec.boost_terms:
-        # match_all / filters-only: no scoring, pinned score 1.0; a
-        # not-only query is match_all minus the neg union doc set
-        # (anti-join against the index's postings — text never read)
-        out = _apply_meta_filters(rd.docmeta(), spec).select(
+    """Top-k search against a built index. Returns (doc_id, score_e6):
+    a scored spec ranks by its merged per-shard heaps (search_heaps);
+    match_all / filters-only / not-only specs return their doc set
+    (matching_doc_ids) at the pinned score 1e6."""
+    rd = _reader(spark, index_dir, reader)
+    heaps = search_heaps(spark, index_dir, spec, rd)
+    if heaps is not None:
+        out = heaps.drop("shard")
+    else:
+        out = matching_doc_ids(spark, index_dir, spec, rd).select(
             "doc_id", F.lit(1_000_000).cast("long").alias("score_e6")
         )
-        if spec.not_terms:
-            neg_spec = QuerySpec(boost_terms=tuple(spec.not_terms))
-            ex = _candidates(spark, rd, neg_spec, truncate=False)
-            if ex is not None:
-                out = out.join(ex.select("doc_id"), "doc_id", "left_anti")
-        return out.orderBy(F.desc("score_e6"), F.asc("doc_id")).limit(spec.k)
-
-    cand = _candidates(spark, rd, spec, truncate=True)
-    if cand is None:
-        # a required term is absent from the collection → no hits (AND)
-        return spark.createDataFrame([], "doc_id long, score_e6 long")
-    out = cand.select("doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6"))
     return out.orderBy(F.desc("score_e6"), F.asc("doc_id")).limit(spec.k)
 
 
@@ -926,56 +926,42 @@ def search_heaps(
     TRUNCATED shard did not return ranks strictly after that shard's
     k-th returned row, so the merged ranking is exact through every
     position whose key sorts <= the minimum truncated-shard boundary
-    key. Returns None for no-scored-term (match_all / filters-only)
-    specs — those page through docmeta directly."""
-    from newsleak_spark.session import ensure_workers_can_import
-
-    if not spec.all_scored_terms() and not spec.boost_terms:
+    key. Returns None for unscored (match_all / filters-only /
+    not-only) specs — those page through their doc set."""
+    if not spec.scored():
         return None
-    ensure_workers_can_import(spark)
-    rd = reader or _cached_reader(spark, index_dir)
-    cand = _candidates(spark, rd, spec, truncate=True, emit_shard=True)
-    if cand is None:
-        return spark.createDataFrame([], "shard int, doc_id long, score_e6 long")
-    return cand.select(
-        "shard", "doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6")
-    )
+    return _candidates(spark, _reader(spark, index_dir, reader), spec, truncate=True)
 
 
 def matching_doc_ids(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> DataFrame:
-    """The UNTRUNCATED matching doc-id set from the INDEX alone — same
-    shard-local intersection/filter machinery as search() with the
-    per-shard top-k heap off. Never touches the text column (docmeta
-    scans are column-pruned), unlike a brute matching_docs() scan which
-    re-tokenizes the collection; this is the index-accelerated doc-set
-    feed for aggregation endpoints (facets/timeline/network over a
-    query-filtered corpus). Returns DataFrame(doc_id long)."""
-    from newsleak_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-    rd = reader or _cached_reader(spark, index_dir)
-
-    if not spec.all_scored_terms() and not spec.boost_terms:
-        out = _apply_meta_filters(rd.docmeta(), spec).select("doc_id")
-        if spec.not_terms:
-            neg_spec = QuerySpec(boost_terms=tuple(spec.not_terms))
-            ex = _candidates(spark, rd, neg_spec, truncate=False)
-            if ex is not None:
-                out = out.join(ex.select("doc_id"), "doc_id", "left_anti")
-        return out
-
-    cand = _candidates(spark, rd, spec, truncate=False)
-    if cand is None:
-        return spark.createDataFrame([], "doc_id long")
-    return cand.select("doc_id")
+    """The UNTRUNCATED matching doc-id set from the INDEX alone — the
+    candidate pipeline with the per-shard top-k heap off for scored
+    specs; docmeta under the F2/F5 filters for unscored ones, minus
+    the union of the must_not terms' postings (anti-join — text never
+    read). Never touches the text column (docmeta scans are column-
+    pruned), unlike a brute matching_docs() scan which re-tokenizes
+    the collection; this is the index-accelerated doc-set feed for
+    aggregation endpoints (facets/timeline/network over a
+    query-filtered corpus) and for count_hits. Returns
+    DataFrame(doc_id long)."""
+    rd = _reader(spark, index_dir, reader)
+    if spec.scored():
+        return _candidates(spark, rd, spec, truncate=False).select("doc_id")
+    out = _apply_meta_filters(rd.docmeta(), spec).select("doc_id")
+    if spec.not_terms:
+        neg = QuerySpec(boost_terms=spec.not_terms)
+        ex = _candidates(spark, rd, neg, truncate=False).select("doc_id")
+        out = out.join(ex, "doc_id", "left_anti")
+    return out
 
 
 def count_hits(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> int:
-    """Total matching-doc count (G9 / getTotalHits) from the index."""
+    """Total matching-doc count (G9 / getTotalHits): the size of
+    matching_doc_ids' doc set."""
     return matching_doc_ids(spark, index_dir, spec, reader).count()
 
 

@@ -56,6 +56,12 @@ class QuerySpec:
                 seen.setdefault(t)
         return tuple(seen)
 
+    def scored(self) -> bool:
+        """True when some term scores (required or boost): such a spec
+        ranks through the index's candidate pipeline; match_all,
+        filters-only and not-only specs pin every hit at one score."""
+        return bool(self.terms or any(self.phrases) or self.boost_terms)
+
 
 def parse_query_string(
     q: str, analyzer=None

@@ -77,21 +77,41 @@ def test_get_docs_hits_is_matching_count(api, transcripts):
 
 
 def test_count_hits_matches_matching_docs(spark, api, transcripts, index_dir):
-    """Engine-only totals (no text scan) must equal the brute doc-set
-    count, including the ES bool edge case: no musts → at least one
-    should (boost) term must match."""
-    from newsleak_spark.query.engine import count_hits
+    """Every engine entry point agrees with the brute oracle on one
+    table of spec shapes: the doc set (matching_doc_ids vs
+    matching_docs), its size (count_hits), the ranking (search vs
+    bm25_topk) and the heaps' presence (search_heaps is None exactly
+    for unscored specs; an empty 3-column frame when a required term
+    is absent). Includes the ES bool edge case: no musts → at least
+    one should (boost) term must match."""
+    from newsleak_spark.query.engine import (
+        count_hits,
+        matching_doc_ids,
+        search,
+        search_heaps,
+    )
 
     for spec in [
         QuerySpec(terms=("merge", "window")),
         QuerySpec(phrases=(("fast", "table"),)),
         QuerySpec(terms=("table",), role_filter=("user",)),
         QuerySpec(terms=(), boost_terms=("merge", "window")),  # should-only
+        QuerySpec(not_terms=("merge",)),  # not-only
+        QuerySpec(terms=("merge",), not_terms=("merge",)),
+        QuerySpec(terms=("merge", "zzabsentzz")),
         QuerySpec(),  # match_all
     ]:
-        got = count_hits(spark, index_dir, spec)
-        want = matching_docs(transcripts, spec).count()
-        assert got == want, (spec, got, want)
+        ids = sorted(r["doc_id"] for r in matching_doc_ids(spark, index_dir, spec).collect())
+        want = sorted(r["doc_id"] for r in matching_docs(transcripts, spec).select("doc_id").collect())
+        assert ids == want, spec
+        assert count_hits(spark, index_dir, spec) == len(want), spec
+        got = [tuple(r) for r in search(spark, index_dir, spec).collect()]
+        assert got == [tuple(r) for r in bm25_topk(transcripts, spec).collect()], spec
+        heaps = search_heaps(spark, index_dir, spec)
+        assert (heaps is None) == (not spec.scored()), spec
+        if "zzabsentzz" in spec.terms:
+            assert heaps.columns == ["shard", "doc_id", "score_e6"]
+            assert heaps.count() == 0
 
 
 def test_induce_subgraph_matches_operator_layer(api, transcripts):

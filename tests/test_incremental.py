@@ -3,6 +3,7 @@ class rank- and score-identically to a from-scratch build of the full
 collection (combined N/avgdl/df reproduce the exact BM25 scores; the
 BMW safe bound never skips a winner)."""
 
+import os
 import shutil
 
 import pytest
@@ -100,6 +101,9 @@ def test_phrase_query_rejected_without_positions(spark, transcripts, tmp_path):
     from dataclasses import replace
 
     d = str(tmp_path / "idx_nopos")
-    build_index(spark, transcripts, d, replace(CFG, with_positions=False), resume=False)
+    man = build_index(spark, transcripts, d, replace(CFG, with_positions=False), resume=False)
     with pytest.raises(ValueError, match="with_positions"):
         search(spark, d, QuerySpec(phrases=(("fast", "table"),), k=5))
+    # no query can read a sidecar without positions, so none is built
+    assert not os.path.exists(os.path.join(d, "bigram_postings"))
+    assert man.stats.get("bigram_terms") is None

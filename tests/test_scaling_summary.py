@@ -13,12 +13,14 @@ from __future__ import annotations
 
 import importlib
 import json
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 
 def _run(kind, n_turns, cores, n_wall, wall_4n, eff, inflight=None):
@@ -86,3 +88,36 @@ def test_bench_emits_one_summary_per_index_size(history):
     assert set(sizes) == {10_000_000, 50_000_000}
     assert sizes[50_000_000]["n_quiet_ge_0_8"] == 2
     assert sizes[10_000_000]["n_quiet"] == 2
+
+
+def test_loud_run_never_headlines(tmp_path, monkeypatch):
+    """The read-path headline takes its best run from the QUIET runs of
+    the largest index's series: a loud run (N-leg wall 1.3x the
+    series' best) with the highest vs-ceiling efficiency must not headline, and
+    neither may a smaller index's run."""
+    import bench
+
+    quiet_median = importlib.import_module("quiet_median")
+    kind = "query_scaling_same_index"
+    runs = [
+        _run(kind, 10_000_000, 1, 100.0, 35.0, 0.714),
+        _run(kind, 50_000_000, 1, 500.0, 150.0, 0.833),
+        _run(kind, 50_000_000, 1, 520.0, 155.0, 0.839),
+        # loud: N leg 1.3x the best N wall, yet within 1.3x the median
+        # and at raw efficiency <= 1.05
+        _run(kind, 50_000_000, 1, 650.0, 152.0, 1.0),
+    ]
+    for r, vs_ceiling, at in zip(
+        runs, (1.5, 0.90, 0.92, 1.8), ("10m", "q1", "q2", "loud")
+    ):
+        r["efficiency_vs_hw_ceiling"] = vs_ceiling
+        r["measured_at"] = at
+    path = tmp_path / "scaling_history.jsonl"
+    path.write_text("".join(json.dumps(r) + "\n" for r in runs))
+    monkeypatch.setattr(quiet_median, "HISTORY", str(path))
+    monkeypatch.setattr(bench, "SCALING_HISTORY", str(path))
+
+    out = bench._query_leg_summary()
+    assert out["index_turns"] == 50_000_000
+    assert out["best_by_vs_ceiling"]["measured_at"] == "q2"
+    assert out["quiet_median"]["n_quiet"] == 2

@@ -7,12 +7,13 @@ Usage: python tools/check_oracle.py [sf_dir] [name_filter...]
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from newsleak_spark.session import get_spark  # noqa: E402

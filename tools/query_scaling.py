@@ -281,7 +281,7 @@ def run(index_dir: str) -> dict:
         from newsleak_spark.indexing.manifest import Manifest
 
         series_turns = int(Manifest(index_dir).stats.get("n_docs") or N_TURNS)
-    except (OSError, ValueError, KeyError):
+    except (OSError, ValueError, KeyError, TypeError):
         series_turns = N_TURNS
     out = {
         "kind": KIND,

@@ -19,18 +19,23 @@ QUIET_FACTOR = 1.25
 HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)), "scaling_history.jsonl")
 
 
-def summarize(
+def _wall(kind: str) -> str:
+    return "batch_sec" if kind == "query_scaling_same_index" else "build_sec"
+
+
+def quiet_runs(
     n_turns: int = 800_000,
     executor_cores: int = 2,
     kind: str = "strong_scaling_same_input",
-) -> dict:
-    """Per-series: only runs of the same (kind, n_turns, executor_cores)
-    configuration compare (legacy entries predate the fields: kind =
-    strong_scaling_same_input, executor_cores = 2). The build series'
-    leg wall is build_sec; the query series' (query_scaling_same_index)
-    is batch_sec — the same symmetric rule applies to whichever wall
-    the series' job measures."""
-    wall = "batch_sec" if kind == "query_scaling_same_index" else "build_sec"
+) -> tuple[list, list]:
+    """(runs, quiet runs) of one series. Only runs of the same (kind,
+    n_turns, executor_cores) configuration compare (legacy entries
+    predate the fields: kind = strong_scaling_same_input,
+    executor_cores = 2). The build series' leg wall is build_sec; the
+    query series' (query_scaling_same_index) is batch_sec — the same
+    symmetric rule applies to whichever wall the series' job
+    measures."""
+    wall = _wall(kind)
     with open(HISTORY) as f:
         runs = [json.loads(l) for l in f if l.strip()]
     runs = [
@@ -41,7 +46,7 @@ def summarize(
         and r.get("kind", "strong_scaling_same_input") == kind
     ]
     if not runs:
-        return {"n_runs": 0, "n_quiet": 0, "median_quiet_eff": None}
+        return [], []
     best_n = min(r["n_executors"][wall] for r in runs)
     best_4n = min(r["4n_executors"][wall] for r in runs)
     quiet = [
@@ -50,6 +55,21 @@ def summarize(
         if r["n_executors"][wall] <= QUIET_FACTOR * best_n
         and r["4n_executors"][wall] <= QUIET_FACTOR * best_4n
     ]
+    return runs, quiet
+
+
+def summarize(
+    n_turns: int = 800_000,
+    executor_cores: int = 2,
+    kind: str = "strong_scaling_same_input",
+) -> dict:
+    """The series' quiet runs (quiet_runs) and their medians."""
+    wall = _wall(kind)
+    runs, quiet = quiet_runs(n_turns, executor_cores, kind)
+    if not runs:
+        return {"n_runs": 0, "n_quiet": 0, "median_quiet_eff": None}
+    best_n = min(r["n_executors"][wall] for r in runs)
+    best_4n = min(r["4n_executors"][wall] for r in runs)
     def _median(vals: list) -> float | None:
         vals = sorted(vals)
         mid = len(vals) // 2

@@ -14,9 +14,10 @@ Usage: python tools/recall_report.py [sf_dir ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from newsleak_spark import similarity, textops  # noqa: E402
 from newsleak_spark.session import get_spark  # noqa: E402
