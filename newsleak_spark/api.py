@@ -32,6 +32,8 @@ size.
 from __future__ import annotations
 
 import re
+import threading
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,9 +91,11 @@ def compile_spec(
     )
 
 
-def _merge_heaps(hrows: list, k: int) -> tuple[list, float]:
-    """Merge collected per-shard heap rows (shard, doc_id, score_e6)
-    into the global ranking and the rank through which it is exact.
+def _merge_heaps(hrows: list, k: int) -> tuple[list, float, int]:
+    """Merge collected per-shard heap rows (shard, doc_id, score_e6,
+    hits) into the global ranking, the rank through which it is exact
+    and the total hit count (the sum of each shard's ``hits``; a shard
+    with no match returned no rows and counts 0).
 
     A doc a TRUNCATED shard (one that returned exactly k rows) did not
     return ranks strictly after that shard's weakest returned key, so
@@ -100,19 +104,22 @@ def _merge_heaps(hrows: list, k: int) -> tuple[list, float]:
     heaps are exhaustive and the whole merge is exact."""
     per_shard: dict[int, int] = {}
     boundary: dict[int, tuple[int, int]] = {}
+    hits: dict[int, int] = {}
     for r in hrows:
         s = r["shard"]
         per_shard[s] = per_shard.get(s, 0) + 1
+        hits[s] = r["hits"]
         key = (-r["score_e6"], r["doc_id"])
         if s not in boundary or key > boundary[s]:
             boundary[s] = key
     merged = sorted(hrows, key=lambda r: (-r["score_e6"], r["doc_id"]))
+    total = sum(hits.values())
     truncated = [boundary[s] for s, n in per_shard.items() if n >= k]
     if not truncated:
-        return merged, float("inf")
+        return merged, float("inf"), total
     cut = min(truncated)
     safe_rank = sum(1 for r in merged if (-r["score_e6"], r["doc_id"]) <= cut)
-    return merged, safe_rank
+    return merged, safe_rank, total
 
 
 def _bad_request(e: ValueError) -> dict:
@@ -131,9 +138,10 @@ class NewsleakAPI:
     # (the reference caches its SearchHitIterator by the query's
     # Facets hash across paginated requests,
     # DocumentController.scala:284-287). On the indexed path the cache
-    # holds the MERGED PER-SHARD HEAPS plus the rank through which that
-    # merge is provably exact, so pages 2..n are driver-side slices —
-    # the SearchHitIterator.scala:43-58 cursor semantics without the
+    # holds the MERGED PER-SHARD HEAPS, the rank through which that
+    # merge is provably exact and the total hit count once a request
+    # asked for it, so pages 2..n are driver-side slices — the
+    # SearchHitIterator.scala:43-58 cursor semantics without the
     # O(k·pages) growing-k re-run the round-3 pager paid.
     HIT_CACHE_MAX = 32
     # Bounded FIFO cache of aggregation results (facet/timeline/
@@ -158,10 +166,13 @@ class NewsleakAPI:
         self.transcripts = transcripts
         self.index_dir = index_dir
         self.mode = mode
-        self._hit_cache: dict[tuple, tuple[list, float]] = {}
+        self._hit_cache: dict[tuple, tuple[list, float, int | None]] = {}
         self._agg_cache: dict[tuple, dict] = {}
         self.topk_runs = 0  # observability: ranked scans actually executed
         self.agg_runs = 0  # observability: aggregation jobs actually executed
+        # concurrent requests share one handle: the lock guards cache
+        # lookup/insert/evict and the counters, never a Spark job
+        self._lock = threading.Lock()
 
     # -- GET /getDocs -----------------------------------------------------
 
@@ -185,9 +196,14 @@ class NewsleakAPI:
         matching: a surface word is highlighted when its analyzed form
         is a query term, so english-mode 'databases' highlights for the
         stem query 'databas'. Runs driver-side over the <= page_size
-        returned bodies only. ``with_total``: on the indexed path the
-        count comes from the index alone (engine.count_hits, no text
-        scan); brute fallback pays one matching_docs scan."""
+        returned bodies only. ``with_total``: a scored spec on the
+        indexed path counts its hits in the same per-shard scan that
+        ranks the page (search_heaps(count=True)) — one Spark job for
+        page and total, the total cached with the heaps; an unscored
+        spec counts from the index alone (engine.count_hits, no text
+        scan); the brute fallback pays one matching_docs scan.
+        ``drift``: ranked ids missing from the table (stale index or
+        filtered table), skipped from the page and reported here."""
         try:
             spec = compile_spec(query, time_range, roles, tools, k=page * page_size, mode=self.mode)
         except ValueError as e:
@@ -195,10 +211,12 @@ class NewsleakAPI:
         # boost (should) terms highlight too — the ES highlighter wraps
         # every query term incl. should clauses (DocumentService.scala:406-418)
         targets = set(spec.all_scored_terms()) | set(spec.boost_terms)
-        rows = self._ranked_rows(spec)[(page - 1) * page_size :]
+        rows, total = self._ranked_rows(spec, with_total)
+        rows = rows[(page - 1) * page_size :]
         ids = [r["doc_id"] for r in rows]
         scores = {r["doc_id"]: r["score_e6"] / 1e6 for r in rows}
         docs: list[dict] = []
+        drift = 0
         if ids:
             body = self.transcripts.filter(F.col("doc_id").isin(ids))
             by_id = {r["doc_id"]: r for r in body.collect()}
@@ -207,6 +225,7 @@ class NewsleakAPI:
                 if r is None:
                     # index/table drift (stale index or filtered table):
                     # skip rather than fail the whole request
+                    drift += 1
                     continue
                 docs.append(
                     {
@@ -227,13 +246,12 @@ class NewsleakAPI:
                         },
                     }
                 )
-        total = None
-        if with_total:
+        if with_total and total is None:
             if self.index_dir is not None:
                 total = count_hits(self.spark, self.index_dir, spec)
             else:
                 total = matching_docs(self.transcripts, spec, self.mode).count()
-        return {"hits": total, "page": page, "docs": docs}
+        return {"hits": total, "page": page, "docs": docs, "drift": drift}
 
     # -- GET /induceSubgraph ----------------------------------------------
 
@@ -272,8 +290,6 @@ class NewsleakAPI:
                 ],
             }
 
-        from dataclasses import replace
-
         return self._agg_cached(
             ("subgraph", replace(spec, k=0).cache_key(), n_nodes, min_edge),
             compute,
@@ -299,8 +315,6 @@ class NewsleakAPI:
                 "lod": lod,
                 "buckets": [{"key": str(r[key]), "docCount": r["n_docs"]} for r in rows],
             }
-
-        from dataclasses import replace
 
         return self._agg_cached(
             ("timeline", replace(spec, k=0).cache_key(), lod), compute, spec
@@ -332,8 +346,6 @@ class NewsleakAPI:
                 "buckets": [{"key": r["value"], "docCount": r["n_docs"]} for r in rows],
             }
 
-        from dataclasses import replace
-
         return self._agg_cached(
             (
                 "aggregate", replace(spec, k=0).cache_key(), facet_key, size,
@@ -350,43 +362,55 @@ class NewsleakAPI:
             return search(self.spark, self.index_dir, spec)
         return bm25_topk(self.transcripts, spec, mode=self.mode)
 
-    def _ranked_rows(self, spec: QuerySpec) -> list:
-        """Collected top-k rows for the spec, cache-aware: keyed by the
-        spec NORMALIZED WITHOUT k, so any page whose rank is provably
-        exact from an already-collected run is served driver-side.
-        Indexed path: ONE search_heaps scan caches every shard's top-k
-        (n_shards·k rows, bounded); the merged list answers pages up to
-        the exactness bound — typically many pages — before any re-run.
-        Bounded FIFO."""
-        from dataclasses import replace
-
+    def _ranked_rows(self, spec: QuerySpec, with_total: bool) -> tuple[list, int | None]:
+        """Collected top-k rows for the spec and its total hit count
+        (None unless known), cache-aware: keyed by the spec NORMALIZED
+        WITHOUT k, so any page whose rank is provably exact from an
+        already-collected run is served driver-side. Indexed path: ONE
+        search_heaps scan caches every shard's top-k (n_shards·k rows,
+        bounded) — and, when ``with_total`` asks for it, every shard's
+        match count; the merged list answers pages up to the exactness
+        bound — typically many pages — before any re-run. A re-run
+        happens when the rows are not exact through k, or when a total
+        is wanted and none is cached. Bounded FIFO."""
         # the index state rides in the key: append_index/compaction on
         # this index_dir bumps the manifest/deltas mtime, so stale
         # collected rows age out exactly when the engine reader does
         state = index_state_key(self.index_dir) if self.index_dir is not None else None
         key = (replace(spec, k=0).cache_key(), state)
-        cached = self._hit_cache.get(key)
-        if cached is not None:
-            rows, safe_rank = cached
-            # answerable iff the merge is exact through spec.k, or the
-            # result set is exhausted (fewer rows than the bound allows)
-            if spec.k <= safe_rank or len(rows) < safe_rank:
-                return rows[: spec.k]
-        self.topk_runs += 1
+        with self._lock:
+            cached = self._hit_cache.get(key)
+            if cached is not None:
+                rows, safe_rank, total = cached
+                # answerable iff the merge is exact through spec.k, or
+                # the result set is exhausted (fewer rows than the bound
+                # allows), and the total is cached when one is wanted
+                if (spec.k <= safe_rank or len(rows) < safe_rank) and (
+                    total is not None or not with_total
+                ):
+                    return rows[: spec.k], total
+            self.topk_runs += 1
+        heaps = None
         if self.index_dir is not None:
-            heaps = search_heaps(self.spark, self.index_dir, spec)
-        else:
-            heaps = None
+            heaps = search_heaps(self.spark, self.index_dir, spec, count=with_total)
+        total = None
         if heaps is not None:
-            rows, safe_rank = _merge_heaps(heaps.collect(), spec.k)
+            rows, safe_rank, total = _merge_heaps(heaps.collect(), spec.k)
+            if not with_total:
+                total = None  # a skipping union shard undercounts
         else:
             # brute / match_all fallback: plain top-k, exact through k
             rows = self._topk(spec).collect()
             safe_rank = float("inf") if len(rows) < spec.k else spec.k
-        if len(self._hit_cache) >= self.HIT_CACHE_MAX:
-            self._hit_cache.pop(next(iter(self._hit_cache)))
-        self._hit_cache[key] = (rows, safe_rank)
-        return rows[: spec.k]
+        with self._lock:
+            if total is None and cached is not None:
+                total = cached[2]  # the total does not depend on k
+            # a refresh replaces its own entry, evicting no other
+            self._hit_cache.pop(key, None)
+            if len(self._hit_cache) >= self.HIT_CACHE_MAX:
+                self._hit_cache.pop(next(iter(self._hit_cache)))
+            self._hit_cache[key] = (rows, safe_rank, total)
+        return rows[: spec.k], total
 
     def _agg_cached(self, key: tuple, compute, spec: QuerySpec):
         """Aggregation result memo (facet/timeline/network): bounded
@@ -397,17 +421,20 @@ class NewsleakAPI:
         invalidation signal — the index-state key would not notice a
         transcripts-source change, serving stale results."""
         if self.index_dir is None or not spec.scored():
-            self.agg_runs += 1
+            with self._lock:
+                self.agg_runs += 1
             return compute()
         full_key = (key, index_state_key(self.index_dir))
-        hit = self._agg_cache.get(full_key)
-        if hit is not None:
-            return hit
-        self.agg_runs += 1
+        with self._lock:
+            hit = self._agg_cache.get(full_key)
+            if hit is not None:
+                return hit
+            self.agg_runs += 1
         out = compute()
-        if len(self._agg_cache) >= self.AGG_CACHE_MAX:
-            self._agg_cache.pop(next(iter(self._agg_cache)))
-        self._agg_cache[full_key] = out
+        with self._lock:
+            if len(self._agg_cache) >= self.AGG_CACHE_MAX:
+                self._agg_cache.pop(next(iter(self._agg_cache)))
+            self._agg_cache[full_key] = out
         return out
 
     def _matching(self, spec: QuerySpec) -> DataFrame:

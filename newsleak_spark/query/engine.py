@@ -274,15 +274,25 @@ def _make_shard_scorer(
     avgdl: float,
     k: int,
     truncate: bool = True,
+    count: bool = False,
     safe_bounds: bool = False,
     neg_terms: tuple[str, ...] = (),
     phrase_plans: tuple | None = None,
 ):
     """Returns the applyInPandas function scoring one shard's blocks
-    into rows (shard, doc_id, score). The shard id lets the serving
-    layer cache the PER-SHARD top-k heaps and compute how deep the
-    merged ranking is exact (deep pagination without growing-k
+    into rows (shard, doc_id, score, hits). The shard id lets the
+    serving layer cache the PER-SHARD top-k heaps and compute how deep
+    the merged ranking is exact (deep pagination without growing-k
     re-runs).
+
+    ``hits`` (the same on every row of a shard) is the shard's match
+    count after every filter, negation and phrase check, taken BEFORE
+    the top-k cut — the total rides the ranked job. The required path
+    (AND / phrase / must_not) holds the count anyway. The scored-union
+    path counts every chunk's surviving docs, which is exact only when
+    no chunk is skipped: ``count`` turns block-max skipping off (the
+    running heap truncation stays on); without it a union shard's
+    ``hits`` is a lower bound. A shard with no match emits no rows.
 
     With metadata/date filters the function is used through cogroup:
     the second frame carries the shard's FILTER-SURVIVING doc_ids, so
@@ -322,7 +332,10 @@ def _make_shard_scorer(
 
     def _score(pdf: pd.DataFrame, allowed_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
         empty = pd.DataFrame(
-            {"shard": np.empty(0, np.int32), "doc_id": np.empty(0, np.int64), "score": np.empty(0)}
+            {
+                "shard": np.empty(0, np.int32), "doc_id": np.empty(0, np.int64),
+                "score": np.empty(0), "hits": np.empty(0, np.int64),
+            }
         )
         allowed = None
         if allowed_pdf is not None:
@@ -370,7 +383,7 @@ def _make_shard_scorer(
                     score += _bm25(tfv, dlv, m.idf, avgdl)
                 elif m.term in by_term:
                     score += _optional_contrib(by_term[m.term], cand)
-            out_docs, out_scores = cand, score
+            out_docs, out_scores, hits = cand, score, cand.size
         else:
             # scored union (OR / boost-only): block-max WAND
             # must_not inside the union loop (NOT post-hoc: an excluded
@@ -381,7 +394,7 @@ def _make_shard_scorer(
             neg_arrays = [
                 _decode_term_blocks(g, False)[0] for g in neg.values()
             ] if neg else []
-            out_docs, out_scores = _bmw_union(
+            out_docs, out_scores, hits = _bmw_union(
                 by_term, [m for m in metas if m.term in by_term], allowed, neg_arrays
             )
             if out_docs.size == 0:
@@ -395,7 +408,10 @@ def _make_shard_scorer(
             order = np.lexsort((out_docs, -np.round(out_scores * 1e6)))[:k]
             out_docs, out_scores = out_docs[order], out_scores[order]
         shard = np.int32(pdf["shard"].iloc[0])
-        return pd.DataFrame({"shard": shard, "doc_id": out_docs.astype(np.int64), "score": out_scores})
+        return pd.DataFrame(
+            {"shard": shard, "doc_id": out_docs.astype(np.int64), "score": out_scores,
+             "hits": np.int64(hits)}
+        )
 
     def _member_mask(docs, allowed):
         idx = np.searchsorted(allowed, docs)
@@ -575,9 +591,13 @@ def _make_shard_scorer(
           were demanded anyway (low skip rate), the term switches to
           one vectorized full decode, so a dense union costs the same
           as eager decoding.
+
+        Also returns the number of docs that survived the filters
+        across the scored chunks (exact when ``count`` disables
+        skipping).
         """
         if not present:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64), 0
         term_rows = {m.term: by_term[m.term].sort_values("doc_first") for m in present}
         lazy = {}
         blockmeta = {}
@@ -631,6 +651,7 @@ def _make_shard_scorer(
         group = max(1, n_iv // 256)
         rounds = 0
         skips = 0
+        hits = 0
         for ci in range(0, n_iv, group):
             lo = int(bounds[ci])
             hi = int(bounds[min(ci + group, n_iv)]) - 1
@@ -655,9 +676,11 @@ def _make_shard_scorer(
                     # eager path's per-chunk cost exactly
                     active.append((m, sel))
             # skip only when every chunk score must round BELOW θ_e6 —
-            # an e6-tied score could still win the doc_id tie-break
+            # an e6-tied score could still win the doc_id tie-break;
+            # a counting shard must see every chunk's matches
             if not active or (
-                truncate and top_docs.size >= k and ub * 1e6 < theta_e6 - 0.5
+                truncate and not count and top_docs.size >= k
+                and ub * 1e6 < theta_e6 - 0.5
             ):
                 skips += 1
                 continue  # BMW skip — the skipped blocks were never decoded
@@ -724,13 +747,14 @@ def _make_shard_scorer(
                         break
             if uniq.size == 0:
                 continue
+            hits += uniq.size
             top_docs = np.concatenate([top_docs, uniq])
             top_scores = np.concatenate([top_scores, sc])
             if truncate and top_docs.size > k:
                 order = np.lexsort((top_docs, -np.round(top_scores * 1e6)))[:k]
                 top_docs, top_scores = top_docs[order], top_scores[order]
                 theta_e6 = float(np.round(top_scores * 1e6).min())
-        return top_docs, top_scores
+        return top_docs, top_scores, hits
 
     return score_shard
 
@@ -795,20 +819,21 @@ def _reader(
     return reader or _cached_reader(spark, index_dir)
 
 
-CANDIDATE_SCHEMA = "shard int, doc_id long, score_e6 long"
+CANDIDATE_SCHEMA = "shard int, doc_id long, score_e6 long, hits long"
 
 
 def _candidates(
-    spark: SparkSession, rd: IndexReader, spec: QuerySpec, truncate: bool
+    spark: SparkSession, rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool = False
 ) -> DataFrame:
     """The one candidate pipeline behind every engine result of a
     scored spec: dictionary lookup → segment scan (bucket-pruned) →
     shard-local scoring applyInPandas (cogrouped with the filtered
     docmeta when F2/F5 filters are present). ``truncate`` keeps the
-    per-shard top-k heap on (ranked search) or off (full doc-set).
-    Returns (shard, doc_id, score_e6); empty when the spec cannot
-    match (a required term absent from the collection → AND has no
-    hits)."""
+    per-shard top-k heap on (ranked search) or off (full doc-set);
+    ``count`` makes every shard's ``hits`` exact (see
+    _make_shard_scorer). Returns (shard, doc_id, score_e6, hits);
+    empty when the spec cannot match (a required term absent from the
+    collection → AND has no hits)."""
     if spec.phrases and not rd.man.config.get("with_positions", True):
         raise ValueError(
             f"index at {rd.index_dir} was built with with_positions=False; "
@@ -871,10 +896,10 @@ def _candidates(
     fetch_terms = all_terms + [t for t in neg if t not in all_terms] + bigram_fetch
     seg = rd.segments_for(fetch_terms, with_positions=bool(spec.phrases))
     scorer = _make_shard_scorer(
-        metas, spec.phrases, rd.avgdl, spec.k, truncate=truncate,
+        metas, spec.phrases, rd.avgdl, spec.k, truncate=truncate, count=count,
         safe_bounds=rd.multi, neg_terms=neg, phrase_plans=phrase_plans,
     )
-    schema = "shard int, doc_id long, score double"
+    schema = "shard int, doc_id long, score double, hits long"
     if has_filters:
         # shard-local filtering: cogroup the shard's blocks with its
         # filter-surviving doc_ids (docmeta is shard-partitioned, so
@@ -889,7 +914,7 @@ def _candidates(
     else:
         scored = seg.groupBy("shard").applyInPandas(scorer, schema)
     return scored.select(
-        "shard", "doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6")
+        "shard", "doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6"), "hits"
     )
 
 
@@ -903,7 +928,7 @@ def search(
     rd = _reader(spark, index_dir, reader)
     heaps = search_heaps(spark, index_dir, spec, rd)
     if heaps is not None:
-        out = heaps.drop("shard")
+        out = heaps.drop("shard", "hits")
     else:
         out = matching_doc_ids(spark, index_dir, spec, rd).select(
             "doc_id", F.lit(1_000_000).cast("long").alias("score_e6")
@@ -912,11 +937,22 @@ def search(
 
 
 def search_heaps(
-    spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
+    spark: SparkSession,
+    index_dir: str,
+    spec: QuerySpec,
+    reader: IndexReader | None = None,
+    count: bool = False,
 ) -> DataFrame | None:
     """Per-shard top-k heaps for deep pagination: (shard, doc_id,
-    score_e6), each shard's top-spec.k by the global sort key. The
-    SERVING layer merges these driver-side and can answer any page
+    score_e6, hits), each shard's top-spec.k by the global sort key,
+    each row carrying its shard's match count. With ``count`` that
+    count is exact on every path, so the sum over shards of one row's
+    ``hits`` each is the query's total (getTotalHits) from the same
+    scan; without it a scored-union shard may skip, and undercount,
+    chunks that cannot reach its top-k. A shard with no match returns
+    no rows and counts 0.
+
+    The SERVING layer merges these driver-side and can answer any page
     whose rank is provably exact from the heaps alone — the
     distributed analog of the reference's SearchHitIterator cursor
     (SearchHitIterator.scala:43-58): one scan, then O(pages) slicing,
@@ -930,7 +966,7 @@ def search_heaps(
     not-only) specs — those page through their doc set."""
     if not spec.scored():
         return None
-    return _candidates(spark, _reader(spark, index_dir, reader), spec, truncate=True)
+    return _candidates(spark, _reader(spark, index_dir, reader), spec, truncate=True, count=count)
 
 
 def matching_doc_ids(

@@ -80,10 +80,14 @@ def test_count_hits_matches_matching_docs(spark, api, transcripts, index_dir):
     """Every engine entry point agrees with the brute oracle on one
     table of spec shapes: the doc set (matching_doc_ids vs
     matching_docs), its size (count_hits), the ranking (search vs
-    bm25_topk) and the heaps' presence (search_heaps is None exactly
-    for unscored specs; an empty 3-column frame when a required term
-    is absent). Includes the ES bool edge case: no musts → at least
-    one should (boost) term must match."""
+    bm25_topk), the heaps' presence (search_heaps is None exactly
+    for unscored specs; an empty 4-column frame when a required term
+    is absent) and the total that rides the ranked job (the sum of
+    each shard's ``hits`` from search_heaps(count=True) == the doc
+    set's size, through every scorer path: AND, phrase, cogrouped
+    filter, the scored union with skipping off, must_not). Includes
+    the ES bool edge case: no musts → at least one should (boost) term
+    must match."""
     from newsleak_spark.query.engine import (
         count_hits,
         matching_doc_ids,
@@ -110,8 +114,12 @@ def test_count_hits_matches_matching_docs(spark, api, transcripts, index_dir):
         heaps = search_heaps(spark, index_dir, spec)
         assert (heaps is None) == (not spec.scored()), spec
         if "zzabsentzz" in spec.terms:
-            assert heaps.columns == ["shard", "doc_id", "score_e6"]
+            assert heaps.columns == ["shard", "doc_id", "score_e6", "hits"]
             assert heaps.count() == 0
+        if heaps is not None:
+            counted = search_heaps(spark, index_dir, spec, count=True).collect()
+            per_shard = {r["shard"]: r["hits"] for r in counted}
+            assert sum(per_shard.values()) == len(want), spec
 
 
 def test_induce_subgraph_matches_operator_layer(api, transcripts):
@@ -230,23 +238,29 @@ def test_merge_heaps_exactness_bound():
     exhaustive."""
     from newsleak_spark.api import _merge_heaps
 
-    mk = lambda s, d, sc: {"shard": s, "doc_id": d, "score_e6": sc}
+    # every row of a shard carries that shard's pre-truncation hits
+    mk = lambda s, d, sc, h: {"shard": s, "doc_id": d, "score_e6": sc, "hits": h}
     # k=2: shard 0 truncated (2 rows, weakest score 80), shard 1
     # exhausted (1 row). Rows scoring >= 80 are exact; doc 4 (score 70)
     # could be displaced by shard 0's unreturned docs.
-    rows = [mk(0, 1, 100), mk(0, 2, 80), mk(1, 3, 90), mk(1, 4, 70)]
-    merged, safe = _merge_heaps(rows, 2)
+    rows = [mk(0, 1, 100, 7), mk(0, 2, 80, 7), mk(1, 3, 90, 2), mk(1, 4, 70, 2)]
+    merged, safe, total = _merge_heaps(rows, 2)
     assert [r["doc_id"] for r in merged] == [1, 3, 2, 4]
     # both shards truncated; the MOST RESTRICTIVE boundary is shard 0's
     # (score 80): an unreturned shard-0 doc could score 79 and displace
     # doc 4 (score 70), so only the first 3 positions are exact
     assert safe == 3
-    # only shard 0 truncated: boundary (80, 2) -> exact through doc 2
-    merged, safe = _merge_heaps([mk(0, 1, 100), mk(0, 2, 80), mk(1, 3, 90)], 2)
-    assert safe == 3
+    # the total counts each shard once, not once per returned row
+    assert total == 9
+    # only shard 0 truncated: boundary (80, 2) -> exact through doc 2;
+    # shard 2 matched nothing, returned no rows and counts 0
+    merged, safe, total = _merge_heaps([mk(0, 1, 100, 5), mk(0, 2, 80, 5), mk(1, 3, 90, 1)], 2)
+    assert safe == 3 and total == 6
     # no shard truncated: exhaustive
-    _merged, safe = _merge_heaps([mk(0, 1, 100), mk(1, 3, 90)], 5)
-    assert safe == float("inf")
+    _merged, safe, total = _merge_heaps([mk(0, 1, 100, 1), mk(1, 3, 90, 1)], 5)
+    assert safe == float("inf") and total == 2
+    # no shard matched at all
+    assert _merge_heaps([], 5) == ([], float("inf"), 0)
 
 
 def test_indexed_pagination_vs_full_rank(spark, transcripts, index_dir):
@@ -331,3 +345,77 @@ def test_generation_counter_invalidates_without_mtime(tmp_path):
     os.utime(os.path.join(d, "manifest.json"), ns=(st.st_atime_ns, st.st_mtime_ns))
     k2 = index_state_key(d)
     assert k1 != k2
+
+
+def test_total_rides_the_ranked_job(spark, transcripts, index_dir):
+    """A page with its total costs one ranked job (the scorer counts
+    each shard's matches before its top-k cut), the total is cached
+    with the heaps, and it equals the brute matching-doc count."""
+    want = matching_docs(transcripts, QuerySpec(terms=("table",))).count()
+    api = NewsleakAPI(spark, transcripts, index_dir)
+    r1 = api.get_docs("table", page=1, page_size=5, highlight=False)
+    assert api.topk_runs == 1 and r1["hits"] == want
+    # page 2 is inside the heaps' exactness bound: no new job, total cached
+    r2 = api.get_docs("table", page=2, page_size=5, highlight=False)
+    assert api.topk_runs == 1 and r2["hits"] == want
+
+    # rows cached without a total: asking for the total costs one fused
+    # job, after which page 2 with its total is a cache hit
+    api = NewsleakAPI(spark, transcripts, index_dir)
+    api.get_docs("table", page=1, page_size=5, with_total=False, highlight=False)
+    assert api.topk_runs == 1
+    assert api.get_docs("table", page=1, page_size=5, highlight=False)["hits"] == want
+    assert api.topk_runs == 2
+    assert api.get_docs("table", page=2, page_size=5, highlight=False)["hits"] == want
+    assert api.topk_runs == 2
+
+
+def test_drift_is_reported(spark, transcripts, index_dir):
+    """A ranked id missing from the table (stale index / filtered
+    table) is skipped from the page and counted in ``drift``."""
+    full = NewsleakAPI(spark, transcripts, index_dir).get_docs(
+        "table", page_size=5, with_total=False, highlight=False
+    )
+    assert full["drift"] == 0
+    top = full["docs"][0]["id"]
+    api = NewsleakAPI(spark, transcripts.filter(F.col("doc_id") != top), index_dir)
+    out = api.get_docs("table", page_size=5, with_total=False, highlight=False)
+    assert out["drift"] == 1
+    assert [d["id"] for d in out["docs"]] == [d["id"] for d in full["docs"][1:]]
+
+
+def test_concurrent_requests_share_caches_safely(spark, transcripts, index_dir):
+    """More threads than cores on one handle, with more distinct
+    queries than the hit cache holds: no request fails, the cache never
+    exceeds its maximum, and no ranked-run count is lost (every request
+    misses)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    class Recording(dict):
+        peak = 0
+
+        def __setitem__(self, key, value):
+            super().__setitem__(key, value)
+            Recording.peak = max(Recording.peak, len(self))
+
+    api = NewsleakAPI(spark, transcripts, index_dir)
+    api.HIT_CACHE_MAX = 2
+    api._hit_cache = Recording()
+    words = ["table", "merge", "window", "spark", "fast", "join", "row", "value"]
+    queries = words + [f"{a} {b}" for a, b in zip(words, words[1:] + words[:1])]
+
+    def page(q):
+        return api.get_docs(q, page_size=3, with_total=False, highlight=False)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            outs = list(pool.map(page, queries, timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(o["page"] == 1 and "docs" in o for o in outs)
+    assert Recording.peak <= api.HIT_CACHE_MAX
+    assert len(api._hit_cache) == api.HIT_CACHE_MAX
+    assert api.topk_runs == len(queries)

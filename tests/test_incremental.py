@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from newsleak_spark.indexing import IndexConfig, append_index, build_index, list_deltas
 from newsleak_spark.query import QuerySpec
-from newsleak_spark.query.engine import IndexReader, search
+from newsleak_spark.query.engine import IndexReader, count_hits, search, search_heaps
 
 CFG = IndexConfig(n_shards=4, n_term_buckets=4, block_size=16, hot_df_ratio=0.3, n_salts=4)
 
@@ -54,6 +54,16 @@ def test_delta_results_rank_identical(spark, dirs, i):
     full = [(r["doc_id"], r["score_e6"]) for r in search(spark, full_dir, spec).collect()]
     inc = [(r["doc_id"], r["score_e6"]) for r in search(spark, inc_dir, spec).collect()]
     assert inc == full
+
+
+@pytest.mark.parametrize("i", range(len(SPECS)))
+def test_delta_totals_equal_full(spark, dirs, i):
+    """The total that rides the ranked job sums each shard's hits
+    across base and delta: it equals the full build's doc-set count."""
+    full_dir, inc_dir = dirs
+    heaps = search_heaps(spark, inc_dir, SPECS[i], count=True).collect()
+    total = sum({r["shard"]: r["hits"] for r in heaps}.values())
+    assert total == count_hits(spark, full_dir, SPECS[i])
 
 
 def test_append_registration_idempotent(spark, dirs):

@@ -1,8 +1,9 @@
 """spark-submit entry point for the index build (north_rule packaging).
 
-Cluster usage (ships the package to executors via --py-files):
+Cluster usage (ships the package to executors via --py-files), from
+the repo root:
 
-    cd /root/repo && zip -r /tmp/newsleak_spark.zip newsleak_spark
+    zip -r /tmp/newsleak_spark.zip newsleak_spark
     spark-submit --py-files /tmp/newsleak_spark.zip \
         tools/submit_build.py --index-dir /data/idx \
         --input /data/transcripts.parquet --shuffle-partitions 4096
