@@ -204,6 +204,10 @@ class NewsleakAPI:
         scan); the brute fallback pays one matching_docs scan.
         ``drift``: ranked ids missing from the table (stale index or
         filtered table), skipped from the page and reported here."""
+        if page < 1 or page_size < 1:
+            return _bad_request(
+                ValueError(f"page={page}, page_size={page_size}: both must be >= 1")
+            )
         try:
             spec = compile_spec(query, time_range, roles, tools, k=page * page_size, mode=self.mode)
         except ValueError as e:

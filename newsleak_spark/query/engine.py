@@ -11,6 +11,11 @@ Execution shape (SURVEY §3.1 "Rebuild shape"):
   with the filtered docmeta) → per-shard top-k heaps → global
   TakeOrderedAndProject merge.
 
+Block-max WAND decodes every union term once and bounds each doc
+chunk by one rule: a term adds to the chunk's bound only when it has
+a posting inside the chunk, and it adds the largest block max among
+its blocks overlapping the chunk.
+
 Correctness contract: rank-identical (doc_id, score_e6) vs
 query/brute.py (and hence vs the DuckDB oracle) — enforced by
 tests/test_engine_parity.py. Tie-break (score desc, doc_id asc) pinned
@@ -34,18 +39,6 @@ from newsleak_spark.query.spec import QuerySpec
 
 K1 = 1.2
 B = 0.75
-
-# BMW union decode policy (see _bmw_union): terms with at most this
-# many blocks pre-decode in one vectorized pass and use posting-level
-# chunk bounds; bigger terms stay byte-encoded until a chunk survives
-# θ, switching to a full decode once 1/BMW_LAZY_SWITCH_DEN of their
-# blocks were demanded (low observed skip rate).
-BMW_SMALL_TERM_BLOCKS = 64
-BMW_LAZY_SWITCH_DEN = 8
-# If NO chunk was skipped in the first this-many scored rounds, the
-# union is dense (every chunk beats θ) and laziness can never pay —
-# hot terms then full-decode on first demand instead of per-chunk.
-BMW_LAZY_PROBE_ROUNDS = 8
 
 
 @dataclass
@@ -232,28 +225,6 @@ def _decode_term_blocks(rows: pd.DataFrame, want_positions: bool):
     else:
         pos = None
     return docs, tfs, dls, pos
-
-
-def _decode_blocks_lazy(state: dict, idxs: list[int]) -> None:
-    """Decode the not-yet-cached blocks ``idxs`` of one term's lazy
-    state in ONE varint pass per column (their byte slices are self-
-    delimiting, so they batch-concatenate like _decode_term_blocks) and
-    cache each block's (docs, tfs, dls). Doc deltas reset to absolute
-    at every block start."""
-    ns = state["ns"][idxs]
-    starts = np.concatenate(([0], np.cumsum(ns)))
-    deltas = varint_decode(b"".join(state["docs_b"][i] for i in idxs)).astype(np.int64)
-    c = np.cumsum(deltas)
-    heads = starts[:-1][ns > 0]
-    base = np.zeros(ns.size, dtype=np.int64)
-    base[ns > 0] = c[heads] - deltas[heads]
-    docs = c - np.repeat(base, ns)
-    tfs = varint_decode(b"".join(state["tfs_b"][i] for i in idxs)).astype(np.int64)
-    dls = varint_decode(b"".join(state["dls_b"][i] for i in idxs)).astype(np.int64)
-    cache = state["cache"]
-    for j, i in enumerate(idxs):
-        s, e = starts[j], starts[j + 1]
-        cache[i] = (docs[s:e], tfs[s:e], dls[s:e])
 
 
 def _prune_blocks_by_range(rows: pd.DataFrame, cand: np.ndarray) -> pd.DataFrame:
@@ -572,25 +543,17 @@ def _make_shard_scorer(
     def _bmw_union(by_term, present, allowed=None, neg_arrays=()):
         """Block-max WAND over the union of posting lists.
 
-        Doc space is chunked at the union of block boundaries; a chunk
-        is scored only when its upper bound Σ_t ub_t can beat the
-        current k-th best (θ). Two term classes:
-
-        * SMALL terms (≤ BMW_SMALL_TERM_BLOCKS blocks): decoded up
-          front — one cheap vectorized pass. Their chunk bound uses
-          POSTING-level presence (two searchsorted calls): a rare
-          term's single block spans the whole doc space, so a
-          block-overlap test would fold its (large) idf into EVERY
-          chunk's bound and no chunk could ever skip.
-        * HOT terms (> BMW_SMALL_TERM_BLOCKS blocks): block-max
-          metadata drives the bound, and the posting bytes stay
-          ENCODED until a chunk survives the θ test — block-max
-          skipping then saves the varint decode too, which at scale is
-          the dominant cost of a hot term. Demand-decoded blocks are
-          cached; once ≥ 1/BMW_LAZY_SWITCH_DEN of a hot term's blocks
-          were demanded anyway (low skip rate), the term switches to
-          one vectorized full decode, so a dense union costs the same
-          as eager decoding.
+        Every union term decodes once, up front (_decode_term_blocks:
+        one vectorized varint pass per column, doc-sorted). Doc space
+        is chunked at the union of block boundaries; a chunk is scored
+        only when its upper bound Σ_t ub_t can beat the current k-th
+        best (θ). One bound rule for every term: a term adds to chunk
+        [lo, hi] only when it has a posting inside it (two searchsorted
+        calls on its decoded docs), and what it adds is the largest
+        block max among its blocks overlapping the chunk. A rare
+        term's single shard-wide block so bounds only the chunks that
+        hold its postings, and a hot term adds nothing to a chunk that
+        falls in a gap between its postings.
 
         Also returns the number of docs that survived the filters
         across the scored chunks (exact when ``count`` disables
@@ -598,12 +561,9 @@ def _make_shard_scorer(
         """
         if not present:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64), 0
-        term_rows = {m.term: by_term[m.term].sort_values("doc_first") for m in present}
-        lazy = {}
-        blockmeta = {}
-        small_ub = {}
+        terms = []
         for m in present:
-            r = term_rows[m.term]
+            r = by_term[m.term]
             if safe_bounds:
                 # stats-independent bound: stored max_score was computed
                 # under the part's OWN snapshot stats, invalid once
@@ -614,31 +574,11 @@ def _make_shard_scorer(
                 bnds = m.idf * mt * (K1 + 1.0) / (mt + K1 * (1.0 - B))
             else:
                 bnds = r["max_score"].to_numpy(dtype=np.float64)
-            blockmeta[m.term] = (
-                r["doc_first"].to_numpy(dtype=np.int64),
-                r["doc_last"].to_numpy(dtype=np.int64),
-                bnds,
-            )
-            if len(r) <= BMW_SMALL_TERM_BLOCKS:
-                lazy[m.term] = {"full": _decode_term_blocks(r, False)[:3]}
-                small_ub[m.term] = float(bnds.max()) if bnds.size else 0.0
-            else:
-                lazy[m.term] = {
-                    "rows": r,
-                    "docs_b": r["docs"].tolist(),
-                    "tfs_b": r["tfs"].tolist(),
-                    "dls_b": r["dls"].tolist(),
-                    "ns": r["n"].to_numpy(dtype=np.int64),
-                    "dec": np.zeros(len(r), dtype=bool),
-                    "n_dec": 0,
-                    "cache": {},
-                    "full": None,
-                }
+            firsts = r["doc_first"].to_numpy(dtype=np.int64)
+            lasts = r["doc_last"].to_numpy(dtype=np.int64)
+            terms.append((m, firsts, lasts, bnds, *_decode_term_blocks(r, False)[:3]))
         bounds = np.unique(
-            np.concatenate(
-                [bm[0] for bm in blockmeta.values()]
-                + [bm[1] + 1 for bm in blockmeta.values()]
-            )
+            np.concatenate([t[1] for t in terms] + [t[2] + 1 for t in terms])
         )
         top_docs = np.empty(0, dtype=np.int64)
         top_scores = np.empty(0, dtype=np.float64)
@@ -649,32 +589,20 @@ def _make_shard_scorer(
         # scoring inside a surviving group is exact either way
         n_iv = bounds.size - 1
         group = max(1, n_iv // 256)
-        rounds = 0
-        skips = 0
         hits = 0
         for ci in range(0, n_iv, group):
             lo = int(bounds[ci])
             hi = int(bounds[min(ci + group, n_iv)]) - 1
-            # upper bound for this chunk: posting-level presence for
-            # small (pre-decoded) terms, per-block metadata for hot ones
             ub = 0.0
             active = []
-            for m in present:
-                if m.term in small_ub:
-                    docs_s = lazy[m.term]["full"][0]
-                    inlo = np.searchsorted(docs_s, lo)
-                    if inlo < docs_s.size and docs_s[inlo] <= hi:
-                        ub += small_ub[m.term]
-                        active.append((m, None))
-                    continue
-                firsts, lasts, bnds = blockmeta[m.term]
-                sel = (firsts <= hi) & (lasts >= lo)
-                if sel.any():
-                    ub += float(bnds[sel].max())
-                    # sel stays a mask: only the pre-switch lazy branch
-                    # pays the nonzero() — post-switch rounds match the
-                    # eager path's per-chunk cost exactly
-                    active.append((m, sel))
+            for m, firsts, lasts, bnds, tdocs, ttfs, tdls in terms:
+                inlo = np.searchsorted(tdocs, lo)
+                inhi = np.searchsorted(tdocs, hi, side="right")
+                if inhi > inlo:
+                    # a posting in [lo, hi] lies in some block overlapping
+                    # the chunk, so the selection is never empty
+                    ub += float(bnds[(firsts <= hi) & (lasts >= lo)].max())
+                    active.append((m, tdocs[inlo:inhi], ttfs[inlo:inhi], tdls[inlo:inhi]))
             # skip only when every chunk score must round BELOW θ_e6 —
             # an e6-tied score could still win the doc_id tie-break;
             # a counting shard must see every chunk's matches
@@ -682,55 +610,12 @@ def _make_shard_scorer(
                 truncate and not count and top_docs.size >= k
                 and ub * 1e6 < theta_e6 - 0.5
             ):
-                skips += 1
-                continue  # BMW skip — the skipped blocks were never decoded
-            rounds += 1
-            dense_union = skips == 0 and rounds > BMW_LAZY_PROBE_ROUNDS
-            docs_all, contrib_all = [], []
-            for m, sel_m in active:
-                st = lazy[m.term]
-                bidx = None
-                if st["full"] is None:
-                    bidx = np.nonzero(sel_m)[0]
-                    missing = bidx[~st["dec"][bidx]]
-                    if missing.size:
-                        st["n_dec"] += int(missing.size)
-                        if dense_union or (
-                            BMW_LAZY_SWITCH_DEN * st["n_dec"] >= st["ns"].size
-                        ):
-                            # low skip rate for this term: finish with
-                            # one vectorized full decode (globally
-                            # doc-sorted), drop the per-block cache
-                            st["full"] = _decode_term_blocks(st["rows"], False)[:3]
-                            st["cache"].clear()
-                        else:
-                            _decode_blocks_lazy(st, missing)
-                            st["dec"][missing] = True
-                if st["full"] is not None:
-                    tdocs, ttfs, tdls = st["full"]
-                    inlo = np.searchsorted(tdocs, lo)
-                    inhi = np.searchsorted(tdocs, hi, side="right")
-                    if inhi > inlo:
-                        docs_all.append(tdocs[inlo:inhi])
-                        contrib_all.append(
-                            _bm25(ttfs[inlo:inhi], tdls[inlo:inhi], m.idf, avgdl)
-                        )
-                    continue
-                cache = st["cache"]
-                parts = [cache[i] for i in bidx]
-                tdocs = parts[0][0] if len(parts) == 1 else np.concatenate([p[0] for p in parts])
-                # salted runs interleave, so blocks of one term can
-                # overlap in doc range: mask, don't searchsorted
-                mask = (tdocs >= lo) & (tdocs <= hi)
-                if mask.any():
-                    ttfs = (parts[0][1] if len(parts) == 1 else np.concatenate([p[1] for p in parts]))[mask]
-                    tdls = (parts[0][2] if len(parts) == 1 else np.concatenate([p[2] for p in parts]))[mask]
-                    docs_all.append(tdocs[mask])
-                    contrib_all.append(_bm25(ttfs, tdls, m.idf, avgdl))
-            if not docs_all:
-                continue
-            docs_cat = np.concatenate(docs_all)
-            contrib_cat = np.concatenate(contrib_all)
+                continue  # BMW skip
+            # fixed term order (query order) for float determinism
+            docs_cat = np.concatenate([a[1] for a in active])
+            contrib_cat = np.concatenate(
+                [_bm25(tfv, dlv, m.idf, avgdl) for m, _docs, tfv, dlv in active]
+            )
             uniq, inv = np.unique(docs_cat, return_inverse=True)
             sc = np.zeros(uniq.size, dtype=np.float64)
             np.add.at(sc, inv, contrib_cat)
@@ -797,14 +682,17 @@ def index_state_key(index_dir: str) -> tuple:
 
 
 def _cached_reader(spark: SparkSession, index_dir: str) -> IndexReader:
-    """Reader memo per (index_dir, manifest mtime) — repeated queries
-    skip manifest/config re-reads; a rebuild (new mtime) invalidates."""
-    key = (index_dir, *index_state_key(index_dir))
-    rd = _READER_CACHE.get(key)
-    if rd is None or rd.spark is not spark:
-        rd = IndexReader(spark, index_dir)
-        _READER_CACHE.clear()
-        _READER_CACHE[key] = rd
+    """Reader memo, one entry per index_dir — repeated queries skip
+    manifest/config re-reads and dataset discovery, and readers of
+    different indexes never evict each other. An entry is replaced only
+    when its dir's index_state_key changes (the index mutated) or the
+    session differs."""
+    state = index_state_key(index_dir)
+    hit = _READER_CACHE.get(index_dir)
+    if hit is not None and hit[0] == state and hit[1].spark is spark:
+        return hit[1]
+    rd = IndexReader(spark, index_dir)
+    _READER_CACHE[index_dir] = (state, rd)
     return rd
 
 

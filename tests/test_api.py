@@ -419,3 +419,34 @@ def test_concurrent_requests_share_caches_safely(spark, transcripts, index_dir):
     assert Recording.peak <= api.HIT_CACHE_MAX
     assert len(api._hit_cache) == api.HIT_CACHE_MAX
     assert api.topk_runs == len(queries)
+
+
+def test_get_docs_rejects_bad_page(api, api_noindex):
+    """A page or page size below 1 is a 400 on both handles, never a
+    negative top-k or a slice from the end of the ranked rows."""
+    for handle in (api, api_noindex):
+        runs = handle.topk_runs
+        for kw in ({"page": 0}, {"page": -1}, {"page_size": 0}, {"page_size": -5}):
+            out = handle.get_docs("table", highlight=False, **kw)
+            assert out["status"] == 400 and "must be >= 1" in out["error"], kw
+        assert handle.topk_runs == runs
+
+
+def test_reader_cache_keeps_one_reader_per_index(spark, index_dir, tmp_path):
+    """Alternating between two indexes reuses each one's reader; only a
+    mutation of an index replaces its own entry."""
+    from newsleak_spark.indexing.manifest import Manifest
+    from newsleak_spark.query.engine import _cached_reader
+
+    other = str(tmp_path / "copy")
+    shutil.copytree(index_dir, other)
+    a = _cached_reader(spark, index_dir)
+    b = _cached_reader(spark, other)
+    assert a is not b
+    assert _cached_reader(spark, index_dir) is a
+    assert _cached_reader(spark, other) is b
+    Manifest(other).set_stats()  # bumps the copy's generation
+    b2 = _cached_reader(spark, other)
+    assert b2 is not b
+    assert _cached_reader(spark, index_dir) is a
+    assert _cached_reader(spark, other) is b2

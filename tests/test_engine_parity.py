@@ -147,6 +147,56 @@ def test_xxh64_matches_spark(spark):
         assert xxh64_signed(r["term"]) == r["h"], r["term"]
 
 
+@pytest.mark.parametrize("safe_bounds", [False, True], ids=["stored", "safe"])
+def test_union_skipping_skips(spark, index_dir, monkeypatch, safe_bounds):
+    """Block-max skipping in the scored union still skips: run driver-
+    side over one rare and one common term with a small k, the
+    truncated scorer scores fewer postings than the untruncated one and
+    merges to the same top-k under (score_e6 desc, doc_id asc)."""
+    import numpy as np
+
+    from newsleak_spark.query import engine
+
+    rd = IndexReader(spark, index_dir)
+    terms, k = ["dup", "query"], 3
+    dict_rows = rd.dictionary_rows(terms)
+    assert dict_rows["dup"][0] * 10 < dict_rows["query"][0]  # rare vs common
+    metas = [
+        engine.TermMeta(
+            t, float(dict_rows[t][0]),
+            float(np.log(1.0 + (rd.n_docs - dict_rows[t][0] + 0.5) / (dict_rows[t][0] + 0.5))),
+            False,
+        )
+        for t in terms
+    ]
+    seg = rd.segments_for(terms, with_positions=False).toPandas()
+    shards = [g for _, g in seg.groupby("shard")]
+    scored = [0]
+    bm25 = engine._bm25
+
+    def counting_bm25(tf, dl, idf, avgdl):
+        scored[0] += tf.size
+        return bm25(tf, dl, idf, avgdl)
+
+    monkeypatch.setattr(engine, "_bm25", counting_bm25)
+
+    def top_k(truncate):
+        scored[0] = 0
+        scorer = engine._make_shard_scorer(
+            metas, (), rd.avgdl, k, truncate=truncate, safe_bounds=safe_bounds
+        )
+        rows = []
+        for g in shards:
+            out = scorer(g.copy())
+            rows += [(-int(np.round(s * 1e6)), int(d)) for d, s in zip(out["doc_id"], out["score"])]
+        return sorted(rows)[:k], scored[0]
+
+    got, n_truncated = top_k(True)
+    want, n_full = top_k(False)
+    assert got == want
+    assert n_truncated < n_full
+
+
 def test_english_mode_engine_vs_brute(spark, transcripts, tmp_path):
     """Full-chain english analyzer (normalize -> tokenize -> cleanup ->
     stopwords -> Porter stem) end-to-end: engine built with

@@ -3,12 +3,12 @@
 Isolates the applyInPandas scorer function (decode + chunk iteration +
 scoring) from Spark job overhead: collects the union terms' segment
 blocks to the driver once, then times the raw scorer callable per
-shard. This is the measurement for the eager-vs-lazy posting-block
-decode comparison recorded in BASELINE.md — at scale the skipped
-chunks' decode cost is the dominant saving, invisible inside a
-~1s Spark job at sf0.1.
+shard. Two boost-only union shapes: ``dense`` (common terms, few chunks
+skip) and ``selective`` (rare terms plus the hot term, most chunks
+skip). Run it alternately on two checkouts to A/B a scorer change;
+BASELINE.md records the union-scorer measurements.
 
-Usage: python tools/bmw_microbench.py [n_turns] [reps]
+Usage: python tools/bmw_microbench.py [n_turns] [reps] [dense|selective]
 """
 
 from __future__ import annotations
@@ -43,10 +43,9 @@ def main() -> None:
     rd = IndexReader(spark, idx)
 
     # boost-only scored union incl. the injected hot term (df ~0.4N).
-    # dense: all-common terms (low skip rate — worst case for laziness);
+    # dense: all-common terms (low skip rate);
     # selective: rare terms + the hot term (high idf spread: chunks
-    # holding only hot-term blocks can't beat θ, so their posting bytes
-    # should never be decoded)
+    # holding only hot-term postings can't beat θ and are skipped)
     shapes = {
         "dense": ("spark", "w3", "w17", "w101"),
         "selective": ("spark", "w4001", "w9001", "w17777"),
