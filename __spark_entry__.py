@@ -54,7 +54,9 @@ _TOKS = (
 # never-driver-verified entry, the brute twin of the driver-green
 # e1_engine_phrase_hot — enters the window; ngram_counts (driver-green
 # r2+r3+r4, with decontaminate/redact_terms/domain_mix/
-# stratified_sample siblings staying in-window) leaves it. Entries not
+# stratified_sample siblings staying in-window) leaves it. The
+# driver-local engine row e6_engine_local_and enters the window;
+# ev_asof_join (driver-green r2-r5, unchanged) leaves it. Entries not
 # listed follow in registration order; each is driver-green from an
 # earlier round and unchanged.
 _GATE_PRIORITY = [
@@ -64,7 +66,7 @@ _GATE_PRIORITY = [
     "e1_engine_not", "e1_engine_not_only", "e1_engine_union_not",
     "e1_engine_english",
     "e2_incremental_and", "e3_compacted_and",
-    "e4_engine_facet", "e5_engine_hit_count",
+    "e4_engine_facet", "e5_engine_hit_count", "e6_engine_local_and",
     "f1_bm25_not", "f1_bm25_not_only", "f8_parsed_query",
     "a4_paragraphs",
     "a11_timex_tag", "a12_ner", "f6_timex_tagged",
@@ -80,7 +82,6 @@ _GATE_PRIORITY = [
     "decontaminate", "redact_terms", "domain_mix",
     "stratified_sample",
     "s2_es_source", "s7_metadata_csv",
-    "ev_asof_join",
 ]
 
 
@@ -196,6 +197,26 @@ def _engine_incremental_index(spark: SparkSession, sf_dir: str) -> str:
 def _engine_query(spec: QuerySpec):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         return search(spark, _engine_index(spark, sf_dir), spec)
+
+    return run
+
+
+def _engine_local_query(spec: QuerySpec):
+    """The engine's driver-local executor (the getDocs path for small
+    queries, no Spark job): its per-shard heaps merged and cut to k as
+    getDocs merges them, then turned into a DataFrame for the gate."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from newsleak_spark.api import _merge_heaps
+        from newsleak_spark.query import engine
+
+        rd = engine.IndexReader(spark, _engine_index(spark, sf_dir))
+        plan = engine._plan(rd, spec, truncate=True, count=False)
+        rows = engine._local_scored(rd, spec, plan) if plan else []
+        merged = _merge_heaps(rows, spec.k)[0][: spec.k]
+        return spark.createDataFrame(
+            [(r["doc_id"], r["score_e6"]) for r in merged], "doc_id long, score_e6 long"
+        )
 
     return run
 
@@ -366,6 +387,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return search(spark, d, _SPECS["f1_bm25_and"])
 
     q["e3_compacted_and"] = _compacted_query
+    q["e6_engine_local_and"] = _engine_local_query(_SPECS["f1_bm25_and"])
     q["e1_engine_english"] = _e1_engine_english
 
     # index-accelerated aggregation path (engine.matching_doc_ids):
@@ -444,6 +466,7 @@ def oracle_sql() -> dict[str, str]:
     o["e1_engine_union_not"] = bm25_topk_oracle_sql(_NOT_UNION_SPEC)
     o["e2_incremental_and"] = bm25_topk_oracle_sql(_SPECS["f1_bm25_and"])
     o["e3_compacted_and"] = bm25_topk_oracle_sql(_SPECS["f1_bm25_and"])
+    o["e6_engine_local_and"] = bm25_topk_oracle_sql(_SPECS["f1_bm25_and"])
     o["e1_engine_english"] = _english_oracle_sql()
 
     e4_where = (

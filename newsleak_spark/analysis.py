@@ -50,7 +50,7 @@ STANDARD_TOKEN_RE = "[a-z0-9]+"  # shared with DuckDB oracle SQL
 
 MAX_TOKEN_LEN = 70  # SentenceCleaner.java:46 — tokens longer are dropped
 
-_WORD_RE = re.compile(r"[\w’']+", re.UNICODE)
+WORD_RE = re.compile(r"[\w’']+", re.UNICODE)  # english-mode word tokens
 _HTML_BREAK_RE = re.compile(r"(?i)<\s*br\s*/?\s*>|</\s*p\s*>")
 _HTML_TAG_RE = re.compile(r"<[^>\n]{0,200}?>")
 _DEHYPHEN_RE = re.compile(r"(\w+)-[ \t]*\n[ \t]*(\w+)", re.UNICODE)
@@ -90,7 +90,7 @@ def _strip_possessive(tok: str) -> str:
 def tokenize_unicode(s: str) -> list[str]:
     """A3: unicode word tokens (BreakIterator analog), possessive strip."""
     out = []
-    for tok in _WORD_RE.findall(s):
+    for tok in WORD_RE.findall(s):
         tok = _strip_possessive(tok)
         if tok:
             out.append(tok)

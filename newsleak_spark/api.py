@@ -7,7 +7,9 @@ finds the same request/response shapes here (citations into
 
   get_docs         GET /getDocs    DocumentController.scala:276-346
                    (ranked top-k + pagination + whole-doc highlighting
-                   + metadata enrichment in one Spark plan)
+                   + metadata enrichment; a small query is ranked in
+                   the driver and a page's bodies are one pyarrow read
+                   filtered on doc_id, so a page costs no Spark job)
   induce_subgraph  GET /induceSubgraph  NetworkController →
                    NetworkService.scala:136-175 — node facet + ALL
                    edges in one self-join job instead of O(n²)
@@ -39,20 +41,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newsleak_spark import facets as facets_mod
-from newsleak_spark.analysis import analyze
+from newsleak_spark.analysis import WORD_RE, analyze
 from newsleak_spark.query.brute import bm25_topk, matching_docs
 from newsleak_spark.query.engine import (
     count_hits,
     index_state_key,
     matching_doc_ids,
+    ranked_heaps,
     search,
-    search_heaps,
 )
 from newsleak_spark.query.spec import QuerySpec, parse_query_string, parse_time_range
 
 DEFAULT_PAGE_SIZE = 50  # DocumentController.scala:47
 
-_WORD_RE = re.compile(r"[0-9A-Za-z][0-9A-Za-z'’]*")
+# surface words to re-analyze for highlighting: standard mode's
+# [a-z0-9]+ tokens never span other characters; english mode splits
+# with its analyzer's own (unicode) word pattern
+_STANDARD_WORD_RE = re.compile(r"[0-9A-Za-z][0-9A-Za-z'’]*")
+# the table columns a getDocs page reads
+_BODY_COLUMNS = ("doc_id", "conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 
 def _highlight_analyzed(text: str, targets: set[str], mode: str) -> str:
@@ -66,7 +73,8 @@ def _highlight_analyzed(text: str, targets: set[str], mode: str) -> str:
         toks = analyze(m.group(0), mode)
         return f"<em>{m.group(0)}</em>" if any(t in targets for t in toks) else m.group(0)
 
-    return _WORD_RE.sub(repl, text)
+    word_re = WORD_RE if mode == "english" else _STANDARD_WORD_RE
+    return word_re.sub(repl, text)
 
 
 def compile_spec(
@@ -122,6 +130,33 @@ def _merge_heaps(hrows: list, k: int) -> tuple[list, float, int]:
     return merged, safe_rank, total
 
 
+def _parquet_dataset(df: DataFrame):
+    """A pyarrow dataset over exactly the files Spark scans for ``df``
+    when its analyzed plan is a bare, unpartitioned parquet relation
+    (``inputFiles()`` is then that scan's file snapshot); None for any
+    other plan (filtered, projected, DataSource V2, Iceberg, ...)."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if not (
+        rel.getClass().getSimpleName() == "HadoopFsRelation"
+        and rel.fileFormat().getClass().getSimpleName() == "ParquetFileFormat"
+        and rel.partitionSchema().isEmpty()
+    ):
+        return None
+    files = df.inputFiles()
+    if not files:
+        return None
+    import pyarrow.dataset as ds
+    import pyarrow.fs as pafs
+
+    fs = pafs.FileSystem.from_uri(files[0])[0]
+    return ds.dataset(
+        [pafs.FileSystem.from_uri(f)[1] for f in files], format="parquet", filesystem=fs
+    )
+
+
 def _bad_request(e: ValueError) -> dict:
     """F8 fail-closed parse errors surface as a structured 400 at the
     API boundary (the controller's BadRequest analog) instead of an
@@ -168,10 +203,14 @@ class NewsleakAPI:
         self.mode = mode
         self._hit_cache: dict[tuple, tuple[list, float, int | None]] = {}
         self._agg_cache: dict[tuple, dict] = {}
+        # (transcripts, its parquet dataset | None, ts type): the body
+        # fetch source, reopened when self.transcripts is replaced
+        self._bodies: tuple | None = None
         self.topk_runs = 0  # observability: ranked scans actually executed
         self.agg_runs = 0  # observability: aggregation jobs actually executed
         # concurrent requests share one handle: the lock guards cache
-        # lookup/insert/evict and the counters, never a Spark job
+        # lookup/insert/evict, the counters and the body-source swap,
+        # never a Spark job
         self._lock = threading.Lock()
 
     # -- GET /getDocs -----------------------------------------------------
@@ -196,14 +235,17 @@ class NewsleakAPI:
         matching: a surface word is highlighted when its analyzed form
         is a query term, so english-mode 'databases' highlights for the
         stem query 'databas'. Runs driver-side over the <= page_size
-        returned bodies only. ``with_total``: a scored spec on the
-        indexed path counts its hits in the same per-shard scan that
-        ranks the page (search_heaps(count=True)) — one Spark job for
-        page and total, the total cached with the heaps; an unscored
-        spec counts from the index alone (engine.count_hits, no text
-        scan); the brute fallback pays one matching_docs scan.
-        ``drift``: ranked ids missing from the table (stale index or
-        filtered table), skipped from the page and reported here."""
+        returned bodies only, which come from _fetch (a pyarrow read
+        of the table's files when it is a bare parquet scan).
+        ``with_total``: a scored spec on the indexed path counts its
+        hits in the same per-shard scoring that ranks the page
+        (engine.ranked_heaps(count=True)) — one pass for page and
+        total, in the driver for a small query, the total cached with
+        the heaps; an unscored spec counts from the index alone
+        (engine.count_hits, no text scan); the brute fallback pays one
+        matching_docs scan. ``drift``: ranked ids missing from the
+        table (stale index or filtered table), skipped from the page
+        and reported here."""
         if page < 1 or page_size < 1:
             return _bad_request(
                 ValueError(f"page={page}, page_size={page_size}: both must be >= 1")
@@ -222,8 +264,7 @@ class NewsleakAPI:
         docs: list[dict] = []
         drift = 0
         if ids:
-            body = self.transcripts.filter(F.col("doc_id").isin(ids))
-            by_id = {r["doc_id"]: r for r in body.collect()}
+            by_id = self._fetch(ids)
             for did in ids:  # preserve rank order
                 r = by_id.get(did)
                 if r is None:
@@ -306,6 +347,8 @@ class NewsleakAPI:
         self, query: str = "", time_range: str | None = None, lod: str = "month"
     ) -> dict:
         """Dense date-histogram buckets at the LoD (decade|year|month|day)."""
+        if lod not in facets_mod.LODS:
+            return _bad_request(ValueError(f"lod={lod!r}: must be one of {facets_mod.LODS}"))
         try:
             spec = compile_spec(query, time_range, mode=self.mode)
         except ValueError as e:
@@ -335,6 +378,8 @@ class NewsleakAPI:
         include: list[str] | None = None,
         exclude: list[str] | None = None,
     ) -> dict:
+        if facet_key not in self.transcripts.columns:
+            return _bad_request(ValueError(f"facet_key={facet_key!r}: not a column of the table"))
         try:
             spec = compile_spec(query, time_range, mode=self.mode)
         except ValueError as e:
@@ -371,10 +416,11 @@ class NewsleakAPI:
         (None unless known), cache-aware: keyed by the spec NORMALIZED
         WITHOUT k, so any page whose rank is provably exact from an
         already-collected run is served driver-side. Indexed path: ONE
-        search_heaps scan caches every shard's top-k (n_shards·k rows,
-        bounded) — and, when ``with_total`` asks for it, every shard's
-        match count; the merged list answers pages up to the exactness
-        bound — typically many pages — before any re-run. A re-run
+        engine.ranked_heaps pass (in the driver for a small query, a
+        Spark job otherwise) caches every shard's top-k (n_shards·k
+        rows, bounded) — and, when ``with_total`` asks for it, every
+        shard's match count; the merged list answers pages up to the
+        exactness bound — typically many pages — before any re-run. A re-run
         happens when the rows are not exact through k, or when a total
         is wanted and none is cached. Bounded FIFO."""
         # the index state rides in the key: append_index/compaction on
@@ -396,10 +442,10 @@ class NewsleakAPI:
             self.topk_runs += 1
         heaps = None
         if self.index_dir is not None:
-            heaps = search_heaps(self.spark, self.index_dir, spec, count=with_total)
+            heaps = ranked_heaps(self.spark, self.index_dir, spec, count=with_total)
         total = None
         if heaps is not None:
-            rows, safe_rank, total = _merge_heaps(heaps.collect(), spec.k)
+            rows, safe_rank, total = _merge_heaps(heaps, spec.k)
             if not with_total:
                 total = None  # a skipping union shard undercounts
         else:
@@ -415,6 +461,42 @@ class NewsleakAPI:
                 self._hit_cache.pop(next(iter(self._hit_cache)))
             self._hit_cache[key] = (rows, safe_rank, total)
         return rows[: spec.k], total
+
+    def _fetch(self, ids: list[int]) -> dict:
+        """doc_id → body row for a page's ids. A bare parquet table is
+        read with pyarrow: one dataset read filtered on ``doc_id``.
+        Row-group min/max statistics skip the row groups whose id range
+        holds none of the page; a page spread over every row group reads
+        the whole table, as the Spark fetch does. ``ts`` converts as Row
+        collection does (the column type's fromInternal on epoch
+        micros), so rows equal the Spark fetch's. Any other table plan
+        keeps the Spark ``isin`` fetch."""
+        t = self.transcripts
+        bodies = self._bodies
+        if bodies is None or bodies[0] is not t:
+            # plan analysis and file listing run outside the lock; the
+            # first open of t to reach it is cached, a later one dropped
+            dataset = _parquet_dataset(t)
+            opened = (t, dataset, t.schema["ts"].dataType if dataset else None)
+            with self._lock:
+                if self._bodies is None or self._bodies[0] is not t:
+                    self._bodies = opened
+                bodies = self._bodies
+        _t, dataset, ts_type = bodies
+        if dataset is None:
+            return {r["doc_id"]: r for r in t.filter(F.col("doc_id").isin(ids)).collect()}
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        tbl = dataset.to_table(columns=list(_BODY_COLUMNS), filter=ds.field("doc_id").isin(ids))
+        ts = tbl["ts"]
+        micros = ts.cast(pa.timestamp("us", ts.type.tz)).cast(pa.int64())
+        tbl = tbl.set_column(tbl.schema.get_field_index("ts"), "ts", micros)
+        by_id = {}
+        for r in tbl.to_pylist():
+            r["ts"] = ts_type.fromInternal(r["ts"])
+            by_id[r["doc_id"]] = r
+        return by_id
 
     def _agg_cached(self, key: tuple, compute, spec: QuerySpec):
         """Aggregation result memo (facet/timeline/network): bounded

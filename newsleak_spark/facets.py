@@ -71,6 +71,7 @@ def cardinality(filtered: DataFrame, column: str, exact: bool = True) -> DataFra
 
 
 _LOD_TRUNC = {"day": "day", "month": "month", "year": "year", "decade": "year"}
+LODS = tuple(_LOD_TRUNC)  # the timeline levels of detail
 _LOD_FMT = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
 
 

@@ -27,6 +27,8 @@ Output schema: (doc_id bigint, score_e6 bigint).
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 
 from pyspark.sql import DataFrame
@@ -76,6 +78,38 @@ def _apply_filters(t: DataFrame, spec: QuerySpec) -> DataFrame:
     if spec.ts_to:
         t = t.filter(F.col("ts").cast("date") <= F.lit(str(spec.ts_to)))
     return t
+
+
+def arrow_filter(spark, spec: QuerySpec, ts_type):
+    """_apply_filters as a pyarrow dataset expression (None when the
+    spec has no filter), for the engine's driver-local executor.
+    ``cast(ts as date)`` takes the instant's date in the session time
+    zone, so a ``ts`` bound compares the raw instant with the start of
+    that day there, from Spark's own zone rules: ``ts >= start(from)``
+    and ``ts < start(to + 1 day)``. ``ts_type`` is the stored column's
+    Arrow type (parquet INT96 reads as timestamp[ns]); bounds take its
+    unit."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    def day_start(day: dt.date):
+        du = spark._jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils
+        zone = du.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+        micros = du.daysToMicros((day - dt.date(1970, 1, 1)).days, zone)
+        return pa.scalar(micros, pa.timestamp("us", ts_type.tz)).cast(ts_type)
+
+    conds = []
+    if spec.role_filter:
+        conds.append(ds.field("role").isin(list(spec.role_filter)))
+    if spec.tool_filter:
+        conds.append(ds.field("tool").isin(list(spec.tool_filter)))
+    if spec.ts_from:
+        conds.append(ds.field("ts") >= day_start(spec.ts_from))
+    if spec.ts_to:
+        conds.append(ds.field("ts") < day_start(spec.ts_to + dt.timedelta(days=1)))
+    return functools.reduce(operator.and_, conds) if conds else None
 
 
 def _phrase_predicate(toks_joined, phrase: tuple[str, ...]):

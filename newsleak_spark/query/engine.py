@@ -1,15 +1,24 @@
 """Segment-based BM25 query engine (the Elasticsearch replacement).
 
 Execution shape (SURVEY §3.1 "Rebuild shape"):
-  parse → QuerySpec → dictionary lookup (df/idf per query term,
-  partition-pruned parquet point reads) → segment scan filtered to
-  (bucket ∈ query buckets, term ∈ query terms) — parquet PARTITION
-  pruning on bucket + row-group stats pruning on the term-sorted rows —
-  → per-shard scoring in applyInPandas over Arrow batches (numpy
-  decode, block-range intersection for AND, block-max WAND for the
-  scored-union path; F2/F5 filters arrive shard-locally via cogroup
-  with the filtered docmeta) → per-shard top-k heaps → global
-  TakeOrderedAndProject merge.
+  parse → QuerySpec → driver-side plan (_plan: dictionary lookup —
+  df/idf per query term, partition-pruned parquet point reads — and
+  the per-shard scorer) → segment rows filtered to (bucket ∈ query
+  buckets, term ∈ query terms) — parquet PARTITION pruning on bucket +
+  row-group stats pruning on the term-sorted rows — → per-shard
+  scoring (numpy decode, block-range intersection for AND, block-max
+  WAND for the scored-union path; F2/F5 filters arrive shard-locally as
+  the shard's filter-surviving doc ids) → per-shard top-k heaps →
+  merge. Two executors run the same plan and scorer:
+  - Spark (_spark_scored): applyInPandas over Arrow batches, cogrouped
+    with the filtered docmeta, merged by TakeOrderedAndProject or by
+    the caller. search, search_heaps, matching_doc_ids and count_hits
+    always use it.
+  - local (_local_scored): a driver-side pyarrow read of the same rows
+    (and of the filtered docmeta), one scorer call per shard, no Spark
+    job. ranked_heaps (the getDocs path) routes a plan here when the
+    summed df of its fetched terms is at most LOCAL_MAX_POSTINGS;
+    larger plans run on Spark.
 
 Block-max WAND decodes every union term once and bounds each doc
 chunk by one rule: a term adds to the chunk's bound only when it has
@@ -99,6 +108,23 @@ class IndexReader:
         self._df_cache: dict[str, DataFrame] = {}
         self._pa_datasets: dict = {}
 
+    def _pa_dataset(self, path: str):
+        """The pyarrow dataset at ``path``, or None when the part has no
+        files there (no or an empty sidecar, an empty base part). Dataset
+        discovery walks the hive partition tree — driver-serial IO worth
+        paying once per reader, not once per query (invalidation rides
+        the reader's)."""
+        import os
+
+        import pyarrow.dataset as ds
+
+        if path not in self._pa_datasets:
+            dataset = None
+            if os.path.isdir(path):
+                dataset = ds.dataset(path, format="parquet", partitioning="hive")
+            self._pa_datasets[path] = dataset if dataset is not None and dataset.files else None
+        return self._pa_datasets[path]
+
     def dictionary_rows(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """term → (df, cf): a driver-side pyarrow point read of ONLY the
         buckets the query terms hash to (hive partition pruning) with a
@@ -108,8 +134,6 @@ class IndexReader:
         n_term_buckets scales with the term count."""
         if not terms:
             return {}
-        import os
-
         import pyarrow.dataset as ds
 
         from newsleak_spark.indexing.build import BIGRAM_SEP
@@ -122,16 +146,9 @@ class IndexReader:
                 continue
             buckets = sorted({_bucket(t, self.n_buckets) for t in ts})
             for part in self.parts:
-                path = f"{part}/{sub}"
-                if not os.path.isdir(path):
-                    continue  # part built with no (or empty) sidecar
-                dataset = self._pa_datasets.get(path)
+                dataset = self._pa_dataset(f"{part}/{sub}")
                 if dataset is None:
-                    # dataset discovery walks the hive partition tree —
-                    # driver-serial IO worth paying once per reader, not
-                    # once per query (invalidation rides the reader's)
-                    dataset = ds.dataset(path, format="parquet", partitioning="hive")
-                    self._pa_datasets[path] = dataset
+                    continue
                 tbl = dataset.to_table(
                     columns=["term", "df", "cf"],
                     filter=ds.field("bucket").isin(buckets) & ds.field("term").isin(ts),
@@ -173,6 +190,43 @@ class IndexReader:
             # queries never pay their IO (SURVEY §7.5.5)
             seg = seg.drop("poscnt", "posflat")
         return seg
+
+    def segment_rows(self, terms: list[str], with_positions: bool) -> pd.DataFrame:
+        """segments_for as a driver-side pyarrow read of every part:
+        the same bucket partition pruning, term predicate and position
+        column pruning, no Spark job."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        buckets = sorted({_bucket(t, self.n_buckets) for t in terms})
+        flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
+        tables = []
+        for part in self.parts:
+            dataset = self._pa_dataset(f"{part}/segments")
+            if dataset is None:
+                continue  # an empty base part has no segment files
+            cols = [
+                c for c in dataset.schema.names
+                if with_positions or c not in ("poscnt", "posflat")
+            ]
+            tables.append(dataset.to_table(columns=cols, filter=flt))
+        return pa.concat_tables(tables).to_pandas() if tables else pd.DataFrame()
+
+    def filtered_doc_ids(self, spec: QuerySpec) -> pd.DataFrame:
+        """(shard, doc_id) of every doc passing the spec's F2/F5 filters:
+        _apply_meta_filters over docmeta as a driver-side pyarrow read."""
+        import pyarrow as pa
+
+        from newsleak_spark.query.brute import arrow_filter
+
+        tables = []
+        for part in self.parts:
+            dataset = self._pa_dataset(f"{part}/docmeta")
+            if dataset is None:
+                continue
+            flt = arrow_filter(self.spark, spec, dataset.schema.field("ts").type)
+            tables.append(dataset.to_table(columns=["shard", "doc_id"], filter=flt))
+        return pa.concat_tables(tables).to_pandas()
 
 
 def _bucket(term: str, n_buckets: int) -> int:
@@ -709,30 +763,44 @@ def _reader(
 
 CANDIDATE_SCHEMA = "shard int, doc_id long, score_e6 long, hits long"
 
+# Router: a ranked query whose summed combined df over every fetched
+# term is at most this many is scored in the driver; larger ones run as
+# a Spark job. Docmeta filters are not counted (a filtered 2M-turn
+# plan read docmeta in ~0.1 s). Measured crossover on the spec shapes
+# getDocs sends (BASELINE.md, "getDocs without a Spark job"; 200k- and
+# 2M-turn indexes, 4 cores): every shape at or below this bound ran
+# locally >= 17% faster; phrases cross first, tying at ~1.9M rows and
+# losing from 2.5M; AND, must_not and filtered plans tie at ~3.9M.
+LOCAL_MAX_POSTINGS = 1_500_000
 
-def _candidates(
-    spark: SparkSession, rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool = False
-) -> DataFrame:
-    """The one candidate pipeline behind every engine result of a
-    scored spec: dictionary lookup → segment scan (bucket-pruned) →
-    shard-local scoring applyInPandas (cogrouped with the filtered
-    docmeta when F2/F5 filters are present). ``truncate`` keeps the
-    per-shard top-k heap on (ranked search) or off (full doc-set);
-    ``count`` makes every shard's ``hits`` exact (see
-    _make_shard_scorer). Returns (shard, doc_id, score_e6, hits);
-    empty when the spec cannot match (a required term absent from the
-    collection → AND has no hits)."""
+
+@dataclass
+class _Plan:
+    """A scored spec's driver-side plan, shared by both executors."""
+
+    scorer: object  # _make_shard_scorer's per-shard function
+    fetch_terms: list[str]  # every term whose segment rows are read
+    filtered: bool  # score against the filter-surviving docmeta
+    postings: int  # summed df of fetch_terms: the router's size estimate
+
+
+def _plan(rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool) -> _Plan | None:
+    """The driver-side step of the candidate pipeline for a scored
+    spec: dictionary lookup → term metadata → the shard scorer.
+    ``truncate`` keeps the per-shard top-k heap on (ranked search) or
+    off (full doc-set); ``count`` makes every shard's ``hits`` exact
+    (see _make_shard_scorer). None when the spec cannot match (a
+    required term absent from the collection → AND has no hits)."""
     if spec.phrases and not rd.man.config.get("with_positions", True):
         raise ValueError(
             f"index at {rd.index_dir} was built with with_positions=False; "
             "phrase queries need a positions-bearing index"
         )
-    has_filters = bool(spec.role_filter or spec.tool_filter or spec.ts_from or spec.ts_to)
+    filtered = bool(spec.role_filter or spec.tool_filter or spec.ts_from or spec.ts_to)
     required = list(spec.all_scored_terms())
     boost = [t for t in spec.boost_terms if t not in required]
     if any(t in spec.not_terms for t in required):
-        # `a -a`: must AND must_not on one term → no hits
-        return spark.createDataFrame([], CANDIDATE_SCHEMA)
+        return None  # `a -a`: must AND must_not on one term → no hits
     neg = [t for t in spec.not_terms if t not in boost]
     all_terms = required + boost
     # hot-pair bigram sidecar plan: an adjacent phrase pair with BOTH
@@ -766,7 +834,7 @@ def _candidates(
     # adjacency anywhere in the collection → no hits (phrases are
     # required terms)
     if any(t not in dict_rows for t in required + bigram_fetch):
-        return spark.createDataFrame([], CANDIDATE_SCHEMA)
+        return None
     all_terms = [t for t in all_terms if t in dict_rows]
     # a must_not term absent from the collection excludes nothing; a
     # negated boost term stays in the fetch list only once (the scorer
@@ -782,28 +850,103 @@ def _candidates(
         for t in all_terms
     ]
     fetch_terms = all_terms + [t for t in neg if t not in all_terms] + bigram_fetch
-    seg = rd.segments_for(fetch_terms, with_positions=bool(spec.phrases))
     scorer = _make_shard_scorer(
         metas, spec.phrases, rd.avgdl, spec.k, truncate=truncate, count=count,
         safe_bounds=rd.multi, neg_terms=neg, phrase_plans=phrase_plans,
     )
+    postings = sum(dict_rows[t][0] for t in fetch_terms)
+    return _Plan(scorer, fetch_terms, filtered, postings)
+
+
+def _spark_scored(rd: IndexReader, spec: QuerySpec, plan: _Plan) -> DataFrame:
+    """The Spark executor: segment scan (bucket-pruned) → shard-local
+    scoring applyInPandas, cogrouped with the filtered docmeta when
+    F2/F5 filters are present (docmeta is shard-partitioned, so the
+    filter scan prunes columns + pushes predicates; with truncate on,
+    only k rows leave each shard). Returns (shard, doc_id, score_e6,
+    hits)."""
+    seg = rd.segments_for(plan.fetch_terms, with_positions=bool(spec.phrases))
     schema = "shard int, doc_id long, score double, hits long"
-    if has_filters:
-        # shard-local filtering: cogroup the shard's blocks with its
-        # filter-surviving doc_ids (docmeta is shard-partitioned, so
-        # the filter scan prunes columns + pushes predicates); with
-        # truncate on, only k rows leave each shard
+    if plan.filtered:
         meta = _apply_meta_filters(rd.docmeta(), spec).select("shard", "doc_id")
         scored = (
             seg.groupBy("shard")
             .cogroup(meta.groupBy("shard"))
-            .applyInPandas(scorer.cogrouped, schema)
+            .applyInPandas(plan.scorer.cogrouped, schema)
         )
     else:
-        scored = seg.groupBy("shard").applyInPandas(scorer, schema)
+        scored = seg.groupBy("shard").applyInPandas(plan.scorer, schema)
     return scored.select(
         "shard", "doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6"), "hits"
     )
+
+
+def _local_scored(rd: IndexReader, spec: QuerySpec, plan: _Plan) -> list[dict]:
+    """The local executor: the same scorer over a driver-side pyarrow
+    read of the same segment rows (and of the filter-surviving docmeta),
+    one call per shard, as applyInPandas / cogroup make them. Returns
+    the rows _spark_scored would collect, as dicts."""
+    seg = rd.segment_rows(plan.fetch_terms, with_positions=bool(spec.phrases))
+    if seg.empty:
+        return []
+    allowed = None
+    if plan.filtered:
+        meta = rd.filtered_doc_ids(spec)
+        allowed = {s: g[["doc_id"]] for s, g in meta.groupby("shard")}
+        no_docs = meta[["doc_id"]].iloc[:0]
+    frames = [
+        plan.scorer(rows) if allowed is None else plan.scorer.cogrouped(rows, allowed.get(s, no_docs))
+        for s, rows in seg.groupby("shard")
+    ]
+    out = pd.concat(frames)
+    return [
+        {"shard": int(s), "doc_id": int(d), "score_e6": int(e), "hits": int(h)}
+        for s, d, e, h in zip(out["shard"], out["doc_id"], _score_e6(out["score"]), out["hits"])
+    ]
+
+
+def _score_e6(scores: pd.Series) -> np.ndarray:
+    """round(score · 1e6) as Spark's F.round computes it: HALF_UP
+    (np.round would round halves to even). Exact for these
+    non-negative scores: x - floor(x) is exact in binary floating
+    point."""
+    x = scores.to_numpy(dtype=np.float64) * 1e6
+    lo = np.floor(x)
+    return (lo + (x - lo >= 0.5)).astype(np.int64)
+
+
+def _candidates(
+    spark: SparkSession, rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool = False
+) -> DataFrame:
+    """The one candidate pipeline behind every engine DataFrame result
+    of a scored spec: _plan, then the Spark executor. Returns (shard,
+    doc_id, score_e6, hits); empty when the spec cannot match."""
+    plan = _plan(rd, spec, truncate, count)
+    if plan is None:
+        return spark.createDataFrame([], CANDIDATE_SCHEMA)
+    return _spark_scored(rd, spec, plan)
+
+
+def ranked_heaps(
+    spark: SparkSession, index_dir: str, spec: QuerySpec, count: bool = False
+) -> list[dict] | None:
+    """search_heaps' rows, collected, from whichever executor the
+    router picks: the driver-local one when the plan reads at most
+    LOCAL_MAX_POSTINGS segment rows (no Spark job), the Spark one
+    otherwise. Both run the same plan and scorer, so the rows are
+    identical. None for unscored specs."""
+    if not spec.scored():
+        return None
+    rd = _cached_reader(spark, index_dir)
+    plan = _plan(rd, spec, truncate=True, count=count)
+    if plan is None:
+        return []
+    if plan.postings <= LOCAL_MAX_POSTINGS:
+        return _local_scored(rd, spec, plan)
+    from newsleak_spark.session import ensure_workers_can_import
+
+    ensure_workers_can_import(spark)
+    return [r.asDict() for r in _spark_scored(rd, spec, plan).collect()]
 
 
 def search(

@@ -2,22 +2,63 @@
 aggregate surface must agree with the operator layer it composes
 (engine search, facet_counts, cooccurrence, date_histogram)."""
 
+import datetime as dt
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from newsleak_spark import facets as facets_mod
 from newsleak_spark.api import NewsleakAPI
-from newsleak_spark.indexing import IndexConfig, build_index
+from newsleak_spark.indexing import IndexConfig, append_index, build_index
 from newsleak_spark.query import QuerySpec, bm25_topk
+from newsleak_spark.query import engine
 from newsleak_spark.query.brute import matching_docs
+
+# one table of spec shapes for every engine entry point: AND, phrase,
+# cogrouped filter, should-only (ES bool: no musts → at least one
+# should term must match), not-only, `a -a`, an absent required term,
+# match_all
+SHAPES = [
+    QuerySpec(terms=("merge", "window")),
+    QuerySpec(phrases=(("fast", "table"),)),
+    QuerySpec(terms=("table",), role_filter=("user",)),
+    QuerySpec(terms=(), boost_terms=("merge", "window")),  # should-only
+    QuerySpec(not_terms=("merge",)),  # not-only
+    QuerySpec(terms=("merge",), not_terms=("merge",)),
+    QuerySpec(terms=("merge", "zzabsentzz")),
+    QuerySpec(),  # match_all
+]
+
+
+def spark_jobs(spark, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4()}"
+    sc.setJobGroup(group, "test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
 def index_dir(spark, transcripts, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("apiidx"))
     build_index(spark, transcripts, d, IndexConfig(n_shards=4, n_term_buckets=8, block_size=32))
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def delta_index_dir(spark, transcripts, tmp_path_factory):
+    """A base + one delta index: multi-part reads, safe block bounds."""
+    d = str(tmp_path_factory.mktemp("apidelta"))
+    cfg = IndexConfig(n_shards=4, n_term_buckets=8, block_size=32)
+    build_index(spark, transcripts.filter(F.col("doc_id") % 3 != 0), d, cfg)
+    append_index(spark, transcripts.filter(F.col("doc_id") % 3 == 0), d, cfg)
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -95,16 +136,7 @@ def test_count_hits_matches_matching_docs(spark, api, transcripts, index_dir):
         search_heaps,
     )
 
-    for spec in [
-        QuerySpec(terms=("merge", "window")),
-        QuerySpec(phrases=(("fast", "table"),)),
-        QuerySpec(terms=("table",), role_filter=("user",)),
-        QuerySpec(terms=(), boost_terms=("merge", "window")),  # should-only
-        QuerySpec(not_terms=("merge",)),  # not-only
-        QuerySpec(terms=("merge",), not_terms=("merge",)),
-        QuerySpec(terms=("merge", "zzabsentzz")),
-        QuerySpec(),  # match_all
-    ]:
+    for spec in SHAPES:
         ids = sorted(r["doc_id"] for r in matching_doc_ids(spark, index_dir, spec).collect())
         want = sorted(r["doc_id"] for r in matching_docs(transcripts, spec).select("doc_id").collect())
         assert ids == want, spec
@@ -120,6 +152,186 @@ def test_count_hits_matches_matching_docs(spark, api, transcripts, index_dir):
             counted = search_heaps(spark, index_dir, spec, count=True).collect()
             per_shard = {r["shard"]: r["hits"] for r in counted}
             assert sum(per_shard.values()) == len(want), spec
+
+
+@pytest.mark.parametrize("executor", ["local", "spark"])
+@pytest.mark.parametrize("which", ["index_dir", "delta_index_dir"])
+def test_ranked_heaps_executors_agree(spark, request, monkeypatch, executor, which):
+    """engine.ranked_heaps returns search_heaps' collected rows (shard,
+    doc_id, score_e6, hits) from either executor, with and without
+    count, on a single-part and a base+delta index; the local executor
+    runs no Spark job."""
+    d = request.getfixturevalue(which)
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 10**12 if executor == "local" else -1)
+    cols = ["shard", "doc_id", "score_e6", "hits"]
+    for spec in SHAPES:
+        for count in (False, True):
+            got, jobs = spark_jobs(spark, lambda: engine.ranked_heaps(spark, d, spec, count=count))
+            heaps = engine.search_heaps(spark, d, spec, count=count)
+            if heaps is None:
+                assert got is None, spec
+                continue
+            want = sorted(tuple(r) for r in heaps.select(*cols).collect())
+            assert sorted(tuple(r[c] for c in cols) for r in got) == want, (spec, count)
+            if executor == "local":
+                assert jobs == 0, spec
+
+
+def test_local_score_rounding_is_spark_round(spark):
+    """The local executor rounds score·1e6 half up, as F.round does."""
+    import pandas as pd
+
+    scores = [0.5e-6, 2.5e-6, 3.5e-6, 4.5e-6, 12.5e-6, 1.0000005, 7.123456789, 0.0]
+    want = [
+        r[0] for r in spark.createDataFrame([(x,) for x in scores], "score double")
+        .select(F.round(F.col("score") * 1e6).cast("long"))
+        .collect()
+    ]
+    assert engine._score_e6(pd.Series(scores)).tolist() == want
+
+
+def test_router_sends_large_plans_to_spark(spark, index_dir, monkeypatch):
+    """A plan reading more than LOCAL_MAX_POSTINGS segment rows runs as
+    a Spark job; the same query under the bound runs in the driver. A
+    filter does not enlarge the estimate (docmeta is not counted)."""
+    spec = QuerySpec(terms=("merge", "window"))
+    filtered = QuerySpec(terms=("merge", "window"), role_filter=("user",))
+    rd = engine._cached_reader(spark, index_dir)
+    plans = [engine._plan(rd, s, truncate=True, count=False) for s in (spec, filtered)]
+    assert plans[0].postings == plans[1].postings > 0
+    local, jobs = spark_jobs(spark, lambda: engine.ranked_heaps(spark, index_dir, spec))
+    assert jobs == 0
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
+    remote, jobs = spark_jobs(spark, lambda: engine.ranked_heaps(spark, index_dir, spec))
+    assert jobs > 0
+    key = lambda r: (r["shard"], r["doc_id"])
+    assert sorted(remote, key=key) == sorted(local, key=key)
+
+
+def test_local_filters_match_spark_filters(spark, tmp_path):
+    """The Arrow twin of the F2/F5 filters keeps exactly the docs
+    Spark's keeps: role, tool (null tools never match), and ts bounds
+    on a day boundary of a non-UTC session time zone, where cast(ts as
+    date) takes the session zone's date."""
+    from newsleak_spark.query.engine import IndexReader, _apply_meta_filters
+    from newsleak_spark.transcripts import TRANSCRIPT_SCHEMA
+
+    utc = dt.timezone.utc
+    stamps = [
+        dt.datetime(2020, 1, 1, 7, 59, 59, 999999, tzinfo=utc),  # LA: Dec 31
+        dt.datetime(2020, 1, 1, 8, 0, tzinfo=utc),  # LA: Jan 1 00:00
+        dt.datetime(2020, 1, 1, 23, 30, tzinfo=utc),
+        dt.datetime(2020, 1, 2, 0, 0, tzinfo=utc),  # UTC midnight; LA: Jan 1
+        dt.datetime(2020, 1, 2, 7, 59, 59, tzinfo=utc),  # LA: Jan 1 23:59:59
+        dt.datetime(2020, 1, 2, 8, 0, tzinfo=utc),  # LA: Jan 2 00:00
+        None,
+    ]
+    roles = ["user", "assistant", "tool", "user", "tool", "assistant", "tool"]
+    tools = [None, None, "grep", None, "sed", None, "grep"]
+    rows = [
+        (i, "c1", i, roles[i], f"alpha beta w{i}", tools[i], ts) for i, ts in enumerate(stamps)
+    ]
+    d = str(tmp_path / "idx")
+    build_index(
+        spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), d,
+        IndexConfig(n_shards=2, n_term_buckets=2, block_size=4),
+    )
+    jan1, jan2 = dt.date(2020, 1, 1), dt.date(2020, 1, 2)
+    specs = [
+        QuerySpec(terms=("alpha",), ts_from=jan1, ts_to=jan1),
+        QuerySpec(terms=("alpha",), ts_from=jan2),
+        QuerySpec(terms=("alpha",), ts_to=dt.date(2019, 12, 31)),
+        QuerySpec(terms=("alpha",), role_filter=("user", "tool")),
+        QuerySpec(terms=("alpha",), tool_filter=("grep",), ts_from=jan1),
+        QuerySpec(terms=("alpha",), role_filter=("tool",), tool_filter=("sed", "grep"), ts_to=jan1),
+    ]
+    conf = "spark.sql.session.timeZone"
+    zone = spark.conf.get(conf)
+    per_zone = {}
+    try:
+        for tz in ("UTC", "America/Los_Angeles"):
+            spark.conf.set(conf, tz)
+            rd = IndexReader(spark, d)
+            for spec in specs:
+                got = sorted(rd.filtered_doc_ids(spec)["doc_id"].tolist())
+                want = sorted(
+                    r["doc_id"] for r in _apply_meta_filters(rd.docmeta(), spec).collect()
+                )
+                assert got == want, (tz, spec)
+                per_zone[tz, spec] = got
+                local = engine.ranked_heaps(spark, d, spec)
+                heaps = engine.search_heaps(spark, d, spec).collect()
+                assert sorted(r["doc_id"] for r in local) == sorted(r["doc_id"] for r in heaps)
+    finally:
+        spark.conf.set(conf, zone)
+    assert per_zone["UTC", specs[0]] == [0, 1, 2]
+    assert per_zone["America/Los_Angeles", specs[0]] == [1, 2, 3, 4]
+
+
+def test_pyarrow_fetch_equals_spark_fetch(spark, transcripts, index_dir, tmp_path):
+    """A bare parquet table's page bodies come from one pyarrow read and
+    equal the Spark isin fetch row for row (null tool, null ts, ts
+    rendered as Row collection renders it); a ranked id missing from
+    the table is drift on both; any other table plan falls back to
+    Spark; replacing the table opens a new dataset."""
+    from newsleak_spark.transcripts import TRANSCRIPT_SCHEMA
+
+    page = NewsleakAPI(spark, transcripts, index_dir).get_docs(
+        "table", page_size=5, with_total=False, highlight=False
+    )
+    top = page["docs"][0]["id"]
+    odd = spark.createDataFrame([(10**9, "c-odd", 0, "user", "table odd", None, None)], TRANSCRIPT_SCHEMA)
+    path = str(tmp_path / "table")
+    transcripts.filter(F.col("doc_id") != top).unionByName(odd).repartition(3).write.parquet(path)
+    bare = spark.read.parquet(path)
+    fast = NewsleakAPI(spark, bare, index_dir)
+    slow = NewsleakAPI(spark, bare.filter(F.col("doc_id") >= 0), index_dir)
+    null_tool = [r["doc_id"] for r in bare.filter(F.col("tool").isNull()).limit(3).collect()]
+    with_tool = [r["doc_id"] for r in bare.filter(F.col("tool").isNotNull()).limit(3).collect()]
+    ids = null_tool + with_tool + [10**9, top]
+    got, jobs = spark_jobs(spark, lambda: fast._fetch(ids))
+    want = {i: r.asDict() for i, r in slow._fetch(ids).items()}
+    assert jobs == 0 and fast._bodies[1] is not None and slow._bodies[1] is None
+    assert top not in got and got[10**9]["ts"] is None and got[10**9]["tool"] is None
+    assert got == want
+    for q in ("table", "merge window"):
+        out = fast.get_docs(q, page_size=5, with_total=False)
+        assert out == slow.get_docs(q, page_size=5, with_total=False)
+    assert fast.get_docs("table", page_size=5, with_total=False)["drift"] == 1
+    opened = fast._bodies[1]
+    fast.transcripts = spark.read.parquet(path)
+    assert fast._fetch(ids) == want and fast._bodies[1] is not opened
+
+
+def test_english_highlight_non_ascii_terms(spark):
+    """english mode highlights surface words its analyzer tokenizes
+    with unicode word characters ('Café', 'Straße')."""
+    from newsleak_spark.analysis import analyze
+    from newsleak_spark.api import _highlight_analyzed
+
+    text = "Der Café-Besitzer sagte: Straße gesperrt"
+    out = _highlight_analyzed(text, set(analyze("café straße", "english")), "english")
+    assert out == "Der <em>Café</em>-Besitzer sagte: <em>Straße</em> gesperrt"
+
+
+def test_bad_aggregation_params_return_400(spark, api, api_noindex):
+    """An unknown timeline lod or a facet key that is not a table column
+    is a 400 on both handles, before any job or cache entry."""
+    for handle in (api, api_noindex):
+        runs, cached = handle.agg_runs, len(handle._agg_cache)
+        outs, jobs = spark_jobs(
+            spark,
+            lambda: [
+                handle.get_timeline("table", lod="week"),
+                handle.get_timeline("", lod="week"),
+                handle.aggregate("no_such_column", query="table"),
+                handle.aggregate("no_such_column"),
+            ],
+        )
+        assert all(o["status"] == 400 for o in outs), outs
+        assert "lod" in outs[0]["error"] and "no_such_column" in outs[2]["error"]
+        assert jobs == 0
+        assert (handle.agg_runs, len(handle._agg_cache)) == (runs, cached)
 
 
 def test_induce_subgraph_matches_operator_layer(api, transcripts):
@@ -384,11 +596,11 @@ def test_drift_is_reported(spark, transcripts, index_dir):
     assert [d["id"] for d in out["docs"]] == [d["id"] for d in full["docs"][1:]]
 
 
-def test_concurrent_requests_share_caches_safely(spark, transcripts, index_dir):
+def test_concurrent_requests_share_caches_safely(spark, transcripts, index_dir, monkeypatch):
     """More threads than cores on one handle, with more distinct
     queries than the hit cache holds: no request fails, the cache never
     exceeds its maximum, and no ranked-run count is lost (every request
-    misses)."""
+    misses). Every request is ranked by the local executor."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
@@ -399,6 +611,10 @@ def test_concurrent_requests_share_caches_safely(spark, transcripts, index_dir):
             super().__setitem__(key, value)
             Recording.peak = max(Recording.peak, len(self))
 
+    def no_spark(*_a):
+        raise AssertionError("ranked on Spark")
+
+    monkeypatch.setattr(engine, "_spark_scored", no_spark)
     api = NewsleakAPI(spark, transcripts, index_dir)
     api.HIT_CACHE_MAX = 2
     api._hit_cache = Recording()
