@@ -202,9 +202,10 @@ def _engine_query(spec: QuerySpec):
 
 
 def _engine_local_query(spec: QuerySpec):
-    """The engine's driver-local executor (the getDocs path for small
-    queries, no Spark job): its per-shard heaps merged and cut to k as
-    getDocs merges them, then turned into a DataFrame for the gate."""
+    """The engine's shard task run in the driver for every shard (the
+    getDocs path for small queries, no Spark job): its per-shard heaps
+    merged and cut to k as getDocs merges them, then turned into a
+    DataFrame for the gate."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from newsleak_spark.api import _merge_heaps
@@ -212,7 +213,9 @@ def _engine_local_query(spec: QuerySpec):
 
         rd = engine.IndexReader(spark, _engine_index(spark, sf_dir))
         plan = engine._plan(rd, spec, truncate=True, count=False)
-        rows = engine._local_scored(rd, spec, plan) if plan else []
+        rows = []
+        if plan is not None:
+            rows = engine.score_shards(plan, range(rd.n_shards), rd.part_datasets).to_pylist()
         merged = _merge_heaps(rows, spec.k)[0][: spec.k]
         return spark.createDataFrame(
             [(r["doc_id"], r["score_e6"]) for r in merged], "doc_id long, score_e6 long"

@@ -43,13 +43,7 @@ from pyspark.sql import functions as F
 from newsleak_spark import facets as facets_mod
 from newsleak_spark.analysis import WORD_RE, analyze
 from newsleak_spark.query.brute import bm25_topk, matching_docs
-from newsleak_spark.query.engine import (
-    count_hits,
-    index_state_key,
-    matching_doc_ids,
-    ranked_heaps,
-    search,
-)
+from newsleak_spark.query.engine import index_state_key, matching_doc_ids, ranked_heaps
 from newsleak_spark.query.spec import QuerySpec, parse_query_string, parse_time_range
 
 DEFAULT_PAGE_SIZE = 50  # DocumentController.scala:47
@@ -237,15 +231,13 @@ class NewsleakAPI:
         stem query 'databas'. Runs driver-side over the <= page_size
         returned bodies only, which come from _fetch (a pyarrow read
         of the table's files when it is a bare parquet scan).
-        ``with_total``: a scored spec on the indexed path counts its
-        hits in the same per-shard scoring that ranks the page
+        ``with_total``: on the indexed path the total is counted in the
+        same per-shard scoring that ranks the page
         (engine.ranked_heaps(count=True)) — one pass for page and
         total, in the driver for a small query, the total cached with
-        the heaps; an unscored spec counts from the index alone
-        (engine.count_hits, no text scan); the brute fallback pays one
-        matching_docs scan. ``drift``: ranked ids missing from the
-        table (stale index or filtered table), skipped from the page
-        and reported here."""
+        the heaps; the brute fallback pays one matching_docs scan.
+        ``drift``: ranked ids missing from the table (stale index or
+        filtered table), skipped from the page and reported here."""
         if page < 1 or page_size < 1:
             return _bad_request(
                 ValueError(f"page={page}, page_size={page_size}: both must be >= 1")
@@ -292,10 +284,7 @@ class NewsleakAPI:
                     }
                 )
         if with_total and total is None:
-            if self.index_dir is not None:
-                total = count_hits(self.spark, self.index_dir, spec)
-            else:
-                total = matching_docs(self.transcripts, spec, self.mode).count()
+            total = matching_docs(self.transcripts, spec, self.mode).count()
         return {"hits": total, "page": page, "docs": docs, "drift": drift}
 
     # -- GET /induceSubgraph ----------------------------------------------
@@ -310,6 +299,8 @@ class NewsleakAPI:
         """Top tool nodes over the filtered doc set + every pairwise
         edge in ONE self-join job (vs the reference's O(n²) sequential
         include-filtered aggregations, NetworkService.scala:152-175)."""
+        if n_nodes < 1:
+            return _bad_request(ValueError(f"n_nodes={n_nodes}: must be >= 1"))
         try:
             spec = compile_spec(query, time_range, mode=self.mode)
         except ValueError as e:
@@ -380,6 +371,8 @@ class NewsleakAPI:
     ) -> dict:
         if facet_key not in self.transcripts.columns:
             return _bad_request(ValueError(f"facet_key={facet_key!r}: not a column of the table"))
+        if size < 1:
+            return _bad_request(ValueError(f"size={size}: must be >= 1"))
         try:
             spec = compile_spec(query, time_range, mode=self.mode)
         except ValueError as e:
@@ -405,11 +398,6 @@ class NewsleakAPI:
         )
 
     # -- internals ----------------------------------------------------------
-
-    def _topk(self, spec: QuerySpec) -> DataFrame:
-        if self.index_dir is not None:
-            return search(self.spark, self.index_dir, spec)
-        return bm25_topk(self.transcripts, spec, mode=self.mode)
 
     def _ranked_rows(self, spec: QuerySpec, with_total: bool) -> tuple[list, int | None]:
         """Collected top-k rows for the spec and its total hit count
@@ -449,8 +437,8 @@ class NewsleakAPI:
             if not with_total:
                 total = None  # a skipping union shard undercounts
         else:
-            # brute / match_all fallback: plain top-k, exact through k
-            rows = self._topk(spec).collect()
+            # brute fallback: plain top-k, exact through k
+            rows = bm25_topk(self.transcripts, spec, mode=self.mode).collect()
             safe_rank = float("inf") if len(rows) < spec.k else spec.k
         with self._lock:
             if total is None and cached is not None:

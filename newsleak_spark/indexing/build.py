@@ -14,7 +14,7 @@
 Layout (SURVEY §4.2 "Partition pruning" — two-level):
   - ``shard``  = hash(doc_id) % n_shards: the document shard. Each
     shard holds a full mini-index, so query-time AND-intersection and
-    top-k are SHARD-LOCAL (mapPartitions/applyInPandas, no cross-shard
+    top-k are SHARD-LOCAL (engine.score_shards per shard, no cross-shard
     traffic except the final k-way merge). Shard count is the scale
     knob: 10^12 turns → O(10^4-10^5) shards.
   - ``bucket`` = hash(term) % n_term_buckets: the term partition column

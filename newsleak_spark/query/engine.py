@@ -3,22 +3,25 @@
 Execution shape (SURVEY §3.1 "Rebuild shape"):
   parse → QuerySpec → driver-side plan (_plan: dictionary lookup —
   df/idf per query term, partition-pruned parquet point reads — and
-  the per-shard scorer) → segment rows filtered to (bucket ∈ query
-  buckets, term ∈ query terms) — parquet PARTITION pruning on bucket +
-  row-group stats pruning on the term-sorted rows — → per-shard
-  scoring (numpy decode, block-range intersection for AND, block-max
-  WAND for the scored-union path; F2/F5 filters arrive shard-locally as
-  the shard's filter-surviving doc ids) → per-shard top-k heaps →
-  merge. Two executors run the same plan and scorer:
-  - Spark (_spark_scored): applyInPandas over Arrow batches, cogrouped
-    with the filtered docmeta, merged by TakeOrderedAndProject or by
-    the caller. search, search_heaps, matching_doc_ids and count_hits
-    always use it.
-  - local (_local_scored): a driver-side pyarrow read of the same rows
-    (and of the filtered docmeta), one scorer call per shard, no Spark
-    job. ranked_heaps (the getDocs path) routes a plan here when the
-    summed df of its fetched terms is at most LOCAL_MAX_POSTINGS;
-    larger plans run on Spark.
+  the per-shard scorer) → ONE shard task, score_shards: a pyarrow read
+  of the shards' segment rows filtered to (bucket ∈ query buckets,
+  term ∈ query terms) — hive PARTITION pruning on shard and bucket +
+  row-group stats pruning on the term-sorted rows — and, for filtered
+  or unscored specs, of their filter-surviving docmeta ids; then one
+  scorer call per shard (numpy decode, block-range intersection for
+  AND, block-max WAND for the scored-union path, docmeta ids minus
+  must_not postings for unscored specs) → per-shard top-k heaps →
+  merge. The shard task runs in one of two places:
+  - the driver, for every shard, over the reader's memoized datasets.
+    ranked_heaps (the getDocs path) does this when the summed df of a
+    plan's fetched terms is at most LOCAL_MAX_POSTINGS: no Spark job.
+  - Spark tasks (_spark_scored): spark.range over the shard ids spread
+    over at most defaultParallelism tasks, mapInArrow, each task
+    opening only its own shard (and query bucket) directories, then
+    reading and scoring one shard at a time. No segment bytes enter
+    the JVM and no row is shuffled; the caller merges
+    (TakeOrderedAndProject for search). search, search_heaps,
+    matching_doc_ids, count_hits and large ranked_heaps plans use it.
 
 Block-max WAND decodes every union term once and bounds each doc
 chunk by one rule: a term adds to the chunk's bound only when it has
@@ -91,6 +94,7 @@ class IndexReader:
         sum_dl = sum(int(m.stats["sum_dl"]) for m in mans)
         self.n_docs = float(n)
         self.avgdl = sum_dl / n if n else 0.0
+        self.n_shards = int(self.man.config["n_shards"])
         self.n_buckets = int(self.man.config["n_term_buckets"])
         # bigram-sidecar coverage: a pair (a,b) is covered — "bigram
         # absent ⇒ no adjacency anywhere" — only when EVERY part
@@ -105,7 +109,6 @@ class IndexReader:
             )
         else:
             self.bigram_cover = frozenset()
-        self._df_cache: dict[str, DataFrame] = {}
         self._pa_datasets: dict = {}
 
     def _pa_dataset(self, path: str):
@@ -145,10 +148,7 @@ class IndexReader:
             if not ts:
                 continue
             buckets = sorted({_bucket(t, self.n_buckets) for t in ts})
-            for part in self.parts:
-                dataset = self._pa_dataset(f"{part}/{sub}")
-                if dataset is None:
-                    continue
+            for dataset in self.part_datasets(sub):
                 tbl = dataset.to_table(
                     columns=["term", "df", "cf"],
                     filter=ds.field("bucket").isin(buckets) & ds.field("term").isin(ts),
@@ -160,73 +160,24 @@ class IndexReader:
                     out[t] = (pd_ + int(d), pc + int(c))
         return out
 
-    def _union_parts(self, sub: str) -> DataFrame:
-        # memoized per reader: spark.read.parquet re-lists leaf files and
-        # re-reads footers on every call (a driver-serial job per query
-        # that no executor count can parallelize). The reader is already
-        # invalidated on any index mutation (_cached_reader keys on the
-        # manifest generation), so a cached lazy DataFrame is exactly as
-        # fresh as the reader itself; per-query filters stack on top and
-        # still prune partitions/row groups.
-        df = self._df_cache.get(sub)
-        if df is None:
-            dfs = [self.spark.read.parquet(f"{p}/{sub}") for p in self.parts]
-            df = dfs[0]
-            for d in dfs[1:]:
-                df = df.unionByName(d)
-            self._df_cache[sub] = df
-        return df
-
-    def docmeta(self) -> DataFrame:
-        return self._union_parts("docmeta")
-
-    def segments_for(self, terms: list[str], with_positions: bool = True) -> DataFrame:
-        buckets = sorted({_bucket(t, self.n_buckets) for t in terms})
-        seg = self._union_parts("segments").filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-        if not with_positions:
-            # positions live in separate columns precisely so term-only
-            # queries never pay their IO (SURVEY §7.5.5)
-            seg = seg.drop("poscnt", "posflat")
-        return seg
+    def part_datasets(self, sub: str) -> list:
+        """Every part's memoized dataset at ``sub`` that has files: the
+        driver's file discovery for score_shards."""
+        return [d for d in (self._pa_dataset(f"{p}/{sub}") for p in self.parts) if d is not None]
 
     def segment_rows(self, terms: list[str], with_positions: bool) -> pd.DataFrame:
-        """segments_for as a driver-side pyarrow read of every part:
-        the same bucket partition pruning, term predicate and position
-        column pruning, no Spark job."""
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
+        """Every shard's segment rows of ``terms`` as score_shards reads
+        them: a driver-side pyarrow read, no Spark job."""
         buckets = sorted({_bucket(t, self.n_buckets) for t in terms})
-        flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
-        tables = []
-        for part in self.parts:
-            dataset = self._pa_dataset(f"{part}/segments")
-            if dataset is None:
-                continue  # an empty base part has no segment files
-            cols = [
-                c for c in dataset.schema.names
-                if with_positions or c not in ("poscnt", "posflat")
-            ]
-            tables.append(dataset.to_table(columns=cols, filter=flt))
-        return pa.concat_tables(tables).to_pandas() if tables else pd.DataFrame()
+        return _segment_rows(self.part_datasets("segments"), terms, buckets, with_positions)
 
-    def filtered_doc_ids(self, spec: QuerySpec) -> pd.DataFrame:
-        """(shard, doc_id) of every doc passing the spec's F2/F5 filters:
-        _apply_meta_filters over docmeta as a driver-side pyarrow read."""
-        import pyarrow as pa
-
+    def meta_filter(self, spec: QuerySpec):
+        """The spec's F2/F5 filters as a pyarrow expression over this
+        index's docmeta (brute.arrow_filter; None without filters)."""
         from newsleak_spark.query.brute import arrow_filter
 
-        tables = []
-        for part in self.parts:
-            dataset = self._pa_dataset(f"{part}/docmeta")
-            if dataset is None:
-                continue
-            flt = arrow_filter(self.spark, spec, dataset.schema.field("ts").type)
-            tables.append(dataset.to_table(columns=["shard", "doc_id"], filter=flt))
-        return pa.concat_tables(tables).to_pandas()
+        docmeta = self.part_datasets("docmeta")
+        return arrow_filter(self.spark, spec, docmeta[0].schema.field("ts").type) if docmeta else None
 
 
 def _bucket(term: str, n_buckets: int) -> int:
@@ -239,7 +190,7 @@ def _bucket(term: str, n_buckets: int) -> int:
 
 
 # ---------------------------------------------------------------------------
-# per-shard scorer (runs inside applyInPandas over Arrow batches)
+# per-shard scorer (called by score_shards, in the driver or a Spark task)
 # ---------------------------------------------------------------------------
 
 def _decode_term_blocks(rows: pd.DataFrame, want_positions: bool):
@@ -304,25 +255,23 @@ def _make_shard_scorer(
     neg_terms: tuple[str, ...] = (),
     phrase_plans: tuple | None = None,
 ):
-    """Returns the applyInPandas function scoring one shard's blocks
-    into rows (shard, doc_id, score, hits). The shard id lets the
-    serving layer cache the PER-SHARD top-k heaps and compute how deep
-    the merged ranking is exact (deep pagination without growing-k
-    re-runs).
+    """Returns ``score(rows, allowed=None)``, which scores one shard's
+    segment rows into (doc_id, score, hits) arrays. ``allowed`` is the
+    shard's sorted filter-surviving doc ids (None when no docmeta is
+    read), so filtering happens shard-locally and per-shard top-k
+    truncation stays on — no untruncated candidate set ever leaves a
+    shard. With no ``metas`` (match-all, filters-only, not-only specs)
+    the candidates are ``allowed`` minus the must_not postings, each at
+    score 1.0.
 
-    ``hits`` (the same on every row of a shard) is the shard's match
-    count after every filter, negation and phrase check, taken BEFORE
-    the top-k cut — the total rides the ranked job. The required path
-    (AND / phrase / must_not) holds the count anyway. The scored-union
-    path counts every chunk's surviving docs, which is exact only when
-    no chunk is skipped: ``count`` turns block-max skipping off (the
-    running heap truncation stays on); without it a union shard's
-    ``hits`` is a lower bound. A shard with no match emits no rows.
-
-    With metadata/date filters the function is used through cogroup:
-    the second frame carries the shard's FILTER-SURVIVING doc_ids, so
-    filtering happens shard-locally and per-shard top-k truncation
-    stays on — no untruncated candidate set ever leaves a shard.
+    ``hits`` is the shard's match count after every filter, negation
+    and phrase check, taken BEFORE the top-k cut — the total rides the
+    ranked job. The required path (AND / phrase / must_not) holds the
+    count anyway. The scored-union path counts every chunk's surviving
+    docs, which is exact only when no chunk is skipped: ``count`` turns
+    block-max skipping off (the running heap truncation stays on);
+    without it a union shard's ``hits`` is a lower bound. A shard with
+    no match returns empty arrays and 0.
 
     ``phrase_plans`` (one per phrase, aligned with ``phrases``):
     (tokens, pairs, fully) where pairs[i] = (i, bigram_term | None) —
@@ -354,20 +303,12 @@ def _make_shard_scorer(
     bigram_terms = {bt for _toks, pairs, _f in phrase_plans for _i, bt in pairs if bt}
     idf = {m.term: m.idf for m in metas}
     req_order = sorted(required, key=lambda m: (m.df, m.term))  # rarest first
+    empty = (np.empty(0, np.int64), np.empty(0, np.float64), 0)
 
-    def _score(pdf: pd.DataFrame, allowed_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "shard": np.empty(0, np.int32), "doc_id": np.empty(0, np.int64),
-                "score": np.empty(0), "hits": np.empty(0, np.int64),
-            }
-        )
-        allowed = None
-        if allowed_pdf is not None:
-            allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
-            if allowed.size == 0:
-                return empty
-        by_term = {t: g for t, g in pdf.groupby("term")}
+    def _score(rows: pd.DataFrame, allowed: np.ndarray | None = None):
+        if allowed is not None and allowed.size == 0:
+            return empty
+        by_term = {t: g for t, g in rows.groupby("term")} if len(rows) else {}
         # must_not postings never score: peel them off before any path
         # looks at by_term. Their blocks are decoded candidate-pruned
         # (only block ranges overlapping surviving candidates pay IO).
@@ -378,7 +319,10 @@ def _make_shard_scorer(
         if any(m.term not in by_term for m in required):
             return empty
 
-        if required:
+        if not metas:
+            cand = allowed[~_excluded_mask(allowed, neg)] if neg else allowed
+            out_docs, out_scores, hits = cand, np.ones(cand.size), cand.size
+        elif required:
             cand, per_term = _intersect_required(by_term)
             if cand is None or cand.size == 0:
                 return empty
@@ -422,21 +366,16 @@ def _make_shard_scorer(
             out_docs, out_scores, hits = _bmw_union(
                 by_term, [m for m in metas if m.term in by_term], allowed, neg_arrays
             )
-            if out_docs.size == 0:
-                return empty
-
+        if out_docs.size == 0:
+            return empty
         if truncate and out_docs.size > k:
             # per-shard top-k: order by the ROUNDED score (score_e6) the
             # global merge uses, so sub-1e-6 raw-float differences can't
             # drop a doc that ties at e6 precision but wins the doc_id
             # tie-break
-            order = np.lexsort((out_docs, -np.round(out_scores * 1e6)))[:k]
+            order = np.lexsort((out_docs, -_score_e6(out_scores)))[:k]
             out_docs, out_scores = out_docs[order], out_scores[order]
-        shard = np.int32(pdf["shard"].iloc[0])
-        return pd.DataFrame(
-            {"shard": shard, "doc_id": out_docs.astype(np.int64), "score": out_scores,
-             "hits": np.int64(hits)}
-        )
+        return out_docs.astype(np.int64), out_scores, hits
 
     def _member_mask(docs, allowed):
         idx = np.searchsorted(allowed, docs)
@@ -456,16 +395,6 @@ def _make_shard_scorer(
             ndocs = _decode_term_blocks(rows, False)[0]
             mask |= _member_mask(docs, ndocs)
         return mask
-
-    # applyInPandas arity is semantic: 1-arg = (pdf), 2-arg = (key, pdf);
-    # cogroup 2-arg = (left, right) — expose explicit wrappers
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(pdf, None)
-
-    def score_shard_cogrouped(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        return _score(left, right)
-
-    score_shard.cogrouped = score_shard_cogrouped
 
     # -- helpers bound to closure -------------------------------------------
 
@@ -690,12 +619,12 @@ def _make_shard_scorer(
             top_docs = np.concatenate([top_docs, uniq])
             top_scores = np.concatenate([top_scores, sc])
             if truncate and top_docs.size > k:
-                order = np.lexsort((top_docs, -np.round(top_scores * 1e6)))[:k]
+                order = np.lexsort((top_docs, -_score_e6(top_scores)))[:k]
                 top_docs, top_scores = top_docs[order], top_scores[order]
-                theta_e6 = float(np.round(top_scores * 1e6).min())
+                theta_e6 = float(_score_e6(top_scores).min())
         return top_docs, top_scores, hits
 
-    return score_shard
+    return _score
 
 
 # ---------------------------------------------------------------------------
@@ -765,32 +694,36 @@ CANDIDATE_SCHEMA = "shard int, doc_id long, score_e6 long, hits long"
 
 # Router: a ranked query whose summed combined df over every fetched
 # term is at most this many is scored in the driver; larger ones run as
-# a Spark job. Docmeta filters are not counted (a filtered 2M-turn
-# plan read docmeta in ~0.1 s). Measured crossover on the spec shapes
-# getDocs sends (BASELINE.md, "getDocs without a Spark job"; 200k- and
-# 2M-turn indexes, 4 cores): every shape at or below this bound ran
-# locally >= 17% faster; phrases cross first, tying at ~1.9M rows and
-# losing from 2.5M; AND, must_not and filtered plans tie at ~3.9M.
+# Spark shard tasks. Docmeta filters are not counted. Measured against
+# the shard-task Spark executor at 200k and 2M turns (BASELINE.md, "One
+# shard task behind every engine result"): AND, must_not and filtered
+# plans win in the driver to ~1.5M rows and tie at ~2M. Phrases that
+# verify positions lose from ~0.7M, but a bound that low would send the
+# AND and filtered plans between 0.7M and 1.5M rows to Spark.
 LOCAL_MAX_POSTINGS = 1_500_000
 
 
 @dataclass
 class _Plan:
-    """A scored spec's driver-side plan, shared by both executors."""
+    """A spec's driver-side plan: what score_shards reads and the
+    scorer it calls per shard."""
 
     scorer: object  # _make_shard_scorer's per-shard function
     fetch_terms: list[str]  # every term whose segment rows are read
-    filtered: bool  # score against the filter-surviving docmeta
+    buckets: list[int]  # the term buckets of fetch_terms
+    positions: bool  # read the position columns (phrase specs)
+    meta: bool  # read each shard's docmeta ids (filtered or unscored specs)
+    meta_filter: object  # the F2/F5 filters as a pyarrow expression, or None
     postings: int  # summed df of fetch_terms: the router's size estimate
 
 
 def _plan(rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool) -> _Plan | None:
-    """The driver-side step of the candidate pipeline for a scored
-    spec: dictionary lookup → term metadata → the shard scorer.
-    ``truncate`` keeps the per-shard top-k heap on (ranked search) or
-    off (full doc-set); ``count`` makes every shard's ``hits`` exact
-    (see _make_shard_scorer). None when the spec cannot match (a
-    required term absent from the collection → AND has no hits)."""
+    """The driver-side step of the candidate pipeline: dictionary
+    lookup → term metadata → the shard scorer. ``truncate`` keeps the
+    per-shard top-k heap on (ranked search) or off (full doc-set);
+    ``count`` makes every shard's ``hits`` exact (see
+    _make_shard_scorer). None when the spec cannot match (a required
+    term, or every should term, absent from the collection)."""
     if spec.phrases and not rd.man.config.get("with_positions", True):
         raise ValueError(
             f"index at {rd.index_dir} was built with with_positions=False; "
@@ -836,6 +769,8 @@ def _plan(rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool) -> _Pla
     if any(t not in dict_rows for t in required + bigram_fetch):
         return None
     all_terms = [t for t in all_terms if t in dict_rows]
+    if spec.scored() and not all_terms:
+        return None  # should-only: no should term occurs anywhere
     # a must_not term absent from the collection excludes nothing; a
     # negated boost term stays in the fetch list only once (the scorer
     # peels its postings into the neg set before any scoring looks)
@@ -854,63 +789,142 @@ def _plan(rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool) -> _Pla
         metas, spec.phrases, rd.avgdl, spec.k, truncate=truncate, count=count,
         safe_bounds=rd.multi, neg_terms=neg, phrase_plans=phrase_plans,
     )
-    postings = sum(dict_rows[t][0] for t in fetch_terms)
-    return _Plan(scorer, fetch_terms, filtered, postings)
-
-
-def _spark_scored(rd: IndexReader, spec: QuerySpec, plan: _Plan) -> DataFrame:
-    """The Spark executor: segment scan (bucket-pruned) → shard-local
-    scoring applyInPandas, cogrouped with the filtered docmeta when
-    F2/F5 filters are present (docmeta is shard-partitioned, so the
-    filter scan prunes columns + pushes predicates; with truncate on,
-    only k rows leave each shard). Returns (shard, doc_id, score_e6,
-    hits)."""
-    seg = rd.segments_for(plan.fetch_terms, with_positions=bool(spec.phrases))
-    schema = "shard int, doc_id long, score double, hits long"
-    if plan.filtered:
-        meta = _apply_meta_filters(rd.docmeta(), spec).select("shard", "doc_id")
-        scored = (
-            seg.groupBy("shard")
-            .cogroup(meta.groupBy("shard"))
-            .applyInPandas(plan.scorer.cogrouped, schema)
-        )
-    else:
-        scored = seg.groupBy("shard").applyInPandas(plan.scorer, schema)
-    return scored.select(
-        "shard", "doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6"), "hits"
+    return _Plan(
+        scorer,
+        fetch_terms,
+        sorted({_bucket(t, rd.n_buckets) for t in fetch_terms}),
+        positions=bool(spec.phrases),
+        meta=filtered or not metas,
+        meta_filter=rd.meta_filter(spec) if filtered else None,
+        postings=sum(dict_rows[t][0] for t in fetch_terms),
     )
 
 
-def _local_scored(rd: IndexReader, spec: QuerySpec, plan: _Plan) -> list[dict]:
-    """The local executor: the same scorer over a driver-side pyarrow
-    read of the same segment rows (and of the filter-surviving docmeta),
-    one call per shard, as applyInPandas / cogroup make them. Returns
-    the rows _spark_scored would collect, as dicts."""
-    seg = rd.segment_rows(plan.fetch_terms, with_positions=bool(spec.phrases))
-    if seg.empty:
-        return []
-    allowed = None
-    if plan.filtered:
-        meta = rd.filtered_doc_ids(spec)
-        allowed = {s: g[["doc_id"]] for s, g in meta.groupby("shard")}
-        no_docs = meta[["doc_id"]].iloc[:0]
-    frames = [
-        plan.scorer(rows) if allowed is None else plan.scorer.cogrouped(rows, allowed.get(s, no_docs))
-        for s, rows in seg.groupby("shard")
+def _segment_rows(
+    datasets: list, terms: list[str], buckets: list[int], with_positions: bool, shards=None
+) -> pd.DataFrame:
+    """The segment rows of ``terms``: hive partition pruning on bucket
+    (and shard), the term predicate pushed to the term-sorted parquet
+    row groups, and no position columns unless asked — positions live
+    in separate columns so term-only queries never pay their IO
+    (SURVEY §7.5.5)."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
+    if shards is not None:
+        flt &= ds.field("shard").isin(shards)
+    tables = [
+        d.to_table(
+            columns=[c for c in d.schema.names if with_positions or c not in ("poscnt", "posflat")],
+            filter=flt,
+        )
+        for d in datasets
     ]
-    out = pd.concat(frames)
-    return [
-        {"shard": int(s), "doc_id": int(d), "score_e6": int(e), "hits": int(h)}
-        for s, d, e, h in zip(out["shard"], out["doc_id"], _score_e6(out["score"]), out["hits"])
-    ]
+    return pa.concat_tables(tables).to_pandas() if tables else pd.DataFrame()
 
 
-def _score_e6(scores: pd.Series) -> np.ndarray:
-    """round(score · 1e6) as Spark's F.round computes it: HALF_UP
+def score_shards(plan: _Plan, shards, open_parts):
+    """The engine's one read-and-score, run in the driver for every
+    shard or in a Spark task for its own shards. Reads the plan's
+    segment rows and, for filtered or unscored specs, the
+    filter-surviving docmeta ids of ``shards`` with pyarrow from the
+    datasets ``open_parts(sub)`` returns for ``sub`` in {"segments",
+    "docmeta"}; calls the plan's scorer once per shard; rounds with
+    _score_e6. Returns a pyarrow Table (shard, doc_id, score_e6, hits)."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    shards = [int(s) for s in shards]
+    seg = pd.DataFrame()
+    if plan.fetch_terms:
+        seg = _segment_rows(
+            open_parts("segments"), plan.fetch_terms, plan.buckets, plan.positions, shards
+        )
+    rows = {int(s): g for s, g in seg.groupby("shard")} if len(seg) else {}
+    no_rows = seg.iloc[:0]
+    if plan.meta:
+        flt = ds.field("shard").isin(shards)
+        if plan.meta_filter is not None:
+            flt &= plan.meta_filter
+        tables = [d.to_table(columns=["shard", "doc_id"], filter=flt) for d in open_parts("docmeta")]
+        meta_shard = np.concatenate([np.empty(0, np.int32)] + [t["shard"].to_numpy() for t in tables])
+        meta_ids = np.concatenate([np.empty(0, np.int64)] + [t["doc_id"].to_numpy() for t in tables])
+        order = np.lexsort((meta_ids, meta_shard))
+        meta_shard, meta_ids = meta_shard[order], meta_ids[order]
+    out = [(np.empty(0, np.int32), np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64))]
+    for s in shards:
+        allowed = None
+        if plan.meta:
+            lo, hi = np.searchsorted(meta_shard, [s, s + 1])
+            allowed = meta_ids[lo:hi]
+        docs, scores, hits = plan.scorer(rows.get(s, no_rows), allowed)
+        out.append(
+            (np.full(docs.size, s, np.int32), docs, scores, np.full(docs.size, hits, np.int64))
+        )
+    shard, doc_id, score, hits = (np.concatenate(c) for c in zip(*out))
+    return pa.table({"shard": shard, "doc_id": doc_id, "score_e6": _score_e6(score), "hits": hits})
+
+
+def _task_scored(plan: _Plan, parts: list[str], shards: list[int]):
+    """One Spark task of the Spark executor: score_shards one shard at
+    a time, so a task holds one shard's rows however many it owns.
+    Its datasets are listed once per task from only the task's
+    ``shard=s`` docmeta and ``shard=s/bucket=b`` query-bucket segment
+    directories, with no walk of the rest of the hive tree. Yields
+    Arrow record batches."""
+    import functools
+    import os
+
+    import pyarrow.dataset as ds
+
+    @functools.cache
+    def open_parts(sub: str) -> list:
+        leaves = (
+            [f"shard={s}/bucket={b}" for s in shards for b in plan.buckets]
+            if sub == "segments"
+            else [f"shard={s}" for s in shards]
+        )
+        out = []
+        for part in parts:
+            base = os.path.join(part, sub)
+            files = [
+                os.path.join(base, leaf, f)
+                for leaf in leaves
+                if os.path.isdir(os.path.join(base, leaf))
+                for f in sorted(os.listdir(os.path.join(base, leaf)))
+                if not f.startswith(("_", "."))
+            ]
+            if files:
+                out.append(
+                    ds.dataset(files, format="parquet", partitioning="hive", partition_base_dir=base)
+                )
+        return out
+
+    for s in shards:
+        yield from score_shards(plan, [s], open_parts).to_batches()
+
+
+def _spark_scored(rd: IndexReader, plan: _Plan) -> DataFrame:
+    """The Spark executor: the shard ids as ``spark.range`` spread over
+    at most defaultParallelism tasks, each running _task_scored for its
+    own shards (mapInArrow). Segment bytes never enter the JVM and no
+    row is shuffled. Returns (shard, doc_id, score_e6, hits)."""
+    parts = rd.parts
+
+    def run(batches):
+        yield from _task_scored(plan, parts, [s for b in batches for s in b.column(0).to_pylist()])
+
+    n_tasks = min(rd.n_shards, rd.spark.sparkContext.defaultParallelism)
+    return rd.spark.range(rd.n_shards, numPartitions=n_tasks).mapInArrow(run, CANDIDATE_SCHEMA)
+
+
+def _score_e6(scores) -> np.ndarray:
+    """round(score · 1e6) as Spark SQL's round computes it: HALF_UP
     (np.round would round halves to even). Exact for these
     non-negative scores: x - floor(x) is exact in binary floating
     point."""
-    x = scores.to_numpy(dtype=np.float64) * 1e6
+    x = np.asarray(scores, dtype=np.float64) * 1e6
     lo = np.floor(x)
     return (lo + (x - lo >= 0.5)).astype(np.int64)
 
@@ -918,52 +932,41 @@ def _score_e6(scores: pd.Series) -> np.ndarray:
 def _candidates(
     spark: SparkSession, rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool = False
 ) -> DataFrame:
-    """The one candidate pipeline behind every engine DataFrame result
-    of a scored spec: _plan, then the Spark executor. Returns (shard,
-    doc_id, score_e6, hits); empty when the spec cannot match."""
+    """The one candidate pipeline behind every engine DataFrame result:
+    _plan, then the Spark executor. Returns (shard, doc_id, score_e6,
+    hits); empty when the spec cannot match."""
     plan = _plan(rd, spec, truncate, count)
     if plan is None:
         return spark.createDataFrame([], CANDIDATE_SCHEMA)
-    return _spark_scored(rd, spec, plan)
+    return _spark_scored(rd, plan)
 
 
 def ranked_heaps(
     spark: SparkSession, index_dir: str, spec: QuerySpec, count: bool = False
-) -> list[dict] | None:
+) -> list[dict]:
     """search_heaps' rows, collected, from whichever executor the
-    router picks: the driver-local one when the plan reads at most
-    LOCAL_MAX_POSTINGS segment rows (no Spark job), the Spark one
-    otherwise. Both run the same plan and scorer, so the rows are
-    identical. None for unscored specs."""
-    if not spec.scored():
-        return None
-    rd = _cached_reader(spark, index_dir)
+    router picks: score_shards over every shard in the driver when the
+    plan reads at most LOCAL_MAX_POSTINGS segment rows (no Spark job),
+    the Spark executor otherwise. The rows are identical. Unscored
+    specs get their per-shard top-k of the doc set at the pinned score
+    1e6 (search_heaps returns None for them)."""
+    rd = _reader(spark, index_dir, None)
     plan = _plan(rd, spec, truncate=True, count=count)
     if plan is None:
         return []
     if plan.postings <= LOCAL_MAX_POSTINGS:
-        return _local_scored(rd, spec, plan)
-    from newsleak_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
-    return [r.asDict() for r in _spark_scored(rd, spec, plan).collect()]
+        return score_shards(plan, range(rd.n_shards), rd.part_datasets).to_pylist()
+    return [r.asDict() for r in _spark_scored(rd, plan).collect()]
 
 
 def search(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> DataFrame:
     """Top-k search against a built index. Returns (doc_id, score_e6):
-    a scored spec ranks by its merged per-shard heaps (search_heaps);
-    match_all / filters-only / not-only specs return their doc set
-    (matching_doc_ids) at the pinned score 1e6."""
+    the merged per-shard heaps; match_all / filters-only / not-only
+    specs rank their doc set at the pinned score 1e6."""
     rd = _reader(spark, index_dir, reader)
-    heaps = search_heaps(spark, index_dir, spec, rd)
-    if heaps is not None:
-        out = heaps.drop("shard", "hits")
-    else:
-        out = matching_doc_ids(spark, index_dir, spec, rd).select(
-            "doc_id", F.lit(1_000_000).cast("long").alias("score_e6")
-        )
+    out = _candidates(spark, rd, spec, truncate=True).drop("shard", "hits")
     return out.orderBy(F.desc("score_e6"), F.asc("doc_id")).limit(spec.k)
 
 
@@ -1004,24 +1007,16 @@ def matching_doc_ids(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> DataFrame:
     """The UNTRUNCATED matching doc-id set from the INDEX alone — the
-    candidate pipeline with the per-shard top-k heap off for scored
-    specs; docmeta under the F2/F5 filters for unscored ones, minus
-    the union of the must_not terms' postings (anti-join — text never
-    read). Never touches the text column (docmeta scans are column-
-    pruned), unlike a brute matching_docs() scan which re-tokenizes
-    the collection; this is the index-accelerated doc-set feed for
-    aggregation endpoints (facets/timeline/network over a
+    candidate pipeline with the per-shard top-k heap off: the scored
+    candidates, or for unscored specs each shard's docmeta ids under
+    the F2/F5 filters minus the must_not terms' postings. Never
+    touches the text column, unlike a brute matching_docs() scan which
+    re-tokenizes the collection; this is the index-accelerated doc-set
+    feed for aggregation endpoints (facets/timeline/network over a
     query-filtered corpus) and for count_hits. Returns
     DataFrame(doc_id long)."""
     rd = _reader(spark, index_dir, reader)
-    if spec.scored():
-        return _candidates(spark, rd, spec, truncate=False).select("doc_id")
-    out = _apply_meta_filters(rd.docmeta(), spec).select("doc_id")
-    if spec.not_terms:
-        neg = QuerySpec(boost_terms=spec.not_terms)
-        ex = _candidates(spark, rd, neg, truncate=False).select("doc_id")
-        out = out.join(ex, "doc_id", "left_anti")
-    return out
+    return _candidates(spark, rd, spec, truncate=False).select("doc_id")
 
 
 def count_hits(
@@ -1030,12 +1025,3 @@ def count_hits(
     """Total matching-doc count (G9 / getTotalHits): the size of
     matching_doc_ids' doc set."""
     return matching_doc_ids(spark, index_dir, spec, reader).count()
-
-
-def _apply_meta_filters(meta: DataFrame, spec: QuerySpec) -> DataFrame:
-    # single source of truth for F2/F5 semantics: the brute path's
-    # filter (the engine's rank-identity oracle) — divergence here would
-    # silently break filtered-query parity
-    from newsleak_spark.query.brute import _apply_filters
-
-    return _apply_filters(meta, spec)

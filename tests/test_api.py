@@ -105,6 +105,24 @@ def test_get_docs_not_query(api, api_noindex, transcripts):
         assert "join" not in _re.findall(r"[a-z0-9]+", d["content"].lower())
 
 
+def test_get_docs_unscored_ranks_in_driver(spark, api, api_noindex):
+    """A match-all, filters-only or not-only page and its total are
+    ranked and counted in one driver-side pass on the indexed handle
+    (no Spark job) and equal the brute handle's pages and totals."""
+    from newsleak_spark.api import compile_spec
+
+    for query, roles in (("", ()), ("", ("user",)), ("-merge", ())):
+        fresh = NewsleakAPI(spark, api.transcripts, api.index_dir)
+        spec = compile_spec(query, roles=roles, k=7)
+        _, jobs = spark_jobs(spark, lambda: fresh._ranked_rows(spec, True))
+        assert jobs == 0, query
+        for page in (1, 2):
+            got = api.get_docs(query, roles=roles, page=page, page_size=7, highlight=False)
+            want = api_noindex.get_docs(query, roles=roles, page=page, page_size=7, highlight=False)
+            key = lambda out: (out["hits"], [(d["id"], d["score"]) for d in out["docs"]])
+            assert key(got) == key(want), (query, roles, page)
+
+
 def test_get_docs_pagination(api):
     all20 = api.get_docs("table", page_size=20, with_total=False)["docs"]
     p2 = api.get_docs("table", page=2, page_size=10, with_total=False)["docs"]
@@ -159,8 +177,9 @@ def test_count_hits_matches_matching_docs(spark, api, transcripts, index_dir):
 def test_ranked_heaps_executors_agree(spark, request, monkeypatch, executor, which):
     """engine.ranked_heaps returns search_heaps' collected rows (shard,
     doc_id, score_e6, hits) from either executor, with and without
-    count, on a single-part and a base+delta index; the local executor
-    runs no Spark job."""
+    count, on a single-part and a base+delta index — for unscored
+    specs the Spark executor's truncated doc set, which search_heaps
+    does not return; the local executor runs no Spark job."""
     d = request.getfixturevalue(which)
     monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 10**12 if executor == "local" else -1)
     cols = ["shard", "doc_id", "score_e6", "hits"]
@@ -168,9 +187,9 @@ def test_ranked_heaps_executors_agree(spark, request, monkeypatch, executor, whi
         for count in (False, True):
             got, jobs = spark_jobs(spark, lambda: engine.ranked_heaps(spark, d, spec, count=count))
             heaps = engine.search_heaps(spark, d, spec, count=count)
-            if heaps is None:
-                assert got is None, spec
-                continue
+            if heaps is None:  # unscored: the Spark executor's per-shard top-k of the doc set
+                rd = engine._cached_reader(spark, d)
+                heaps = engine._candidates(spark, rd, spec, truncate=True, count=count)
             want = sorted(tuple(r) for r in heaps.select(*cols).collect())
             assert sorted(tuple(r[c] for c in cols) for r in got) == want, (spec, count)
             if executor == "local":
@@ -212,8 +231,10 @@ def test_local_filters_match_spark_filters(spark, tmp_path):
     """The Arrow twin of the F2/F5 filters keeps exactly the docs
     Spark's keeps: role, tool (null tools never match), and ts bounds
     on a day boundary of a non-UTC session time zone, where cast(ts as
-    date) takes the session zone's date."""
-    from newsleak_spark.query.engine import IndexReader, _apply_meta_filters
+    date) takes the session zone's date. Every doc holds the query
+    term, so the shard task's doc set, in Spark tasks (matching_doc_ids)
+    and in the driver (ranked_heaps), is the filtered docmeta."""
+    from newsleak_spark.query.brute import _apply_filters
     from newsleak_spark.transcripts import TRANSCRIPT_SCHEMA
 
     utc = dt.timezone.utc
@@ -251,17 +272,15 @@ def test_local_filters_match_spark_filters(spark, tmp_path):
     try:
         for tz in ("UTC", "America/Los_Angeles"):
             spark.conf.set(conf, tz)
-            rd = IndexReader(spark, d)
             for spec in specs:
-                got = sorted(rd.filtered_doc_ids(spec)["doc_id"].tolist())
                 want = sorted(
-                    r["doc_id"] for r in _apply_meta_filters(rd.docmeta(), spec).collect()
+                    r["doc_id"]
+                    for r in _apply_filters(spark.read.parquet(f"{d}/docmeta"), spec).collect()
                 )
-                assert got == want, (tz, spec)
+                got = sorted(r["doc_id"] for r in engine.matching_doc_ids(spark, d, spec).collect())
+                local = sorted(r["doc_id"] for r in engine.ranked_heaps(spark, d, spec))
+                assert got == local == want, (tz, spec)
                 per_zone[tz, spec] = got
-                local = engine.ranked_heaps(spark, d, spec)
-                heaps = engine.search_heaps(spark, d, spec).collect()
-                assert sorted(r["doc_id"] for r in local) == sorted(r["doc_id"] for r in heaps)
     finally:
         spark.conf.set(conf, zone)
     assert per_zone["UTC", specs[0]] == [0, 1, 2]
@@ -330,6 +349,25 @@ def test_bad_aggregation_params_return_400(spark, api, api_noindex):
         )
         assert all(o["status"] == 400 for o in outs), outs
         assert "lod" in outs[0]["error"] and "no_such_column" in outs[2]["error"]
+        assert jobs == 0
+        assert (handle.agg_runs, len(handle._agg_cache)) == (runs, cached)
+
+
+def test_bad_size_or_n_nodes_returns_400(spark, api, api_noindex):
+    """A facet size or subgraph node count below 1 is a 400 on both
+    handles, before any job or cache entry, never a negative limit."""
+    for handle in (api, api_noindex):
+        runs, cached = handle.agg_runs, len(handle._agg_cache)
+        outs, jobs = spark_jobs(
+            spark,
+            lambda: [
+                handle.aggregate("role", size=0),
+                handle.aggregate("role", query="table", size=-1),
+                handle.induce_subgraph(n_nodes=0),
+                handle.induce_subgraph("table", n_nodes=-1),
+            ],
+        )
+        assert all(o["status"] == 400 and "must be >= 1" in o["error"] for o in outs), outs
         assert jobs == 0
         assert (handle.agg_runs, len(handle._agg_cache)) == (runs, cached)
 

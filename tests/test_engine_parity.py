@@ -169,7 +169,7 @@ def test_union_skipping_skips(spark, index_dir, monkeypatch, safe_bounds):
         )
         for t in terms
     ]
-    seg = rd.segments_for(terms, with_positions=False).toPandas()
+    seg = rd.segment_rows(terms, with_positions=False)
     shards = [g for _, g in seg.groupby("shard")]
     scored = [0]
     bm25 = engine._bm25
@@ -187,8 +187,8 @@ def test_union_skipping_skips(spark, index_dir, monkeypatch, safe_bounds):
         )
         rows = []
         for g in shards:
-            out = scorer(g.copy())
-            rows += [(-int(np.round(s * 1e6)), int(d)) for d, s in zip(out["doc_id"], out["score"])]
+            docs, scores, _hits = scorer(g.copy())
+            rows += [(-int(np.round(s * 1e6)), int(d)) for d, s in zip(docs, scores)]
         return sorted(rows)[:k], scored[0]
 
     got, n_truncated = top_k(True)

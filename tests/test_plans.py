@@ -1,7 +1,9 @@
 """Physical-plan audits: the scale properties SURVEY §4.2 claims are
 asserted on the actual Catalyst plans, so a refactor that silently
 de-optimizes a path (drops partition pruning, introduces a sort-merge
-join where a broadcast was intended, widens a scan) fails tests.
+join where a broadcast was intended, widens a scan) fails tests. The
+engine reads its segments and docmeta with pyarrow, so those pruning
+properties are asserted on the pyarrow reads themselves.
 
 These mirror the task's ".explain until it's the plan you'd want"
 discipline as executable invariants.
@@ -14,6 +16,7 @@ import pytest
 
 from newsleak_spark.indexing import IndexConfig, build_index
 from newsleak_spark.query import QuerySpec, bm25_topk
+from newsleak_spark.query import engine
 from newsleak_spark.query.engine import IndexReader, search
 
 
@@ -32,34 +35,84 @@ def index_dir(spark, transcripts, tmp_path_factory):
     return d
 
 
-def test_segment_scan_partition_pruned(spark, index_dir):
-    """A query's segment scan must touch only the buckets of its query
-    terms (hive partition pruning) and push the term predicate to
-    parquet row groups (the term-sorted layout makes min/max effective)."""
-    rd = IndexReader(spark, index_dir)
-    seg = rd.segments_for(["spark"], with_positions=False)
-    plan = plan_of(seg)
-    assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    pushed = plan.split("PushedFilters", 1)[1].split("]", 1)[0]
-    assert "term" in pushed, plan
+@pytest.fixture
+def reads(monkeypatch):
+    """Every pyarrow dataset read the engine makes, as (a file of the
+    dataset, the files left after partition pruning, columns, filter):
+    ``pyarrow.dataset.dataset`` wrapped so each dataset it opens
+    records its ``to_table`` calls."""
+    import pyarrow.dataset as ds
+
+    opened, log = ds.dataset, []
+
+    class Recorded:
+        def __init__(self, dataset):
+            self._dataset = dataset
+
+        def __getattr__(self, name):
+            return getattr(self._dataset, name)
+
+        def to_table(self, columns=None, filter=None):
+            files = [f.path for f in self._dataset.get_fragments(filter=filter)]
+            log.append((self._dataset.files[0], files, columns, filter))
+            return self._dataset.to_table(columns=columns, filter=filter)
+
+    monkeypatch.setattr(ds, "dataset", lambda *a, **kw: Recorded(opened(*a, **kw)))
+    return log
 
 
-def test_segment_scan_drops_position_columns(spark, index_dir):
-    """Term-only queries must not read position bytes (SURVEY §7.5.5)."""
+def shard_task_reads(spark, index_dir, reads, spec, task_shards):
+    """The reads of score_shards for ``spec``: (driver reads over every
+    shard, one Spark task's reads over ``task_shards``). The reader is
+    fresh so its memoized datasets open through ``reads``; the task's
+    reads are those of _task_scored, which _spark_scored runs per task."""
     rd = IndexReader(spark, index_dir)
-    plan = plan_of(rd.segments_for(["spark"], with_positions=False))
-    schema = plan.split("ReadSchema", 1)[1].splitlines()[0]
-    assert "posflat" not in schema and "poscnt" not in schema
+    plan = engine._plan(rd, spec, truncate=True, count=False)
+    del reads[:]
+    engine.score_shards(plan, range(rd.n_shards), rd.part_datasets)
+    driver = list(reads)
+    del reads[:]
+    list(engine._task_scored(plan, rd.parts, task_shards))
+    return plan, driver, list(reads)
+
+
+def test_segment_scan_partition_pruned(spark, index_dir, reads):
+    """A query's segment read opens only the directories of its query
+    terms' buckets, and pushes the term predicate to parquet row groups
+    (the term-sorted layout makes min/max effective). The driver reads
+    every shard at once; a Spark task reads its shards one at a time,
+    so it holds one shard's rows however many shards it owns."""
+    plan, driver, task = shard_task_reads(
+        spark, index_dir, reads, QuerySpec(terms=("spark",)), [1, 2]
+    )
+    (bucket,) = plan.buckets
+    for log, per_read in ((driver, [range(4)]), (task, [[1], [2]])):
+        seg = [r[1:] for r in log if "/segments/" in r[0]]
+        assert len(seg) == len(per_read), seg
+        for (files, _cols, flt), shards in zip(seg, per_read):
+            dirs = {f.split("/segments/", 1)[1].rsplit("/", 1)[0] for f in files}
+            assert dirs == {f"shard={s}/bucket={bucket}" for s in shards}, dirs
+            assert "term" in str(flt), flt
+
+
+def test_segment_scan_drops_position_columns(spark, index_dir, reads):
+    """Term-only queries must not read position bytes (SURVEY §7.5.5);
+    phrase queries read them."""
+    for spec, want in ((QuerySpec(terms=("spark",)), False), (QuerySpec(phrases=(("fast", "table"),)), True)):
+        _plan, driver, task = shard_task_reads(spark, index_dir, reads, spec, [0])
+        seg = [cols for first, _files, cols, _flt in driver + task if "/segments/" in first]
+        assert len(seg) == 2
+        for cols in seg:
+            assert ("poscnt" in cols and "posflat" in cols) == want, (spec, cols)
 
 
 def test_search_plan_shape(spark, index_dir):
-    """Engine search = one scoring exchange (shard-keyed applyInPandas)
-    + the global top-k merge; no sort-merge join anywhere."""
+    """Engine search = one shard task per partition of the shard ids
+    (MapInArrow over Range) + the global top-k merge: no Exchange below
+    the merge, no join anywhere."""
     plan = plan_of(search(spark, index_dir, QuerySpec(terms=("spark",), k=10)))
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-    # one exchange for the shard cogroup/groupBy; AQE may add none other
-    assert plan.count("Exchange") <= 2, plan
+    assert "TakeOrderedAndProject" in plan and "MapInArrow" in plan, plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
 
 
 def test_brute_bm25_plan_broadcast_only(spark, transcripts):
@@ -168,16 +221,18 @@ def test_a10_single_scan_broadcast_only(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_filtered_search_docmeta_pushdown(spark, index_dir):
-    """F2 filters reach the docmeta parquet scan as pushed predicates
-    (shard-local cogroup path)."""
+def test_filtered_search_docmeta_pushdown(spark, index_dir, reads):
+    """F2/F5 filters are part of the docmeta read: the role predicate
+    is pushed into it (with the shard predicate), only (shard, doc_id)
+    is read, and a Spark task opens only its own shards' docmeta."""
     spec = QuerySpec(terms=("spark",), role_filter=("user",), k=10)
-    plan = plan_of(search(spark, index_dir, spec))
-    assert "PushedFilters" in plan
-    # role IN (...) must appear in some scan's pushed filters
-    assert any(
-        "role" in seg.split("]", 1)[0] for seg in plan.split("PushedFilters")[1:]
-    ), plan
+    _plan, driver, task = shard_task_reads(spark, index_dir, reads, spec, [3])
+    for log, shards in ((driver, range(4)), (task, [3])):
+        (files, cols, flt), = [r[1:] for r in log if "/docmeta/" in r[0]]
+        assert cols == ["shard", "doc_id"]
+        assert "role" in str(flt) and "shard" in str(flt), flt
+        dirs = {f.split("/docmeta/", 1)[1].rsplit("/", 1)[0] for f in files}
+        assert dirs == {f"shard={s}" for s in shards}, dirs
 
 
 def test_decontaminate_no_cartesian(spark):

@@ -1,9 +1,8 @@
 """Scorer-level microbench for the BMW (block-max WAND) union path.
 
-Isolates the applyInPandas scorer function (decode + chunk iteration +
-scoring) from Spark job overhead: collects the union terms' segment
-blocks to the driver once, then times the raw scorer callable per
-shard. Two boost-only union shapes: ``dense`` (common terms, few chunks
+Isolates the per-shard scorer (decode + chunk iteration + scoring)
+from the read: reads the union terms' segment blocks in the driver
+once, then times the raw scorer callable per shard. Two boost-only union shapes: ``dense`` (common terms, few chunks
 skip) and ``selective`` (rare terms plus the hot term, most chunks
 skip). Run it alternately on two checkouts to A/B a scorer change;
 BASELINE.md records the union-scorer measurements.
@@ -63,7 +62,7 @@ def main() -> None:
         )
         for t in terms if t in dict_rows
     ]
-    pdf = rd.segments_for(terms, with_positions=False).toPandas()
+    pdf = rd.segment_rows(terms, with_positions=False)
     shards = [g for _, g in pdf.groupby("shard")]
     print(f"shape={shape} turns={n_turns} union_terms={len(metas)} shards={len(shards)} "
           f"blocks={len(pdf)} postings={int(pdf['n'].sum())}")

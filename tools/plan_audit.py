@@ -42,28 +42,31 @@ def main() -> None:
     import __spark_entry__ as entry
     from newsleak_spark import curation, facets, textops
     from newsleak_spark.query import QuerySpec, bm25_topk
-    from newsleak_spark.query.engine import IndexReader, search
+    from newsleak_spark.query.engine import matching_doc_ids, search
     from newsleak_spark.transcripts import load_transcripts
 
     t = load_transcripts(spark, SF)
     idx = entry._engine_index(spark, SF)
-    rd = IndexReader(spark, idx)
 
     sections = [
         (
-            "Engine search (segments + shard-local scoring)",
-            "ONE exchange (shard applyInPandas) + TakeOrderedAndProject "
-            "merge; no sort-merge join; segment scan partition-pruned to "
-            "the query terms' buckets with the term predicate pushed to "
-            "parquet row groups.",
+            "Engine search (shard tasks + top-k merge)",
+            "MapInArrow over Range(n_shards): each task runs the engine's "
+            "shard task (a pyarrow read of only its shards' query-bucket "
+            "directories, then the scorer) for its own shards; no Exchange "
+            "below the TakeOrderedAndProject merge; no join. Bucket, term "
+            "and position-column pruning happen in the pyarrow read "
+            "(tests/test_plans.py pins them there).",
             search(spark, idx, QuerySpec(terms=("spark",), k=10)),
         ),
         (
-            "Engine segment scan (term-only)",
-            "PartitionFilters on bucket, PushedFilters on term, ReadSchema "
-            "WITHOUT position columns (term-only queries never pay "
-            "position IO).",
-            rd.segments_for(["spark"], with_positions=False),
+            "Engine doc set (filtered not-only spec)",
+            "The same MapInArrow over Range: each shard's filter-surviving "
+            "docmeta ids minus the must_not postings inside the shard task; "
+            "no anti-join, no Exchange.",
+            matching_doc_ids(
+                spark, idx, QuerySpec(role_filter=("user",), not_terms=("spark",))
+            ),
         ),
         (
             "Brute BM25 (in-repo oracle path)",
