@@ -7,21 +7,26 @@ Execution shape (SURVEY §3.1 "Rebuild shape"):
   of the shards' segment rows filtered to (bucket ∈ query buckets,
   term ∈ query terms) — hive PARTITION pruning on shard and bucket +
   row-group stats pruning on the term-sorted rows — and, for filtered
-  or unscored specs, of their filter-surviving docmeta ids; then one
-  scorer call per shard (numpy decode, block-range intersection for
-  AND, block-max WAND for the scored-union path, docmeta ids minus
-  must_not postings for unscored specs) → per-shard top-k heaps →
-  merge. The shard task runs in one of two places:
+  or unscored specs, of their filter-surviving docmeta ids; then the
+  rows ordered once by (shard, term) and cut into zero-copy Arrow
+  slices, and one scorer call per shard on its {term: slice} (numpy
+  varint decode straight off each slice's binary data buffers,
+  block-range intersection for AND, block-max WAND for the
+  scored-union path, docmeta ids minus must_not postings for unscored
+  specs) → per-shard top-k heaps → merge. No pandas frame is built on
+  the way. The shard task runs in one of two places:
   - the driver, for every shard, over the reader's memoized datasets.
-    ranked_heaps (the getDocs path) does this when the summed df of a
-    plan's fetched terms is at most LOCAL_MAX_POSTINGS: no Spark job.
+    ranked_heaps (the getDocs path) and count_hits do this when the
+    summed df of a plan's fetched terms is at most LOCAL_MAX_POSTINGS:
+    no Spark job.
   - Spark tasks (_spark_scored): spark.range over the shard ids spread
     over at most defaultParallelism tasks, mapInArrow, each task
     opening only its own shard (and query bucket) directories, then
     reading and scoring one shard at a time. No segment bytes enter
     the JVM and no row is shuffled; the caller merges
     (TakeOrderedAndProject for search). search, search_heaps,
-    matching_doc_ids, count_hits and large ranked_heaps plans use it.
+    matching_doc_ids and the larger ranked_heaps and count_hits plans
+    use it.
 
 Block-max WAND decodes every union term once and bounds each doc
 chunk by one rule: a term adds to the chunk's bound only when it has
@@ -38,10 +43,10 @@ recomputed at query time (§7.5.3).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -165,7 +170,7 @@ class IndexReader:
         driver's file discovery for score_shards."""
         return [d for d in (self._pa_dataset(f"{p}/{sub}") for p in self.parts) if d is not None]
 
-    def segment_rows(self, terms: list[str], with_positions: bool) -> pd.DataFrame:
+    def segment_rows(self, terms: list[str], with_positions: bool) -> pa.Table:
         """Every shard's segment rows of ``terms`` as score_shards reads
         them: a driver-side pyarrow read, no Spark job."""
         buckets = sorted({_bucket(t, self.n_buckets) for t in terms})
@@ -193,22 +198,44 @@ def _bucket(term: str, n_buckets: int) -> int:
 # per-shard scorer (called by score_shards, in the driver or a Spark task)
 # ---------------------------------------------------------------------------
 
-def _decode_term_blocks(rows: pd.DataFrame, want_positions: bool):
-    """Concatenate a term's (possibly salted) block runs into one sorted
-    posting list: (docs, tfs, dls, positions|None).
+def _stream(col) -> np.ndarray:
+    """A binary column's values back to back, as uint8: for each chunk,
+    a zero-copy view of its data buffer from the chunk's first offset
+    to its last. The same bytes as joining the column's Python values,
+    without a bytes object per block; only a column of several chunks
+    is copied, once, to join them. The segment columns hold no nulls."""
+    parts = []
+    for a in col.chunks:
+        if len(a) == 0:
+            continue
+        _validity, offsets, data = a.buffers()
+        off = np.frombuffer(offsets, np.int32)  # parquet BYTE_ARRAY reads as binary
+        lo, hi = int(off[a.offset]), int(off[a.offset + len(a)])
+        if hi > lo:
+            parts.append(np.frombuffer(data, np.uint8)[lo:hi])
+    if not parts:
+        return np.empty(0, np.uint8)
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def _decode_term_blocks(rows: pa.Table, want_positions: bool):
+    """Concatenate a term's (possibly salted) block runs — an Arrow
+    slice of its segment rows — into one sorted posting list: (docs,
+    tfs, dls, positions|None).
 
     Varint streams are self-delimiting, so all blocks decode in ONE
-    pass per column (``b"".join`` → one vectorized varint_decode) —
-    no per-block Python loop. Doc deltas reset to absolute at block
-    starts; the reset points are recovered from the per-block ``n``.
-    positions is a ragged (counts, flat) pair, never Python lists.
+    pass per column (_stream's view of the column's data buffer → one
+    vectorized varint_decode) — no per-block Python loop and no copy
+    of the bytes. Doc deltas reset to absolute at block starts; the
+    reset points are recovered from the per-block ``n``. positions is
+    a ragged (counts, flat) pair, never Python lists.
     """
-    ns = rows["n"].to_numpy(dtype=np.int64)
+    ns = rows["n"].to_numpy().astype(np.int64)
     block_starts = np.concatenate(([0], np.cumsum(ns)))[:-1]
     # .view, not .astype: decoded values are < 2^63 (doc ids / tfs /
     # dls), so the reinterpret is exact and skips three full-array
     # copies per term in the bandwidth-bound scoring path
-    deltas = varint_decode(b"".join(rows["docs"])).view(np.int64)
+    deltas = varint_decode(_stream(rows["docs"])).view(np.int64)
     c = np.cumsum(deltas)
     base = c[block_starts] - deltas[block_starts]
     docs = c - np.repeat(base, ns)
@@ -217,27 +244,27 @@ def _decode_term_blocks(rows: pd.DataFrame, want_positions: bool):
     # decode as all-ones rather than an empty array so the shared
     # sort/gather below stays shape-correct (the values are never
     # used: sidecar terms are peeled off before any scoring)
-    tb, lb = b"".join(rows["tfs"]), b"".join(rows["dls"])
-    tfs = varint_decode(tb).view(np.int64) if tb else np.ones(docs.size, np.int64)
-    dls = varint_decode(lb).view(np.int64) if lb else np.ones(docs.size, np.int64)
+    tb, lb = _stream(rows["tfs"]), _stream(rows["dls"])
+    tfs = varint_decode(tb).view(np.int64) if tb.size else np.ones(docs.size, np.int64)
+    dls = varint_decode(lb).view(np.int64) if lb.size else np.ones(docs.size, np.int64)
     order = np.argsort(docs, kind="stable")  # salted runs interleave
     docs, tfs, dls = docs[order], tfs[order], dls[order]
     if want_positions:
-        counts, flat = decode_positions_flat(
-            b"".join(rows["poscnt"]), b"".join(rows["posflat"])
-        )
+        counts, flat = decode_positions_flat(_stream(rows["poscnt"]), _stream(rows["posflat"]))
         pos = gather_ragged(counts, flat.astype(np.int64), order)
     else:
         pos = None
     return docs, tfs, dls, pos
 
 
-def _prune_blocks_by_range(rows: pd.DataFrame, cand: np.ndarray) -> pd.DataFrame:
+def _prune_blocks_by_range(rows: pa.Table, cand: np.ndarray) -> pa.Table:
     """Keep only blocks whose [doc_first, doc_last] contains ≥1 candidate
-    (the AND-path analog of WAND skipping: candidate-driven block skip)."""
+    (the AND-path analog of WAND skipping: candidate-driven block skip).
+    ``rows`` itself when every block is kept."""
     lo = np.searchsorted(cand, rows["doc_first"].to_numpy())
     hi = np.searchsorted(cand, rows["doc_last"].to_numpy(), side="right")
-    return rows[hi > lo]
+    keep = hi > lo
+    return rows if keep.all() else rows.filter(pa.array(keep))
 
 
 def _bm25(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.ndarray:
@@ -255,12 +282,14 @@ def _make_shard_scorer(
     neg_terms: tuple[str, ...] = (),
     phrase_plans: tuple | None = None,
 ):
-    """Returns ``score(rows, allowed=None)``, which scores one shard's
-    segment rows into (doc_id, score, hits) arrays. ``allowed`` is the
-    shard's sorted filter-surviving doc ids (None when no docmeta is
-    read), so filtering happens shard-locally and per-shard top-k
-    truncation stays on — no untruncated candidate set ever leaves a
-    shard. With no ``metas`` (match-all, filters-only, not-only specs)
+    """Returns ``score(by_term, allowed=None)``, which scores one
+    shard's segment rows into (doc_id, score, hits) arrays.
+    ``by_term`` maps each fetched term to the zero-copy Arrow slice of
+    its rows in that shard (_by_shard_term; a term with no rows there
+    is absent). ``allowed`` is the shard's sorted filter-surviving doc
+    ids (None when no docmeta is read), so filtering happens
+    shard-locally and per-shard top-k truncation stays on — no
+    untruncated candidate set ever leaves a shard. With no ``metas`` (match-all, filters-only, not-only specs)
     the candidates are ``allowed`` minus the must_not postings, each at
     score 1.0.
 
@@ -305,10 +334,10 @@ def _make_shard_scorer(
     req_order = sorted(required, key=lambda m: (m.df, m.term))  # rarest first
     empty = (np.empty(0, np.int64), np.empty(0, np.float64), 0)
 
-    def _score(rows: pd.DataFrame, allowed: np.ndarray | None = None):
+    def _score(by_term: dict, allowed: np.ndarray | None = None):
         if allowed is not None and allowed.size == 0:
             return empty
-        by_term = {t: g for t, g in rows.groupby("term")} if len(rows) else {}
+        by_term = dict(by_term)  # the peels below leave the caller's dict whole
         # must_not postings never score: peel them off before any path
         # looks at by_term. Their blocks are decoded candidate-pruned
         # (only block ranges overlapping surviving candidates pay IO).
@@ -351,7 +380,7 @@ def _make_shard_scorer(
                     tfv, dlv = per_term[m.term]
                     score += _bm25(tfv, dlv, m.idf, avgdl)
                 elif m.term in by_term:
-                    score += _optional_contrib(by_term[m.term], cand)
+                    score += _optional_contrib(m.term, by_term[m.term], cand)
             out_docs, out_scores, hits = cand, score, cand.size
         else:
             # scored union (OR / boost-only): block-max WAND
@@ -390,7 +419,7 @@ def _make_shard_scorer(
         mask = np.zeros(docs.size, dtype=bool)
         for g in neg.values():
             rows = _prune_blocks_by_range(g, docs)
-            if len(rows) == 0:
+            if rows.num_rows == 0:
                 continue
             ndocs = _decode_term_blocks(rows, False)[0]
             mask |= _member_mask(docs, ndocs)
@@ -409,7 +438,7 @@ def _make_shard_scorer(
         dl_ref = dls
         for m in req_order[1:]:
             rows = _prune_blocks_by_range(by_term[m.term], cand)
-            if rows.empty:
+            if rows.num_rows == 0:
                 return None, None
             tdocs, ttfs, _tdls, _ = _decode_term_blocks(rows, False)
             idx = np.searchsorted(tdocs, cand)
@@ -463,7 +492,7 @@ def _make_shard_scorer(
                 if g is None:
                     return _empty_cand(per_term)
                 rows = _prune_blocks_by_range(g, cand)
-                if len(rows) == 0:
+                if rows.num_rows == 0:
                     return _empty_cand(per_term)
                 bdocs = _decode_term_blocks(rows, False)[0]
                 mask = _member_mask(cand, bdocs)
@@ -509,18 +538,17 @@ def _make_shard_scorer(
         keys = keys[shifted >= 0]
         return np.unique(keys)
 
-    def _optional_contrib(rows, cand):
+    def _optional_contrib(term, rows, cand):
         rows = _prune_blocks_by_range(rows, cand)
         out = np.zeros(cand.size, dtype=np.float64)
-        if rows.empty:
+        if rows.num_rows == 0:
             return out
         tdocs, ttfs, tdls, _ = _decode_term_blocks(rows, False)
         idx = np.searchsorted(tdocs, cand)
         idx_c = np.minimum(idx, tdocs.size - 1)
         mask = (idx < tdocs.size) & (tdocs[idx_c] == cand)
         sel = idx_c[mask]
-        t = rows["term"].iloc[0]
-        out[mask] = _bm25(ttfs[sel], tdls[sel], idf[t], avgdl)
+        out[mask] = _bm25(ttfs[sel], tdls[sel], idf[term], avgdl)
         return out
 
     def _bmw_union(by_term, present, allowed=None, neg_arrays=()):
@@ -553,12 +581,12 @@ def _make_shard_scorer(
                 # deltas change N/avgdl/df. For any dl, avgdl > 0:
                 # tf_norm ≤ tf(k1+1)/(tf+k1(1-b)), monotone in tf →
                 # bound from stored max_tf.
-                mt = r["max_tf"].to_numpy(dtype=np.float64)
+                mt = r["max_tf"].to_numpy().astype(np.float64)
                 bnds = m.idf * mt * (K1 + 1.0) / (mt + K1 * (1.0 - B))
             else:
-                bnds = r["max_score"].to_numpy(dtype=np.float64)
-            firsts = r["doc_first"].to_numpy(dtype=np.int64)
-            lasts = r["doc_last"].to_numpy(dtype=np.int64)
+                bnds = r["max_score"].to_numpy().astype(np.float64)
+            firsts = r["doc_first"].to_numpy().astype(np.int64)
+            lasts = r["doc_last"].to_numpy().astype(np.int64)
             terms.append((m, firsts, lasts, bnds, *_decode_term_blocks(r, False)[:3]))
         bounds = np.unique(
             np.concatenate([t[1] for t in terms] + [t[2] + 1 for t in terms])
@@ -802,13 +830,13 @@ def _plan(rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool) -> _Pla
 
 def _segment_rows(
     datasets: list, terms: list[str], buckets: list[int], with_positions: bool, shards=None
-) -> pd.DataFrame:
+) -> pa.Table:
     """The segment rows of ``terms``: hive partition pruning on bucket
     (and shard), the term predicate pushed to the term-sorted parquet
     row groups, and no position columns unless asked — positions live
     in separate columns so term-only queries never pay their IO
-    (SURVEY §7.5.5)."""
-    import pyarrow as pa
+    (SURVEY §7.5.5). Every part's rows in one table, with no columns
+    when there is no part to read."""
     import pyarrow.dataset as ds
 
     flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
@@ -821,7 +849,30 @@ def _segment_rows(
         )
         for d in datasets
     ]
-    return pa.concat_tables(tables).to_pandas() if tables else pd.DataFrame()
+    return pa.concat_tables(tables) if tables else pa.table({})
+
+
+def _by_shard_term(seg: pa.Table) -> dict[int, dict[str, pa.Table]]:
+    """shard → {term: that shard's rows of the term}: ``seg`` ordered
+    once by (shard, term) — the term dictionary-encoded, one lexsort,
+    one take — and cut into zero-copy slices. The sort is stable, so
+    a term's blocks keep their read order."""
+    if seg.num_rows == 0:
+        return {}
+    term = seg["term"].combine_chunks().dictionary_encode()
+    codes = term.indices.to_numpy()
+    shard = seg["shard"].to_numpy()
+    order = np.lexsort((codes, shard))
+    seg, codes, shard = seg.take(order), codes[order], shard[order]
+    starts = np.flatnonzero(
+        np.concatenate(([True], (codes[1:] != codes[:-1]) | (shard[1:] != shard[:-1])))
+    )
+    ends = np.append(starts[1:], codes.size)
+    names = term.dictionary.to_pylist()
+    out: dict[int, dict[str, pa.Table]] = {}
+    for lo, hi in zip(starts.tolist(), ends.tolist()):
+        out.setdefault(int(shard[lo]), {})[names[codes[lo]]] = seg.slice(lo, hi - lo)
+    return out
 
 
 def score_shards(plan: _Plan, shards, open_parts):
@@ -830,19 +881,18 @@ def score_shards(plan: _Plan, shards, open_parts):
     segment rows and, for filtered or unscored specs, the
     filter-surviving docmeta ids of ``shards`` with pyarrow from the
     datasets ``open_parts(sub)`` returns for ``sub`` in {"segments",
-    "docmeta"}; calls the plan's scorer once per shard; rounds with
-    _score_e6. Returns a pyarrow Table (shard, doc_id, score_e6, hits)."""
-    import pyarrow as pa
+    "docmeta"}; calls the plan's scorer once per shard on that shard's
+    {term: Arrow slice} (_by_shard_term); rounds with _score_e6.
+    Returns a pyarrow Table (shard, doc_id, score_e6, hits)."""
     import pyarrow.dataset as ds
 
     shards = [int(s) for s in shards]
-    seg = pd.DataFrame()
+    rows = {}
     if plan.fetch_terms:
         seg = _segment_rows(
             open_parts("segments"), plan.fetch_terms, plan.buckets, plan.positions, shards
         )
-    rows = {int(s): g for s, g in seg.groupby("shard")} if len(seg) else {}
-    no_rows = seg.iloc[:0]
+        rows = _by_shard_term(seg)
     if plan.meta:
         flt = ds.field("shard").isin(shards)
         if plan.meta_filter is not None:
@@ -858,7 +908,7 @@ def score_shards(plan: _Plan, shards, open_parts):
         if plan.meta:
             lo, hi = np.searchsorted(meta_shard, [s, s + 1])
             allowed = meta_ids[lo:hi]
-        docs, scores, hits = plan.scorer(rows.get(s, no_rows), allowed)
+        docs, scores, hits = plan.scorer(rows.get(s, {}), allowed)
         out.append(
             (np.full(docs.size, s, np.int32), docs, scores, np.full(docs.size, hits, np.int64))
         )
@@ -950,7 +1000,12 @@ def ranked_heaps(
     the Spark executor otherwise. The rows are identical. Unscored
     specs get their per-shard top-k of the doc set at the pinned score
     1e6 (search_heaps returns None for them)."""
-    rd = _reader(spark, index_dir, None)
+    return _routed(_reader(spark, index_dir, None), spec, count)
+
+
+def _routed(rd: IndexReader, spec: QuerySpec, count: bool) -> list[dict]:
+    """ranked_heaps' rows for ``rd``: the router's pick between the
+    driver and the Spark executor."""
     plan = _plan(rd, spec, truncate=True, count=count)
     if plan is None:
         return []
@@ -1023,5 +1078,8 @@ def count_hits(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> int:
     """Total matching-doc count (G9 / getTotalHits): the size of
-    matching_doc_ids' doc set."""
-    return matching_doc_ids(spark, index_dir, spec, reader).count()
+    matching_doc_ids' doc set, as the sum of each shard's exact
+    ``hits`` from the routed shard task at k=1 — in the driver, with no
+    Spark job, when the plan is under LOCAL_MAX_POSTINGS."""
+    rows = _routed(_reader(spark, index_dir, reader), replace(spec, k=1), count=True)
+    return sum({r["shard"]: r["hits"] for r in rows}.values())

@@ -123,6 +123,19 @@ def test_get_docs_unscored_ranks_in_driver(spark, api, api_noindex):
             assert key(got) == key(want), (query, roles, page)
 
 
+def test_count_hits_small_spec_runs_no_spark_job(spark, transcripts, index_dir):
+    """count_hits goes through the router: on this small index every
+    shape's count (AND, phrase, filtered, scored union, not-only,
+    must_not, absent term, match-all) comes from the driver-side shard
+    task with no Spark job, and equals the brute doc set's size."""
+    from newsleak_spark.query.engine import count_hits
+
+    for spec in SHAPES:
+        got, jobs = spark_jobs(spark, lambda: count_hits(spark, index_dir, spec))
+        assert jobs == 0, spec
+        assert got == matching_docs(transcripts, spec).count(), spec
+
+
 def test_get_docs_pagination(api):
     all20 = api.get_docs("table", page_size=20, with_total=False)["docs"]
     p2 = api.get_docs("table", page=2, page_size=10, with_total=False)["docs"]

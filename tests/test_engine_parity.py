@@ -147,6 +147,50 @@ def test_xxh64_matches_spark(spark):
         assert xxh64_signed(r["term"]) == r["h"], r["term"]
 
 
+def test_stream_view_matches_joined_bytes():
+    """engine._stream (the decode's view of a binary column) returns
+    the same bytes as joining the column's Python values, for every
+    shape a shard's term slice takes: a slice at a nonzero offset
+    (a view, no copy), a filtered table, a column of several chunks
+    (a base part's rows concatenated with a delta's) and a slice
+    across its chunk boundary, an empty slice, and an all-empty
+    column (a bigram sidecar's tf/dl streams)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from newsleak_spark.codec import varint_encode
+    from newsleak_spark.query import engine
+
+    rng = np.random.default_rng(7)
+
+    def part(n):
+        return pa.table({
+            "docs": [varint_encode(rng.integers(0, 1 << 20, rng.integers(1, 9))) for _ in range(n)],
+            "tfs": [b""] * n,
+        })
+
+    base = part(6)
+    both = pa.concat_tables([base, part(5)])
+    assert both["docs"].num_chunks == 2
+    cases = {
+        "offset slice": base.slice(2, 3),
+        "filtered": base.filter(pa.array([True, False, True, True, False, True])),
+        "multi-chunk": both,
+        "across chunks": both.slice(4, 4),
+        "empty slice": base.slice(3, 0),
+    }
+    for name, tbl in cases.items():
+        for col in ("docs", "tfs"):
+            got = engine._stream(tbl[col])
+            assert got.dtype == np.uint8, (name, col)
+            assert got.tobytes() == b"".join(tbl[col].to_pylist()), (name, col)
+    # the offset slice is a view of the column's data buffer
+    chunk = base.slice(2, 3)["docs"].chunk(0)
+    first = np.frombuffer(chunk.buffers()[1], np.int32)[chunk.offset]
+    view = engine._stream(base.slice(2, 3)["docs"])
+    assert view.__array_interface__["data"][0] == chunk.buffers()[2].address + first
+
+
 @pytest.mark.parametrize("safe_bounds", [False, True], ids=["stored", "safe"])
 def test_union_skipping_skips(spark, index_dir, monkeypatch, safe_bounds):
     """Block-max skipping in the scored union still skips: run driver-
@@ -169,8 +213,7 @@ def test_union_skipping_skips(spark, index_dir, monkeypatch, safe_bounds):
         )
         for t in terms
     ]
-    seg = rd.segment_rows(terms, with_positions=False)
-    shards = [g for _, g in seg.groupby("shard")]
+    shards = list(engine._by_shard_term(rd.segment_rows(terms, with_positions=False)).values())
     scored = [0]
     bm25 = engine._bm25
 
@@ -186,8 +229,8 @@ def test_union_skipping_skips(spark, index_dir, monkeypatch, safe_bounds):
             metas, (), rd.avgdl, k, truncate=truncate, safe_bounds=safe_bounds
         )
         rows = []
-        for g in shards:
-            docs, scores, _hits = scorer(g.copy())
+        for by_term in shards:
+            docs, scores, _hits = scorer(by_term)
             rows += [(-int(np.round(s * 1e6)), int(d)) for d, s in zip(docs, scores)]
         return sorted(rows)[:k], scored[0]
 

@@ -22,7 +22,12 @@ import numpy as np
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from newsleak_spark.indexing import IndexConfig, build_index  # noqa: E402
-from newsleak_spark.query.engine import IndexReader, TermMeta, _make_shard_scorer  # noqa: E402
+from newsleak_spark.query.engine import (  # noqa: E402
+    IndexReader,
+    TermMeta,
+    _by_shard_term,
+    _make_shard_scorer,
+)
 from newsleak_spark.query.spec import QuerySpec  # noqa: E402
 from newsleak_spark.session import get_spark  # noqa: E402
 from newsleak_spark.transcripts import synth_transcripts  # noqa: E402
@@ -62,17 +67,17 @@ def main() -> None:
         )
         for t in terms if t in dict_rows
     ]
-    pdf = rd.segment_rows(terms, with_positions=False)
-    shards = [g for _, g in pdf.groupby("shard")]
+    seg = rd.segment_rows(terms, with_positions=False)
+    shards = list(_by_shard_term(seg).values())
     print(f"shape={shape} turns={n_turns} union_terms={len(metas)} shards={len(shards)} "
-          f"blocks={len(pdf)} postings={int(pdf['n'].sum())}")
+          f"blocks={seg.num_rows} postings={sum(seg['n'].to_pylist())}")
 
     scorer = _make_shard_scorer(metas, (), rd.avgdl, spec.k, truncate=True)
     times = []
     for _ in range(reps):
         t0 = time.time()
-        for g in shards:
-            scorer(g.copy())
+        for by_term in shards:
+            scorer(by_term)
         times.append(time.time() - t0)
     times.sort()
     print(f"scorer wall sec per full pass: median={times[len(times)//2]:.4f} "
