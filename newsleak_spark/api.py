@@ -8,8 +8,9 @@ finds the same request/response shapes here (citations into
   get_docs         GET /getDocs    DocumentController.scala:276-346
                    (ranked top-k + pagination + whole-doc highlighting
                    + metadata enrichment; a small query is ranked in
-                   the driver and a page's bodies are one pyarrow read
-                   filtered on doc_id, so a page costs no Spark job)
+                   the driver and a page's bodies are a doc_id lookup
+                   in the driver's row-group cache, so a page costs no
+                   Spark job)
   induce_subgraph  GET /induceSubgraph  NetworkController →
                    NetworkService.scala:136-175 — node facet + ALL
                    edges in one self-join job instead of O(n²)
@@ -44,6 +45,7 @@ from newsleak_spark import facets as facets_mod
 from newsleak_spark.analysis import WORD_RE, analyze
 from newsleak_spark.query.brute import bm25_topk, matching_docs
 from newsleak_spark.query.engine import index_state_key, matching_doc_ids, ranked_heaps
+from newsleak_spark.query.rowcache import Source, open_source, read_rows
 from newsleak_spark.query.spec import QuerySpec, parse_query_string, parse_time_range
 
 DEFAULT_PAGE_SIZE = 50  # DocumentController.scala:47
@@ -56,16 +58,23 @@ _STANDARD_WORD_RE = re.compile(r"[0-9A-Za-z][0-9A-Za-z'’]*")
 _BODY_COLUMNS = ("doc_id", "conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 
-def _highlight_analyzed(text: str, targets: set[str], mode: str) -> str:
+def _highlight_analyzed(text: str, targets: set[str], mode: str, memo: dict | None = None) -> str:
     """Wrap every surface word whose ANALYZED form is a query term in
     <em> tags — what the ES highlighter does by re-analyzing the field.
-    Bounded: only called on the page's returned bodies."""
+    Bounded: only called on the page's returned bodies. ``memo`` maps a
+    surface word to whether it highlights; one memo shared by a page's
+    bodies analyzes each distinct word once per page."""
+    if memo is None:
+        memo = {}
 
     def repl(m: "re.Match[str]") -> str:
-        # any() not toks[0]: a surface word can analyze to several
-        # tokens ("o'brien" → ['o','brien']) and match on a later one
-        toks = analyze(m.group(0), mode)
-        return f"<em>{m.group(0)}</em>" if any(t in targets for t in toks) else m.group(0)
+        word = m.group(0)
+        hit = memo.get(word)
+        if hit is None:
+            # any() not toks[0]: a surface word can analyze to several
+            # tokens ("o'brien" → ['o','brien']) and match on a later one
+            hit = memo[word] = any(t in targets for t in analyze(word, mode))
+        return f"<em>{word}</em>" if hit else word
 
     word_re = WORD_RE if mode == "english" else _STANDARD_WORD_RE
     return word_re.sub(repl, text)
@@ -124,11 +133,12 @@ def _merge_heaps(hrows: list, k: int) -> tuple[list, float, int]:
     return merged, safe_rank, total
 
 
-def _parquet_dataset(df: DataFrame):
-    """A pyarrow dataset over exactly the files Spark scans for ``df``
-    when its analyzed plan is a bare, unpartitioned parquet relation
-    (``inputFiles()`` is then that scan's file snapshot); None for any
-    other plan (filtered, projected, DataSource V2, Iceberg, ...)."""
+def _parquet_dataset(df: DataFrame) -> Source | None:
+    """The cached-read Source of a pyarrow dataset over exactly the
+    files Spark scans for ``df`` when its analyzed plan is a bare,
+    unpartitioned parquet relation (``inputFiles()`` is then that scan's
+    file snapshot); None for any other plan (filtered, projected,
+    DataSource V2, Iceberg, ...)."""
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() != "LogicalRelation":
         return None
@@ -146,9 +156,9 @@ def _parquet_dataset(df: DataFrame):
     import pyarrow.fs as pafs
 
     fs = pafs.FileSystem.from_uri(files[0])[0]
-    return ds.dataset(
+    return open_source(ds.dataset(
         [pafs.FileSystem.from_uri(f)[1] for f in files], format="parquet", filesystem=fs
-    )
+    ))
 
 
 def _bad_request(e: ValueError) -> dict:
@@ -255,6 +265,7 @@ class NewsleakAPI:
         scores = {r["doc_id"]: r["score_e6"] / 1e6 for r in rows}
         docs: list[dict] = []
         drift = 0
+        memo: dict = {}  # surface word -> highlighted, for this page's bodies
         if ids:
             by_id = self._fetch(ids)
             for did in ids:  # preserve rank order
@@ -270,7 +281,7 @@ class NewsleakAPI:
                         "score": scores[did],
                         "content": r["text"],
                         "highlighted": (
-                            _highlight_analyzed(r["text"], targets, self.mode)
+                            _highlight_analyzed(r["text"], targets, self.mode, memo)
                             if highlight and targets
                             else r["text"]
                         ),
@@ -452,10 +463,10 @@ class NewsleakAPI:
 
     def _fetch(self, ids: list[int]) -> dict:
         """doc_id → body row for a page's ids. A bare parquet table is
-        read with pyarrow: one dataset read filtered on ``doc_id``.
-        Row-group min/max statistics skip the row groups whose id range
-        holds none of the page; a page spread over every row group reads
-        the whole table, as the Spark fetch does. ``ts`` converts as Row
+        read with pyarrow through the row-group cache (read_rows keyed
+        on ``doc_id``): row-group min/max statistics skip the row groups
+        whose id range holds none of the page, and a row group is
+        decoded once, not once per page. ``ts`` converts as Row
         collection does (the column type's fromInternal on epoch
         micros), so rows equal the Spark fetch's. Any other table plan
         keeps the Spark ``isin`` fetch."""
@@ -474,9 +485,8 @@ class NewsleakAPI:
         if dataset is None:
             return {r["doc_id"]: r for r in t.filter(F.col("doc_id").isin(ids)).collect()}
         import pyarrow as pa
-        import pyarrow.dataset as ds
 
-        tbl = dataset.to_table(columns=list(_BODY_COLUMNS), filter=ds.field("doc_id").isin(ids))
+        tbl = read_rows(dataset, "doc_id", ids, list(_BODY_COLUMNS))
         ts = tbl["ts"]
         micros = ts.cast(pa.timestamp("us", ts.type.tz)).cast(pa.int64())
         tbl = tbl.set_column(tbl.schema.get_field_index("ts"), "ts", micros)

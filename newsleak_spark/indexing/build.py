@@ -401,8 +401,7 @@ def _encode_bucket_fn(cfg: IndexConfig, n_docs: float, avgdl: float):
         # position; gather_ragged permutes the ragged pair in one
         # vectorized pass instead. Run order inside the group is
         # code order, not lexicographic — irrelevant: blocks are per
-        # term, and the post-encode sortWithinPartitions lays rows out
-        # term-sorted for parquet row-group pruning.
+        # term, and readers never rely on a row order within a file.
         table = table.combine_chunks()
         n = table.num_rows
         term_enc = pc.dictionary_encode(table.column("term").chunk(0))
@@ -776,7 +775,10 @@ def build_index(
             _encode_bucket_fn(cfg, n_docs, avgdl), BLOCK_SCHEMA
         )
         # second (cheap) shuffle: co-locate each (shard,bucket) partition's
-        # blocks and lay rows out term-sorted for parquet row-group pruning
+        # blocks. The planned partitionBy write sorts by the partition
+        # columns and drops this sort, so files are NOT term-sorted; a
+        # sort led by "shard", "bucket" would keep it, at +2.5% segment
+        # bytes on the 4k-turn perfbench index (CHANGES.md).
         (
             blocks.repartition("shard", "bucket")
             .sortWithinPartitions("term", "salt", "block_seq")

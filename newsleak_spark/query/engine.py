@@ -2,31 +2,35 @@
 
 Execution shape (SURVEY §3.1 "Rebuild shape"):
   parse → QuerySpec → driver-side plan (_plan: dictionary lookup —
-  df/idf per query term, partition-pruned parquet point reads — and
-  the per-shard scorer) → ONE shard task, score_shards: a pyarrow read
-  of the shards' segment rows filtered to (bucket ∈ query buckets,
-  term ∈ query terms) — hive PARTITION pruning on shard and bucket +
-  row-group stats pruning on the term-sorted rows — and, for filtered
-  or unscored specs, of their filter-surviving docmeta ids; then the
-  rows ordered once by (shard, term) and cut into zero-copy Arrow
-  slices, and one scorer call per shard on its {term: slice} (numpy
-  varint decode straight off each slice's binary data buffers,
-  block-range intersection for AND, block-max WAND for the
-  scored-union path, docmeta ids minus must_not postings for unscored
-  specs) → per-shard top-k heaps → merge. No pandas frame is built on
-  the way. The shard task runs in one of two places:
-  - the driver, for every shard, over the reader's memoized datasets.
-    ranked_heaps (the getDocs path) and count_hits do this when the
-    summed df of a plan's fetched terms is at most LOCAL_MAX_POSTINGS:
-    no Spark job.
+  df/idf per query term, partition-pruned point reads — and the
+  per-shard scorer) → ONE shard task, score_shards: the shards' segment
+  rows of (bucket ∈ query buckets, term ∈ query terms) — hive PARTITION
+  pruning on shard and bucket — and, for filtered or unscored specs,
+  their filter-surviving docmeta ids (a pyarrow read); the rows are cut
+  per (shard, term) into zero-copy Arrow slices, and the scorer runs
+  once per shard on its {term: slice} (numpy varint decode straight off
+  each slice's binary data buffers, block-range intersection for AND,
+  block-max WAND for the scored-union path, docmeta ids minus must_not
+  postings for unscored specs) → per-shard top-k heaps → merge. No
+  pandas frame is built on the way. The shard task runs in one of two
+  places:
+  - the driver, for every shard, over the reader's memoized Sources.
+    Dictionary and segment rows come from the process-wide row-group
+    cache (rowcache.py): each parquet row group is decoded once, kept
+    ordered by term with a term → rows directory, and a lookup is a
+    dict probe and a slice. ranked_heaps (the getDocs path) and
+    count_hits run here when the summed df of a plan's fetched terms is
+    at most LOCAL_MAX_POSTINGS: no Spark job.
   - Spark tasks (_spark_scored): spark.range over the shard ids spread
     over at most defaultParallelism tasks, mapInArrow, each task
     opening only its own shard (and query bucket) directories, then
-    reading and scoring one shard at a time. No segment bytes enter
-    the JVM and no row is shuffled; the caller merges
-    (TakeOrderedAndProject for search). search, search_heaps,
-    matching_doc_ids and the larger ranked_heaps and count_hits plans
-    use it.
+    reading parquet (the term predicate pushed to row groups) and
+    scoring one shard at a time. No segment bytes enter the JVM and no
+    row is shuffled; the caller merges (TakeOrderedAndProject for
+    search). search, search_heaps, matching_doc_ids and the larger
+    ranked_heaps and count_hits plans use it.
+  Segment files are not term-sorted (the build's partitionBy write
+  drops its sort), so neither place may rely on a row order in a file.
 
 Block-max WAND decodes every union term once and bounds each doc
 chunk by one rule: a term adds to the chunk's bound only when it has
@@ -52,6 +56,8 @@ from pyspark.sql import functions as F
 
 from newsleak_spark.codec import decode_positions_flat, gather_ragged, varint_decode
 from newsleak_spark.indexing.manifest import Manifest
+from newsleak_spark.query import rowcache
+from newsleak_spark.query.rowcache import Source, open_source, read_rows, read_runs
 from newsleak_spark.query.spec import QuerySpec
 
 K1 = 1.2
@@ -116,12 +122,12 @@ class IndexReader:
             self.bigram_cover = frozenset()
         self._pa_datasets: dict = {}
 
-    def _pa_dataset(self, path: str):
-        """The pyarrow dataset at ``path``, or None when the part has no
-        files there (no or an empty sidecar, an empty base part). Dataset
-        discovery walks the hive partition tree — driver-serial IO worth
-        paying once per reader, not once per query (invalidation rides
-        the reader's)."""
+    def _pa_dataset(self, path: str) -> Source | None:
+        """The cached-read Source of the pyarrow dataset at ``path``, or
+        None when the part has no files there (no or an empty sidecar, an
+        empty base part). Dataset discovery walks the hive partition tree
+        and stats every file — driver-serial IO worth paying once per
+        reader, not once per query (invalidation rides the reader's)."""
         import os
 
         import pyarrow.dataset as ds
@@ -130,20 +136,18 @@ class IndexReader:
             dataset = None
             if os.path.isdir(path):
                 dataset = ds.dataset(path, format="parquet", partitioning="hive")
-            self._pa_datasets[path] = dataset if dataset is not None and dataset.files else None
+            self._pa_datasets[path] = open_source(dataset) if dataset is not None and dataset.files else None
         return self._pa_datasets[path]
 
     def dictionary_rows(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """term → (df, cf): a driver-side pyarrow point read of ONLY the
-        buckets the query terms hash to (hive partition pruning) with a
-        term predicate pushed to parquet row groups — the term-dictionary
-        lookup of a search engine, not a Spark job. The per-bucket
-        dictionary partition stays small at any collection size because
-        n_term_buckets scales with the term count."""
+        """term → (df, cf): a driver-side lookup in ONLY the buckets the
+        query terms hash to (hive partition pruning, then row-group term
+        statistics), served from the row-group cache — the
+        term-dictionary lookup of a search engine, not a Spark job. The
+        per-bucket dictionary partition stays small at any collection
+        size because n_term_buckets scales with the term count."""
         if not terms:
             return {}
-        import pyarrow.dataset as ds
-
         from newsleak_spark.indexing.build import BIGRAM_SEP
 
         unigrams = [t for t in terms if BIGRAM_SEP not in t]
@@ -153,11 +157,8 @@ class IndexReader:
             if not ts:
                 continue
             buckets = sorted({_bucket(t, self.n_buckets) for t in ts})
-            for dataset in self.part_datasets(sub):
-                tbl = dataset.to_table(
-                    columns=["term", "df", "cf"],
-                    filter=ds.field("bucket").isin(buckets) & ds.field("term").isin(ts),
-                )
+            for src in self.part_datasets(sub):
+                tbl = read_rows(src, "term", ts, ["term", "df", "cf"], {"bucket": buckets})
                 for t, d, c in zip(
                     tbl["term"].to_pylist(), tbl["df"].to_pylist(), tbl["cf"].to_pylist()
                 ):
@@ -165,16 +166,21 @@ class IndexReader:
                     out[t] = (pd_ + int(d), pc + int(c))
         return out
 
-    def part_datasets(self, sub: str) -> list:
-        """Every part's memoized dataset at ``sub`` that has files: the
-        driver's file discovery for score_shards."""
+    def part_datasets(self, sub: str) -> list[Source]:
+        """Every part's memoized Source at ``sub`` that has files: the
+        driver's file discovery for score_shards and dictionary_rows,
+        whose segment and dictionary reads go through the row-group
+        cache."""
         return [d for d in (self._pa_dataset(f"{p}/{sub}") for p in self.parts) if d is not None]
 
     def segment_rows(self, terms: list[str], with_positions: bool) -> pa.Table:
         """Every shard's segment rows of ``terms`` as score_shards reads
-        them: a driver-side pyarrow read, no Spark job."""
+        them in the driver (the row-group cache), in one table: no Spark
+        job."""
         buckets = sorted({_bucket(t, self.n_buckets) for t in terms})
-        return _segment_rows(self.part_datasets("segments"), terms, buckets, with_positions)
+        by_shard = _segment_rows(self.part_datasets("segments"), terms, buckets, with_positions)
+        runs = [rows for by_term in by_shard.values() for rows in by_term.values()]
+        return pa.concat_tables(runs) if runs else pa.table({})
 
     def meta_filter(self, spec: QuerySpec):
         """The spec's F2/F5 filters as a pyarrow expression over this
@@ -182,7 +188,7 @@ class IndexReader:
         from newsleak_spark.query.brute import arrow_filter
 
         docmeta = self.part_datasets("docmeta")
-        return arrow_filter(self.spark, spec, docmeta[0].schema.field("ts").type) if docmeta else None
+        return arrow_filter(self.spark, spec, docmeta[0].dataset.schema.field("ts").type) if docmeta else None
 
 
 def _bucket(term: str, n_buckets: int) -> int:
@@ -692,6 +698,13 @@ def index_state_key(index_dir: str) -> tuple:
     return (gen, mtime, dmtime)
 
 
+def row_cache_stats() -> dict:
+    """The driver's row-group cache counters (rowcache.ROW_CACHE):
+    hits, misses, evictions, resident entries and bytes, and the
+    budget."""
+    return rowcache.ROW_CACHE.stats()
+
+
 def _cached_reader(spark: SparkSession, index_dir: str) -> IndexReader:
     """Reader memo, one entry per index_dir — repeated queries skip
     manifest/config re-reads and dataset discovery, and readers of
@@ -829,27 +842,34 @@ def _plan(rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool) -> _Pla
 
 
 def _segment_rows(
-    datasets: list, terms: list[str], buckets: list[int], with_positions: bool, shards=None
-) -> pa.Table:
-    """The segment rows of ``terms``: hive partition pruning on bucket
-    (and shard), the term predicate pushed to the term-sorted parquet
-    row groups, and no position columns unless asked — positions live
-    in separate columns so term-only queries never pay their IO
-    (SURVEY §7.5.5). Every part's rows in one table, with no columns
-    when there is no part to read."""
-    import pyarrow.dataset as ds
-
-    flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
-    if shards is not None:
-        flt &= ds.field("shard").isin(shards)
-    tables = [
-        d.to_table(
-            columns=[c for c in d.schema.names if with_positions or c not in ("poscnt", "posflat")],
-            filter=flt,
-        )
-        for d in datasets
-    ]
-    return pa.concat_tables(tables) if tables else pa.table({})
+    sources: list[Source], terms: list[str], buckets: list[int], with_positions: bool, shards=None
+) -> dict[int, dict[str, pa.Table]]:
+    """shard → {term: that shard's segment rows of the term}: hive
+    partition pruning on bucket (and shard), then the term rows — from
+    the row-group cache as zero-copy slices (read_runs) for the
+    driver's Sources, one filtered parquet read cut by _by_shard_term
+    for a Spark task's — with no position columns unless asked;
+    positions live in separate columns so term-only queries never pay
+    their IO (SURVEY §7.5.5). A term's rows from several parts or row
+    groups are concatenated in part, then file order."""
+    part = {"bucket": buckets} if shards is None else {"bucket": buckets, "shard": shards}
+    runs: dict[int, dict[str, list]] = {}
+    for s in sources:
+        cols = [c for c in s.dataset.schema.names if with_positions or c not in ("poscnt", "posflat")]
+        if s.stats is None:
+            got = (
+                (shard, t, rows)
+                for shard, by_term in _by_shard_term(read_rows(s, "term", terms, cols, part)).items()
+                for t, rows in by_term.items()
+            )
+        else:
+            got = ((p["shard"], t, rows) for p, t, rows in read_runs(s, "term", terms, cols, part))
+        for shard, t, rows in got:
+            runs.setdefault(shard, {}).setdefault(t, []).append(rows)
+    return {
+        shard: {t: v[0] if len(v) == 1 else pa.concat_tables(v) for t, v in by_term.items()}
+        for shard, by_term in runs.items()
+    }
 
 
 def _by_shard_term(seg: pa.Table) -> dict[int, dict[str, pa.Table]]:
@@ -880,24 +900,24 @@ def score_shards(plan: _Plan, shards, open_parts):
     shard or in a Spark task for its own shards. Reads the plan's
     segment rows and, for filtered or unscored specs, the
     filter-surviving docmeta ids of ``shards`` with pyarrow from the
-    datasets ``open_parts(sub)`` returns for ``sub`` in {"segments",
-    "docmeta"}; calls the plan's scorer once per shard on that shard's
-    {term: Arrow slice} (_by_shard_term); rounds with _score_e6.
+    Sources ``open_parts(sub)`` returns for ``sub`` in {"segments",
+    "docmeta"} (the driver's segments come from the row-group cache);
+    calls the plan's scorer once per shard on that shard's {term: Arrow
+    slice} (_segment_rows); rounds with _score_e6.
     Returns a pyarrow Table (shard, doc_id, score_e6, hits)."""
     import pyarrow.dataset as ds
 
     shards = [int(s) for s in shards]
     rows = {}
     if plan.fetch_terms:
-        seg = _segment_rows(
+        rows = _segment_rows(
             open_parts("segments"), plan.fetch_terms, plan.buckets, plan.positions, shards
         )
-        rows = _by_shard_term(seg)
     if plan.meta:
         flt = ds.field("shard").isin(shards)
         if plan.meta_filter is not None:
             flt &= plan.meta_filter
-        tables = [d.to_table(columns=["shard", "doc_id"], filter=flt) for d in open_parts("docmeta")]
+        tables = [s.dataset.to_table(columns=["shard", "doc_id"], filter=flt) for s in open_parts("docmeta")]
         meta_shard = np.concatenate([np.empty(0, np.int32)] + [t["shard"].to_numpy() for t in tables])
         meta_ids = np.concatenate([np.empty(0, np.int64)] + [t["doc_id"].to_numpy() for t in tables])
         order = np.lexsort((meta_ids, meta_shard))
@@ -921,8 +941,8 @@ def _task_scored(plan: _Plan, parts: list[str], shards: list[int]):
     a time, so a task holds one shard's rows however many it owns.
     Its datasets are listed once per task from only the task's
     ``shard=s`` docmeta and ``shard=s/bucket=b`` query-bucket segment
-    directories, with no walk of the rest of the hive tree. Yields
-    Arrow record batches."""
+    directories, with no walk of the rest of the hive tree, and read
+    parquet directly (uncached Sources). Yields Arrow record batches."""
     import functools
     import os
 
@@ -946,9 +966,9 @@ def _task_scored(plan: _Plan, parts: list[str], shards: list[int]):
                 if not f.startswith(("_", "."))
             ]
             if files:
-                out.append(
+                out.append(Source(
                     ds.dataset(files, format="parquet", partitioning="hive", partition_base_dir=base)
-                )
+                ))
         return out
 
     for s in shards:

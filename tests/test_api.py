@@ -717,3 +717,148 @@ def test_reader_cache_keeps_one_reader_per_index(spark, index_dir, tmp_path):
     assert b2 is not b
     assert _cached_reader(spark, index_dir) is a
     assert _cached_reader(spark, other) is b2
+
+
+# getDocs requests over every page shape the row-group cache serves:
+# dictionary, segment (with and without positions, filtered, negated)
+# and body reads
+CACHE_PAGES = [
+    dict(query="table"),
+    dict(query="merge window", with_total=False),
+    dict(query='"fast table"'),
+    dict(query="table -join", page=2, page_size=5),
+    dict(query="table", roles=("user",)),
+    dict(query="spark", page=3, page_size=4),
+    dict(query="zzabsentzz"),
+]
+
+
+@pytest.fixture(scope="module")
+def table_dir(spark, transcripts, tmp_path_factory):
+    """The transcripts as a bare parquet table in several files, so page
+    bodies are read through the row-group cache."""
+    d = str(tmp_path_factory.mktemp("bodies") / "table")
+    transcripts.repartition(3).write.parquet(d)
+    return d
+
+
+def _pages(api, pages=CACHE_PAGES):
+    return [api.get_docs(**kw) for kw in pages]
+
+
+def _fresh_pages(spark, table_dir, index_dir, monkeypatch):
+    """CACHE_PAGES from a new handle over an empty row-group cache."""
+    from newsleak_spark.query import rowcache
+
+    with monkeypatch.context() as m:
+        m.setattr(rowcache, "ROW_CACHE", rowcache.RowGroupCache(rowcache.ROW_CACHE_BYTES))
+        return _pages(NewsleakAPI(spark, spark.read.parquet(table_dir), index_dir))
+
+
+def test_highlight_memo_matches_unmemoized():
+    """A page's shared highlight memo gives the same markup as analyzing
+    every surface word, in both modes, for words that analyze to
+    several tokens or hold non-ASCII letters."""
+    import re
+
+    from newsleak_spark.analysis import WORD_RE, analyze
+    from newsleak_spark.api import _STANDARD_WORD_RE, _highlight_analyzed
+
+    bodies = [
+        "O'Brien met o'brien at the Café; Straße closed, the café reopened.",
+        "Brien's tables: TABLE table-join o'brien CAFÉ Strasse straße",
+        "",
+        "Databases and database tables merge windows; O’Brien’s café",
+    ]
+    for mode, word_re in (("standard", _STANDARD_WORD_RE), ("english", WORD_RE)):
+        for query in ("brien table", "café straße", "o'brien", "databases merge"):
+            targets = set(analyze(query, mode))
+
+            def plain(m: "re.Match[str]") -> str:
+                hit = any(t in targets for t in analyze(m.group(0), mode))
+                return f"<em>{m.group(0)}</em>" if hit else m.group(0)
+
+            memo: dict = {}
+            got = [_highlight_analyzed(b, targets, mode, memo) for b in bodies]
+            assert got == [word_re.sub(plain, b) for b in bodies], (mode, query)
+            assert got == [_highlight_analyzed(b, targets, mode) for b in bodies]
+            assert any("<em>" in g for g in got), (mode, query)
+
+
+def test_row_cache_follows_index_mutations(spark, transcripts, table_dir, tmp_path, monkeypatch):
+    """One serving handle across append_index, compact_index (and the
+    reader swap to its output) and an in-place build_index(resume=False)
+    answers every page exactly as a new handle over an empty row-group
+    cache does after each step."""
+    from newsleak_spark.indexing import compact_index
+
+    d = str(tmp_path / "idx")
+    cfg = IndexConfig(n_shards=2, n_term_buckets=4, block_size=16)
+    table = spark.read.parquet(table_dir)
+    build_index(spark, table.filter(F.col("doc_id") % 3 != 0), d, cfg)
+    api = NewsleakAPI(spark, table, d)
+    seen = [_pages(api)]
+    assert seen[0] == _fresh_pages(spark, table_dir, d, monkeypatch)
+    append_index(spark, table.filter(F.col("doc_id") % 3 == 0), d, cfg)
+    seen.append(_pages(api))
+    assert seen[-1] == _fresh_pages(spark, table_dir, d, monkeypatch)
+    api.index_dir = compact_index(spark, d).index_dir
+    seen.append(_pages(api))
+    assert seen[-1] == _fresh_pages(spark, table_dir, api.index_dir, monkeypatch)
+    build_index(spark, table.filter(F.col("doc_id") % 2 == 0), api.index_dir, cfg, resume=False)
+    seen.append(_pages(api))
+    assert seen[-1] == _fresh_pages(spark, table_dir, api.index_dir, monkeypatch)
+    assert seen[0] != seen[1] and seen[2] != seen[3]
+
+
+def test_row_cache_concurrent_pages_equal_sequential(spark, table_dir, index_dir, monkeypatch):
+    """8 threads on one handle, each issuing every page in its own order
+    over an empty row-group cache, get exactly the sequential pages."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from newsleak_spark.query import rowcache
+
+    want = _fresh_pages(spark, table_dir, index_dir, monkeypatch)
+    monkeypatch.setattr(rowcache, "ROW_CACHE", rowcache.RowGroupCache(rowcache.ROW_CACHE_BYTES))
+    api = NewsleakAPI(spark, spark.read.parquet(table_dir), index_dir)
+    n = len(CACHE_PAGES)
+
+    def client(i):
+        order = [(i + j) % n for j in range(n)]
+        return dict(zip(order, _pages(api, [CACHE_PAGES[o] for o in order])))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            outs = list(pool.map(client, range(8), timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    for got in outs:
+        assert [got[i] for i in range(n)] == want
+    stats = engine.row_cache_stats()
+    assert stats["misses"] >= stats["entries"] > 0 and stats["hits"] > 0
+
+
+def test_row_cache_tiny_budget(spark, table_dir, index_dir, monkeypatch):
+    """With a budget far below one index's row groups, pages are
+    unchanged, rows are evicted, and the resident bytes never exceed
+    the budget; with a zero budget every row group is read filtered to
+    the wanted keys and nothing stays resident."""
+    from newsleak_spark.query import rowcache
+
+    want = _fresh_pages(spark, table_dir, index_dir, monkeypatch)
+    for budget in (40_000, 0):
+        monkeypatch.setattr(rowcache, "ROW_CACHE", rowcache.RowGroupCache(budget))
+        api = NewsleakAPI(spark, spark.read.parquet(table_dir), index_dir)
+        for _ in range(2):
+            got = []
+            for kw in CACHE_PAGES:
+                api._hit_cache.clear()  # rank again, so every page reads
+                got.append(api.get_docs(**kw))
+                assert engine.row_cache_stats()["bytes"] <= budget
+            assert got == want
+        stats = engine.row_cache_stats()
+        assert stats["budget"] == budget and stats["misses"] > 0
+        assert stats["evictions"] > 0 if budget else stats["entries"] == stats["hits"] == 0

@@ -37,13 +37,28 @@ def index_dir(spark, transcripts, tmp_path_factory):
 
 @pytest.fixture
 def reads(monkeypatch):
-    """Every pyarrow dataset read the engine makes, as (a file of the
-    dataset, the files left after partition pruning, columns, filter):
+    """Every pyarrow read the engine makes, as (a file of the dataset,
+    the files left after partition pruning, columns, filter):
     ``pyarrow.dataset.dataset`` wrapped so each dataset it opens
-    records its ``to_table`` calls."""
+    records its ``to_table`` calls, and an empty row-group cache that
+    records each row group it decodes (filter "row group")."""
     import pyarrow.dataset as ds
 
+    from newsleak_spark.query import rowcache
+
     opened, log = ds.dataset, []
+
+    class Decoded:
+        def __init__(self, fragment):
+            self._fragment = fragment
+
+        def to_table(self, columns=None, schema=None, **kw):
+            log.append((self._fragment.path, [self._fragment.path], columns, "row group"))
+            return self._fragment.to_table(columns=columns, schema=schema, **kw)
+
+    class RecordedCache(rowcache.RowGroupCache):
+        def entry(self, key, fragment, *args):
+            return super().entry(key, Decoded(fragment), *args)
 
     class Recorded:
         def __init__(self, dataset):
@@ -58,6 +73,7 @@ def reads(monkeypatch):
             return self._dataset.to_table(columns=columns, filter=filter)
 
     monkeypatch.setattr(ds, "dataset", lambda *a, **kw: Recorded(opened(*a, **kw)))
+    monkeypatch.setattr(rowcache, "ROW_CACHE", RecordedCache(rowcache.ROW_CACHE_BYTES))
     return log
 
 
@@ -76,32 +92,42 @@ def shard_task_reads(spark, index_dir, reads, spec, task_shards):
     return plan, driver, list(reads)
 
 
+def _seg_dirs(files) -> set:
+    return {f.split("/segments/", 1)[1].rsplit("/", 1)[0] for f in files}
+
+
 def test_segment_scan_partition_pruned(spark, index_dir, reads):
     """A query's segment read opens only the directories of its query
-    terms' buckets, and pushes the term predicate to parquet row groups
-    (the term-sorted layout makes min/max effective). The driver reads
-    every shard at once; a Spark task reads its shards one at a time,
-    so it holds one shard's rows however many shards it owns."""
-    plan, driver, task = shard_task_reads(
-        spark, index_dir, reads, QuerySpec(terms=("spark",)), [1, 2]
-    )
+    terms' buckets. The driver reads every shard at once through the
+    row-group cache: it decodes each row group of those directories
+    once, and a repeated query decodes nothing. A Spark task reads its
+    shards one at a time, with the term predicate pushed to parquet row
+    groups, so it holds one shard's rows however many shards it owns."""
+    spec = QuerySpec(terms=("spark",))
+    plan, driver, task = shard_task_reads(spark, index_dir, reads, spec, [1, 2])
     (bucket,) = plan.buckets
-    for log, per_read in ((driver, [range(4)]), (task, [[1], [2]])):
-        seg = [r[1:] for r in log if "/segments/" in r[0]]
-        assert len(seg) == len(per_read), seg
-        for (files, _cols, flt), shards in zip(seg, per_read):
-            dirs = {f.split("/segments/", 1)[1].rsplit("/", 1)[0] for f in files}
-            assert dirs == {f"shard={s}/bucket={bucket}" for s in shards}, dirs
-            assert "term" in str(flt), flt
+    decoded = [r[0] for r in driver if "/segments/" in r[0]]
+    assert len(decoded) == len(set(decoded))
+    assert _seg_dirs(decoded) == {f"shard={s}/bucket={bucket}" for s in range(4)}, decoded
+    del reads[:]
+    engine.score_shards(plan, range(4), IndexReader(spark, index_dir).part_datasets)
+    assert not [r for r in reads if "/segments/" in r[0]]
+    seg = [r[1:] for r in task if "/segments/" in r[0]]
+    assert len(seg) == 2, seg
+    for (files, _cols, flt), shard in zip(seg, [1, 2]):
+        assert _seg_dirs(files) == {f"shard={shard}/bucket={bucket}"}
+        assert "term" in str(flt), flt
 
 
 def test_segment_scan_drops_position_columns(spark, index_dir, reads):
     """Term-only queries must not read position bytes (SURVEY §7.5.5);
-    phrase queries read them."""
+    phrase queries read them. In the driver, a row group first decoded
+    for a term-only query decodes its position columns when a phrase
+    first asks for them."""
     for spec, want in ((QuerySpec(terms=("spark",)), False), (QuerySpec(phrases=(("fast", "table"),)), True)):
         _plan, driver, task = shard_task_reads(spark, index_dir, reads, spec, [0])
         seg = [cols for first, _files, cols, _flt in driver + task if "/segments/" in first]
-        assert len(seg) == 2
+        assert len(seg) >= 2 and len([r for r in task if "/segments/" in r[0]]) == 1
         for cols in seg:
             assert ("poscnt" in cols and "posflat" in cols) == want, (spec, cols)
 
