@@ -56,7 +56,10 @@ _TOKS = (
 # r2+r3+r4, with decontaminate/redact_terms/domain_mix/
 # stratified_sample siblings staying in-window) leaves it. The
 # driver-local engine row e6_engine_local_and enters the window;
-# ev_asof_join (driver-green r2-r5, unchanged) leaves it. Entries not
+# ev_asof_join (driver-green r2-r5, unchanged) leaves it. The two
+# index-counted aggregation rows (e7_index_facet_filtered,
+# e7_index_timeline_year) enter the window; s2_es_source and
+# s7_metadata_csv (driver-green, unchanged) leave it. Entries not
 # listed follow in registration order; each is driver-green from an
 # earlier round and unchanged.
 _GATE_PRIORITY = [
@@ -67,6 +70,7 @@ _GATE_PRIORITY = [
     "e1_engine_english",
     "e2_incremental_and", "e3_compacted_and",
     "e4_engine_facet", "e5_engine_hit_count", "e6_engine_local_and",
+    "e7_index_facet_filtered", "e7_index_timeline_year",
     "f1_bm25_not", "f1_bm25_not_only", "f8_parsed_query",
     "a4_paragraphs",
     "a11_timex_tag", "a12_ner", "f6_timex_tagged",
@@ -81,7 +85,6 @@ _GATE_PRIORITY = [
     "ev_window_agg", "ev_sessionize",
     "decontaminate", "redact_terms", "domain_mix",
     "stratified_sample",
-    "s2_es_source", "s7_metadata_csv",
 ]
 
 
@@ -150,6 +153,14 @@ _ENGINE_SPECS = {
 }
 _UNION_SPEC = QuerySpec(terms=(), boost_terms=("merge", "window"), k=20)
 _E4_SPEC = QuerySpec(terms=("table",), role_filter=("user", "assistant"))
+# index-counted aggregations (engine.count_by, the shard task's counts
+# in the driver): a role- and time-filtered tool facet and a scored
+# year timeline
+_E7_FACET_SPEC = QuerySpec(
+    terms=("table",), role_filter=("user", "tool"),
+    ts_from=dt.date(2018, 1, 1), ts_to=dt.date(2019, 12, 31),
+)
+_E7_TIMELINE_SPEC = QuerySpec(terms=("merge",))
 # F1 must_not ('-term', queryStringQuery syntax — ESRequestUtils.scala:304-307)
 _NOT_UNION_SPEC = QuerySpec(boost_terms=("merge", "window"), not_terms=("filter",), k=20)
 
@@ -413,6 +424,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["e4_engine_facet"] = _e4_engine_facet
     q["e5_engine_hit_count"] = _e5_engine_hit_count
 
+    # the same aggregations counted in the shard task over docmeta
+    # (engine.count_by), merged by facets.top_values / dense_buckets —
+    # no semi-join, no Spark job; oracles scan the table
+    def _e7_index_facet_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from newsleak_spark.query.engine import count_by
+
+        counts = count_by(spark, _engine_index(spark, sf_dir), _E7_FACET_SPEC, "tool")
+        return spark.createDataFrame(facets.top_values(counts, 50), "value string, n_docs long")
+
+    def _e7_index_timeline_year(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from newsleak_spark.query.engine import count_by
+
+        counts = count_by(spark, _engine_index(spark, sf_dir), _E7_TIMELINE_SPEC, "ts", "year")
+        return spark.createDataFrame(facets.dense_buckets(counts, "year"), "bucket string, n_docs long")
+
+    q["e7_index_facet_filtered"] = _e7_index_facet_filtered
+    q["e7_index_timeline_year"] = _e7_index_timeline_year
+
     q["g1_facet_role"] = _transcripts_q(lambda t: facets.facet_counts(t, "role", k=50))
     q["g1_facet_tool_include"] = _transcripts_q(
         lambda t: facets.facet_counts(t, "tool", k=50, include=["tool_0", "tool_1", "tool_99"])
@@ -485,6 +514,30 @@ def oracle_sql() -> dict[str, str]:
     o["e5_engine_hit_count"] = (
         _PRELUDE.rstrip(",\n")
         + f"\nSELECT COUNT(*) AS n_hits FROM transcripts WHERE {e4_where}"
+    )
+
+    e7_where = (
+        "list_contains(regexp_extract_all(lower(text), "
+        f"'{STANDARD_TOKEN_RE}'), 'table') AND role IN ('user', 'tool')"
+        " AND CAST(ts AS DATE) >= DATE '2018-01-01' AND CAST(ts AS DATE) <= DATE '2019-12-31'"
+    )
+    o["e7_index_facet_filtered"] = (
+        _PRELUDE
+        + f"m AS (SELECT tool FROM transcripts WHERE {e7_where} AND tool IS NOT NULL)\n"
+        + "SELECT tool AS value, COUNT(*) AS n_docs FROM m GROUP BY tool\n"
+        + "ORDER BY n_docs DESC, value ASC LIMIT 50"
+    )
+    o["e7_index_timeline_year"] = (
+        _PRELUDE
+        + "m AS (SELECT ts FROM transcripts WHERE list_contains(regexp_extract_all(lower(text), "
+        + f"'{STANDARD_TOKEN_RE}'), 'merge')),\n"
+        + "counts AS (SELECT CAST(date_trunc('year', ts) AS DATE) AS bucket_d, COUNT(*) AS n\n"
+        + "           FROM m GROUP BY 1),\n"
+        + "bounds AS (SELECT CAST(date_trunc('year', MIN(ts)) AS DATE) AS lo,\n"
+        + "                  CAST(date_trunc('year', MAX(ts)) AS DATE) AS hi FROM m),\n"
+        + "spine AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 YEAR)) AS DATE) AS bucket_d FROM bounds)\n"
+        + "SELECT strftime(bucket_d, '%Y') AS bucket, COALESCE(n, 0) AS n_docs\n"
+        + "FROM spine LEFT JOIN counts USING (bucket_d) ORDER BY bucket"
     )
 
     o["g1_facet_role"] = (

@@ -24,12 +24,18 @@ finds the same request/response shapes here (citations into
 Request parsing reuses the F8 grammars (query_string with quoted
 phrases, 4-regex time ranges); the doc-set filter for aggregation
 endpoints carries the same bool-query semantics the reference applies
-to every aggregation request — served from the index when one is built
-(engine.matching_doc_ids posting intersection + semi-join; no text
-re-tokenization) and by query/brute.matching_docs otherwise. Results
-are plain Python dicts (the JSON the controllers emit); every
-.collect() here is bounded by page/facet size, never by collection
-size.
+to every aggregation request. With an index attached, a role/tool
+facet, a timeline or a subgraph's nodes of ANY spec are counted from
+the index (engine.count_by: each shard counts its matched docs over
+its docmeta, in the driver for a small plan, so no Spark job), and a
+subgraph's edges or a facet on another column semi-join the table
+with the index's doc set
+(engine.matching_doc_ids; no text re-tokenization); without an index
+query/brute.matching_docs scans the table. So an aggregation with an
+index attached describes the indexed collection, as getDocs and the
+reference's ES aggregations do. Results are plain Python dicts (the
+JSON the controllers emit); every .collect() here is bounded by
+page/facet size, never by collection size.
 """
 
 from __future__ import annotations
@@ -44,40 +50,54 @@ from pyspark.sql import functions as F
 from newsleak_spark import facets as facets_mod
 from newsleak_spark.analysis import WORD_RE, analyze
 from newsleak_spark.query.brute import bm25_topk, matching_docs
-from newsleak_spark.query.engine import index_state_key, matching_doc_ids, ranked_heaps
+from newsleak_spark.query.engine import (
+    META_FACETS,
+    count_by,
+    index_state_key,
+    matching_doc_ids,
+    ranked_heaps,
+)
 from newsleak_spark.query.rowcache import Source, open_source, read_rows
 from newsleak_spark.query.spec import QuerySpec, parse_query_string, parse_time_range
 
 DEFAULT_PAGE_SIZE = 50  # DocumentController.scala:47
 
-# surface words to re-analyze for highlighting: standard mode's
-# [a-z0-9]+ tokens never span other characters; english mode splits
-# with its analyzer's own (unicode) word pattern
-_STANDARD_WORD_RE = re.compile(r"[0-9A-Za-z][0-9A-Za-z'’]*")
 # the table columns a getDocs page reads
 _BODY_COLUMNS = ("doc_id", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+_STANDARD_TERM_RE = re.compile(r"[0-9a-z]+")
 
 
-def _highlight_analyzed(text: str, targets: set[str], mode: str, memo: dict | None = None) -> str:
-    """Wrap every surface word whose ANALYZED form is a query term in
-    <em> tags — what the ES highlighter does by re-analyzing the field.
-    Bounded: only called on the page's returned bodies. ``memo`` maps a
-    surface word to whether it highlights; one memo shared by a page's
-    bodies analyzes each distinct word once per page."""
-    if memo is None:
-        memo = {}
+def _highlight(bodies: list[str], targets: set[str], mode: str) -> list[str]:
+    """Each of a page's ``bodies`` with every surface word whose
+    ANALYZED form is a query term wrapped in <em> tags — what the ES
+    highlighter does by re-analyzing the field. One compiled scan per
+    page; Python runs only on hits.
 
-    def repl(m: "re.Match[str]") -> str:
-        word = m.group(0)
-        hit = memo.get(word)
-        if hit is None:
-            # any() not toks[0]: a surface word can analyze to several
-            # tokens ("o'brien" → ['o','brien']) and match on a later one
-            hit = memo[word] = any(t in targets for t in analyze(word, mode))
-        return f"<em>{word}</em>" if hit else word
-
-    word_re = WORD_RE if mode == "english" else _STANDARD_WORD_RE
-    return word_re.sub(repl, text)
+    standard: a surface word ([0-9A-Za-z][0-9A-Za-z'’]*) analyzes to
+    its apostrophe-separated runs, lowercased, so it highlights exactly
+    when one of its runs, case-folded, is a term: the scan anchors at a
+    word start (leading apostrophes stay outside the tags), skips whole
+    runs, and needs a term that ends its run. english: each distinct
+    word of the page (analysis.WORD_RE) is analyzed once (a word can
+    analyze to several tokens, "o'brien" → o, brien), and the scan
+    wraps the words that hit."""
+    if mode == "english":
+        words = {w for b in bodies if b for w in WORD_RE.findall(b)}
+        hits = [w for w in words if any(t in targets for t in analyze(w, mode))]
+        if not hits:
+            return list(bodies)
+        alts = "|".join(map(re.escape, sorted(hits, key=lambda w: (-len(w), w))))
+        scan = re.compile(rf"(?<![\w’'])(?:{alts})(?![\w’'])")
+        return [scan.sub(r"<em>\g<0></em>", b) if b else b for b in bodies]
+    terms = sorted((t for t in targets if _STANDARD_TERM_RE.fullmatch(t)), key=lambda t: (-len(t), t))
+    if not terms:
+        return list(bodies)
+    scan = re.compile(
+        r"(?<![0-9A-Za-z'’])(['’]*)((?:[0-9A-Za-z][0-9A-Za-z'’]*['’])?"
+        rf"(?i:{'|'.join(terms)})(?![0-9A-Za-z])[0-9A-Za-z'’]*)",
+        re.ASCII,
+    )
+    return [scan.sub(r"\1<em>\2</em>", b) if b else b for b in bodies]
 
 
 def compile_spec(
@@ -263,37 +283,29 @@ class NewsleakAPI:
         rows = rows[(page - 1) * page_size :]
         ids = [r["doc_id"] for r in rows]
         scores = {r["doc_id"]: r["score_e6"] / 1e6 for r in rows}
-        docs: list[dict] = []
-        drift = 0
-        memo: dict = {}  # surface word -> highlighted, for this page's bodies
-        if ids:
-            by_id = self._fetch(ids)
-            for did in ids:  # preserve rank order
-                r = by_id.get(did)
-                if r is None:
-                    # index/table drift (stale index or filtered table):
-                    # skip rather than fail the whole request
-                    drift += 1
-                    continue
-                docs.append(
-                    {
-                        "id": did,
-                        "score": scores[did],
-                        "content": r["text"],
-                        "highlighted": (
-                            _highlight_analyzed(r["text"], targets, self.mode, memo)
-                            if highlight and targets
-                            else r["text"]
-                        ),
-                        "metadata": {
-                            "conv_id": r["conv_id"],
-                            "turn_idx": r["turn_idx"],
-                            "role": r["role"],
-                            "tool": r["tool"],
-                            "ts": str(r["ts"]),
-                        },
-                    }
-                )
+        # rank order; ids missing from the table (index/table drift: a
+        # stale index or a filtered table) are skipped, not fatal
+        by_id = self._fetch(ids) if ids else {}
+        found = [by_id[did] for did in ids if did in by_id]
+        drift = len(ids) - len(found)
+        texts = [r["text"] for r in found]
+        marked = _highlight(texts, targets, self.mode) if highlight and targets else texts
+        docs = [
+            {
+                "id": r["doc_id"],
+                "score": scores[r["doc_id"]],
+                "content": r["text"],
+                "highlighted": h,
+                "metadata": {
+                    "conv_id": r["conv_id"],
+                    "turn_idx": r["turn_idx"],
+                    "role": r["role"],
+                    "tool": r["tool"],
+                    "ts": str(r["ts"]),
+                },
+            }
+            for r, h in zip(found, marked)
+        ]
         if with_total and total is None:
             total = matching_docs(self.transcripts, spec, self.mode).count()
         return {"hits": total, "page": page, "docs": docs, "drift": drift}
@@ -307,9 +319,11 @@ class NewsleakAPI:
         n_nodes: int = 10,
         min_edge: int = 1,
     ) -> dict:
-        """Top tool nodes over the filtered doc set + every pairwise
-        edge in ONE self-join job (vs the reference's O(n²) sequential
-        include-filtered aggregations, NetworkService.scala:152-175)."""
+        """Top tool nodes over the filtered doc set (_facet_rows: from
+        the index when one is attached) + every pairwise edge in ONE
+        self-join job over the table's rows of that doc set (vs the
+        reference's O(n²) sequential include-filtered aggregations,
+        NetworkService.scala:152-175)."""
         if n_nodes < 1:
             return _bad_request(ValueError(f"n_nodes={n_nodes}: must be >= 1"))
         try:
@@ -318,19 +332,15 @@ class NewsleakAPI:
             return _bad_request(e)
 
         def compute() -> dict:
-            m = self._matching(spec)
-            nodes = facets_mod.facet_counts(m, "tool", k=n_nodes).collect()
-            node_vals = [r["value"] for r in nodes]
-            edges = (
-                facets_mod.cooccurrence(
-                    m.filter(F.col("tool").isin(node_vals)).select("conv_id", "tool"),
-                    "conv_id",
-                    "tool",
-                    min_count=min_edge,
+            nodes = self._facet_rows(spec, "tool", n_nodes)
+            edges = []
+            if nodes:
+                pairs = self._matching(spec).filter(F.col("tool").isin([v for v, _n in nodes]))
+                edges = facets_mod.cooccurrence(
+                    pairs.select("conv_id", "tool"), "conv_id", "tool", min_count=min_edge
                 ).collect()
-            )
             return {
-                "nodes": [{"id": r["value"], "occurrence": r["n_docs"]} for r in nodes],
+                "nodes": [{"id": v, "occurrence": n} for v, n in nodes],
                 "relationships": [
                     {"source": r["source"], "target": r["target"], "weight": r["weight"]}
                     for r in edges
@@ -348,7 +358,9 @@ class NewsleakAPI:
     def get_timeline(
         self, query: str = "", time_range: str | None = None, lod: str = "month"
     ) -> dict:
-        """Dense date-histogram buckets at the LoD (decade|year|month|day)."""
+        """Dense date-histogram buckets at the LoD (decade|year|month|day)
+        in the session time zone; with an index attached, counted from
+        the index's docmeta (engine.count_by)."""
         if lod not in facets_mod.LODS:
             return _bad_request(ValueError(f"lod={lod!r}: must be one of {facets_mod.LODS}"))
         try:
@@ -357,13 +369,14 @@ class NewsleakAPI:
             return _bad_request(e)
 
         def compute() -> dict:
-            m = self._matching(spec)
-            rows = facets_mod.date_histogram(m, lod).collect()
-            key = "decade" if lod == "decade" else "bucket"
-            return {
-                "lod": lod,
-                "buckets": [{"key": str(r[key]), "docCount": r["n_docs"]} for r in rows],
-            }
+            if self.index_dir is not None:
+                counts = count_by(self.spark, self.index_dir, spec, "ts", lod)
+                rows = facets_mod.dense_buckets(counts, lod)
+            else:
+                key = "decade" if lod == "decade" else "bucket"
+                hist = facets_mod.date_histogram(self._matching(spec), lod).collect()
+                rows = [(str(r[key]), r["n_docs"]) for r in hist]
+            return {"lod": lod, "buckets": [{"key": k, "docCount": n} for k, n in rows]}
 
         return self._agg_cached(
             ("timeline", replace(spec, k=0).cache_key(), lod), compute, spec
@@ -390,14 +403,8 @@ class NewsleakAPI:
             return _bad_request(e)
 
         def compute() -> dict:
-            m = self._matching(spec)
-            rows = facets_mod.facet_counts(
-                m, facet_key, k=size, include=include, exclude=exclude
-            ).collect()
-            return {
-                "key": facet_key,
-                "buckets": [{"key": r["value"], "docCount": r["n_docs"]} for r in rows],
-            }
+            rows = self._facet_rows(spec, facet_key, size, include, exclude)
+            return {"key": facet_key, "buckets": [{"key": v, "docCount": n} for v, n in rows]}
 
         return self._agg_cached(
             (
@@ -498,12 +505,13 @@ class NewsleakAPI:
 
     def _agg_cached(self, key: tuple, compute, spec: QuerySpec):
         """Aggregation result memo (facet/timeline/network): bounded
-        FIFO keyed on (request, index state). Only specs that actually
-        take the indexed path in _matching (scored/boost terms) are
-        cached: a match_all / filters-only spec computes from
-        self.transcripts via brute matching_docs, which carries no
-        invalidation signal — the index-state key would not notice a
-        transcripts-source change, serving stale results."""
+        FIFO keyed on (request, index state). Only scored specs are
+        cached: a match_all / filters-only subgraph or facet on a
+        column outside docmeta computes from self.transcripts via brute
+        matching_docs, which carries no invalidation signal — the
+        index-state key would not notice a transcripts-source change,
+        serving stale results. (Their role/tool facets and timelines
+        are counted from the index, and cheap to recompute.)"""
         if self.index_dir is None or not spec.scored():
             with self._lock:
                 self.agg_runs += 1
@@ -521,10 +529,30 @@ class NewsleakAPI:
             self._agg_cache[full_key] = out
         return out
 
+    def _facet_rows(
+        self,
+        spec: QuerySpec,
+        column: str,
+        size: int,
+        include: list[str] | None = None,
+        exclude: list[str] | None = None,
+    ) -> list[tuple]:
+        """facet_counts' (value, n_docs) rows over the spec's doc set:
+        counted from the index (engine.count_by) when one is attached
+        and ``column`` is in docmeta, else facet_counts over
+        _matching."""
+        if self.index_dir is not None and column in META_FACETS:
+            counts = count_by(self.spark, self.index_dir, spec, column)
+            return facets_mod.top_values(counts, size, include, exclude)
+        agg = facets_mod.facet_counts(self._matching(spec), column, k=size, include=include, exclude=exclude)
+        return [(r["value"], r["n_docs"]) for r in agg.collect()]
+
     def _matching(self, spec: QuerySpec) -> DataFrame:
-        """Query-filtered doc set for aggregation endpoints. Indexed
-        path: posting-list intersection supplies the doc ids (no text
-        re-tokenization), semi-joined back for the facet columns."""
+        """Query-filtered doc set for the aggregations the index cannot
+        count (subgraph edges, facet keys outside docmeta, and every
+        aggregation without an index). Indexed path: the index's doc
+        ids (no text re-tokenization; a local DataFrame for a small
+        plan), semi-joined back for the table's columns."""
         if self.index_dir is not None and spec.scored():
             ids = matching_doc_ids(self.spark, self.index_dir, spec)
             return self.transcripts.join(ids, "doc_id", "left_semi")

@@ -19,11 +19,19 @@ and returns a DataFrame with pinned deterministic ordering/tie-breaks
 so results hash-match the DuckDB oracles.
 
 All plans are pure Catalyst: partial+final hash aggregation, broadcast
-spine joins; no UDFs.
+spine joins; no UDFs. The index serves role/tool facets and timelines
+as per-shard counts (engine.count_by); top_values and dense_buckets
+turn those counts into exactly the rows facet_counts and
+date_histogram return.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -61,6 +69,23 @@ def facet_counts(
             .select("value", F.coalesce("n_docs", F.lit(0)).alias("n_docs"))
         )
     return agg.orderBy(F.desc("n_docs"), F.asc("value")).limit(k)
+
+
+def top_values(
+    counts: dict,
+    k: int = 50,
+    include: list[str] | None = None,
+    exclude: list[str] | None = None,
+) -> list[tuple]:
+    """facet_counts' (value, n_docs) rows from per-value doc counts
+    (nulls already dropped): exclude drops, include keeps only its
+    values and zero-fills them (once per listed occurrence, as the
+    spine join does), then (n_docs desc, value asc) and top-k."""
+    if exclude:
+        counts = {v: n for v, n in counts.items() if v not in exclude}
+    rows = [(v, counts.get(v, 0)) for v in include] if include else list(counts.items())
+    # nulls first, as Spark's ascending sort puts them (a None in include)
+    return sorted(rows, key=lambda r: (-r[1], r[0] is not None, r[0] or ""))[:k]
 
 
 def cardinality(filtered: DataFrame, column: str, exact: bool = True) -> DataFrame:
@@ -107,6 +132,47 @@ def date_histogram(filtered: DataFrame, lod: str = "month") -> DataFrame:
         )
         .orderBy("bucket")
     )
+
+
+def bucket_ordinals(ts: pa.Array, lod: str, zone: str | int) -> np.ndarray:
+    """Each instant's timeline bucket at ``lod`` in time zone ``zone``
+    (a tz database id, or a fixed offset in seconds), as an int: the
+    local date's days since 1970-01-01 (day), year·12 + month - 1
+    (month), the year (year) or its decade (decade) — date_histogram's
+    date_trunc in the session time zone. ``ts`` holds no nulls; a
+    zone-less timestamp is taken as UTC."""
+    unit = ts.type.unit
+    if isinstance(zone, str):
+        local = pc.local_timestamp(ts.cast(pa.timestamp(unit, zone)))
+    else:
+        shift = pa.scalar(zone * {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[unit], pa.duration(unit))
+        local = pc.add(ts.cast(pa.timestamp(unit)), shift)
+    if lod == "day":
+        return local.cast(pa.date32()).view(pa.int32()).to_numpy().astype(np.int64)
+    year = pc.year(local).to_numpy().astype(np.int64)
+    if lod == "month":
+        return year * 12 + pc.month(local).to_numpy() - 1
+    return year if lod == "year" else year // 10 * 10
+
+
+_BUCKET_KEY = {
+    "day": lambda o: (dt.date(1970, 1, 1) + dt.timedelta(days=o)).isoformat(),
+    "month": lambda o: f"{o // 12:04d}-{o % 12 + 1:02d}",
+    "year": lambda o: f"{o:04d}",
+    "decade": str,
+}
+
+
+def dense_buckets(counts: dict, lod: str) -> list[tuple[str, int]]:
+    """date_histogram's dense (key, n_docs) rows, keys as the timeline
+    endpoint formats them, from per-bucket doc counts keyed by
+    bucket_ordinals: every bucket from the first to the last, zero
+    where no doc falls."""
+    if not counts:
+        return []
+    step = 10 if lod == "decade" else 1
+    fmt = _BUCKET_KEY[lod]
+    return [(fmt(o), counts.get(o, 0)) for o in range(min(counts), max(counts) + 1, step)]
 
 
 def decade_histogram(filtered: DataFrame) -> DataFrame:

@@ -5,30 +5,34 @@ Execution shape (SURVEY §3.1 "Rebuild shape"):
   df/idf per query term, partition-pruned point reads — and the
   per-shard scorer) → ONE shard task, score_shards: the shards' segment
   rows of (bucket ∈ query buckets, term ∈ query terms) — hive PARTITION
-  pruning on shard and bucket — and, for filtered or unscored specs,
-  their filter-surviving docmeta ids (a pyarrow read); the rows are cut
+  pruning on shard and bucket — and, for filtered, unscored or
+  counting plans, their filter-surviving docmeta rows; the rows are cut
   per (shard, term) into zero-copy Arrow slices, and the scorer runs
   once per shard on its {term: slice} (numpy varint decode straight off
   each slice's binary data buffers, block-range intersection for AND,
   block-max WAND for the scored-union path, docmeta ids minus must_not
-  postings for unscored specs) → per-shard top-k heaps → merge. No
-  pandas frame is built on the way. The shard task runs in one of two
-  places:
+  postings for unscored specs) → per-shard top-k heaps → merge, or,
+  for a counting plan (count_by), each shard's untruncated doc set
+  counted by a docmeta column or time bucket → (shard, key, n)
+  partials → summed. No pandas frame is built on the way. The shard
+  task runs in one of two places:
   - the driver, for every shard, over the reader's memoized Sources.
-    Dictionary and segment rows come from the process-wide row-group
-    cache (rowcache.py): each parquet row group is decoded once, kept
-    ordered by term with a term → rows directory, and a lookup is a
-    dict probe and a slice. ranked_heaps (the getDocs path) and
-    count_hits run here when the summed df of a plan's fetched terms is
-    at most LOCAL_MAX_POSTINGS: no Spark job.
+    Dictionary, segment and docmeta rows come from the process-wide
+    row-group cache (rowcache.py): each parquet row group is decoded
+    once, kept ordered by its key (term, with a term → rows
+    directory, or doc_id), and a lookup is a dict probe and a slice.
+    ranked_heaps (the getDocs path) and count_hits run here when the
+    summed df of a plan's fetched terms is at most LOCAL_MAX_POSTINGS,
+    and count_by and matching_doc_ids when that df plus the docmeta
+    rows they read is (_driver_sized): no Spark job.
   - Spark tasks (_spark_scored): spark.range over the shard ids spread
     over at most defaultParallelism tasks, mapInArrow, each task
     opening only its own shard (and query bucket) directories, then
     reading parquet (the term predicate pushed to row groups) and
     scoring one shard at a time. No segment bytes enter the JVM and no
     row is shuffled; the caller merges (TakeOrderedAndProject for
-    search). search, search_heaps, matching_doc_ids and the larger
-    ranked_heaps and count_hits plans use it.
+    search). search, search_heaps and the larger plans of the routed
+    entries use it.
   Segment files are not term-sorted (the build's partitionBy write
   drops its sort), so neither place may rely on a row order in a file.
 
@@ -57,7 +61,7 @@ from pyspark.sql import functions as F
 from newsleak_spark.codec import decode_positions_flat, gather_ragged, varint_decode
 from newsleak_spark.indexing.manifest import Manifest
 from newsleak_spark.query import rowcache
-from newsleak_spark.query.rowcache import Source, open_source, read_rows, read_runs
+from newsleak_spark.query.rowcache import Source, open_source, read_groups, read_rows, read_runs
 from newsleak_spark.query.spec import QuerySpec
 
 K1 = 1.2
@@ -744,6 +748,22 @@ CANDIDATE_SCHEMA = "shard int, doc_id long, score_e6 long, hits long"
 LOCAL_MAX_POSTINGS = 1_500_000
 
 
+# The docmeta columns a facet counts in the shard task (count_by); a
+# facet on any other table column semi-joins the table.
+META_FACETS = ("role", "tool")
+
+
+@dataclass(frozen=True)
+class Agg:
+    """What score_shards counts in place of ranking: the matched docs
+    by value of the docmeta ``column``, or, with ``lod``, by time
+    bucket of ``ts`` in time zone ``zone`` (facets.bucket_ordinals)."""
+
+    column: str
+    lod: str | None = None
+    zone: str | int | None = None
+
+
 @dataclass
 class _Plan:
     """A spec's driver-side plan: what score_shards reads and the
@@ -756,6 +776,8 @@ class _Plan:
     meta: bool  # read each shard's docmeta ids (filtered or unscored specs)
     meta_filter: object  # the F2/F5 filters as a pyarrow expression, or None
     postings: int  # summed df of fetch_terms: the router's size estimate
+    meta_columns: tuple = ()  # the docmeta columns meta_filter reads
+    agg: Agg | None = None  # count the matched docs instead of ranking them
 
 
 def _plan(rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool) -> _Plan | None:
@@ -838,6 +860,11 @@ def _plan(rd: IndexReader, spec: QuerySpec, truncate: bool, count: bool) -> _Pla
         meta=filtered or not metas,
         meta_filter=rd.meta_filter(spec) if filtered else None,
         postings=sum(dict_rows[t][0] for t in fetch_terms),
+        meta_columns=tuple(
+            c for c, on in (
+                ("role", spec.role_filter), ("tool", spec.tool_filter), ("ts", spec.ts_from or spec.ts_to),
+            ) if on
+        ),
     )
 
 
@@ -895,43 +922,104 @@ def _by_shard_term(seg: pa.Table) -> dict[int, dict[str, pa.Table]]:
     return out
 
 
+def _docmeta_rows(sources: list[Source], shards: list[int], columns: list[str], plan: _Plan) -> dict[int, pa.Table]:
+    """shard → its docmeta rows with ``columns`` (doc_id first) that
+    pass the plan's filters, ordered by doc_id. The driver's cached
+    Sources decode each of a shard's row groups once
+    (rowcache.read_groups, with the filter's columns) and filter in
+    Arrow; a Spark task's uncached Sources push the shard and filter
+    predicates into one parquet read."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    flt = plan.meta_filter
+    pieces: dict[int, list] = {}
+    for s in sources:
+        if s.stats is None:
+            where = ds.field("shard").isin(shards)
+            if flt is not None:
+                where &= flt
+            tbl = s.dataset.to_table(columns=["shard", *columns], filter=where)
+            for shard in np.unique(tbl["shard"].to_numpy()).tolist():
+                part = tbl.filter(pc.equal(tbl["shard"], shard)).select(columns)
+                pieces.setdefault(shard, []).append(part)
+            continue
+        read = list(dict.fromkeys([*columns, *plan.meta_columns]))
+        for part, tbl in read_groups(s, "doc_id", read, {"shard": shards}):
+            if flt is not None:
+                tbl = tbl.filter(flt)
+            pieces.setdefault(part["shard"], []).append(tbl.select(columns))
+    out = {}
+    for shard, tables in pieces.items():
+        tbl = tables[0] if len(tables) == 1 else pa.concat_tables(tables)
+        ids = tbl["doc_id"].to_numpy()
+        if (ids[1:] < ids[:-1]).any():
+            tbl = tbl.take(np.argsort(ids, kind="stable"))
+        out[shard] = tbl
+    return out
+
+
+def _shard_counts(agg: Agg, meta: pa.Table, docs: np.ndarray) -> tuple[pa.Array, np.ndarray]:
+    """One shard's (keys, counts) of its matched ``docs`` by ``agg``:
+    the docs' rows in ``meta`` (the shard's docmeta, ordered by doc_id;
+    every matched doc has one), nulls dropped."""
+    import pyarrow.compute as pc
+
+    from newsleak_spark.facets import bucket_ordinals
+
+    idx = np.searchsorted(meta["doc_id"].to_numpy(), docs)
+    vals = meta[agg.column].take(idx).combine_chunks().drop_null()
+    if agg.lod is None:
+        vc = pc.value_counts(vals)
+        return vc.field("values").cast(pa.string()), vc.field("counts").to_numpy().astype(np.int64)
+    keys, n = np.unique(bucket_ordinals(vals, agg.lod, agg.zone), return_counts=True)
+    return pa.array(keys, pa.int64()), n.astype(np.int64)
+
+
 def score_shards(plan: _Plan, shards, open_parts):
     """The engine's one read-and-score, run in the driver for every
     shard or in a Spark task for its own shards. Reads the plan's
-    segment rows and, for filtered or unscored specs, the
-    filter-surviving docmeta ids of ``shards`` with pyarrow from the
-    Sources ``open_parts(sub)`` returns for ``sub`` in {"segments",
-    "docmeta"} (the driver's segments come from the row-group cache);
-    calls the plan's scorer once per shard on that shard's {term: Arrow
-    slice} (_segment_rows); rounds with _score_e6.
-    Returns a pyarrow Table (shard, doc_id, score_e6, hits)."""
-    import pyarrow.dataset as ds
-
+    segment rows and, for filtered, unscored or counting plans, the
+    shards' docmeta rows (_docmeta_rows) with pyarrow from the Sources
+    ``open_parts(sub)`` returns for ``sub`` in {"segments", "docmeta"}
+    (the driver's come from the row-group cache); calls the plan's
+    scorer once per shard on that shard's {term: Arrow slice}
+    (_segment_rows) and, for filtered or unscored plans, its
+    filter-surviving doc ids; rounds with _score_e6.
+    Returns a pyarrow Table (shard, doc_id, score_e6, hits), or for a
+    plan with an ``agg`` (untruncated) each shard's counts of its
+    matched docs, (shard, key, n)."""
     shards = [int(s) for s in shards]
     rows = {}
     if plan.fetch_terms:
         rows = _segment_rows(
             open_parts("segments"), plan.fetch_terms, plan.buckets, plan.positions, shards
         )
-    if plan.meta:
-        flt = ds.field("shard").isin(shards)
-        if plan.meta_filter is not None:
-            flt &= plan.meta_filter
-        tables = [s.dataset.to_table(columns=["shard", "doc_id"], filter=flt) for s in open_parts("docmeta")]
-        meta_shard = np.concatenate([np.empty(0, np.int32)] + [t["shard"].to_numpy() for t in tables])
-        meta_ids = np.concatenate([np.empty(0, np.int64)] + [t["doc_id"].to_numpy() for t in tables])
-        order = np.lexsort((meta_ids, meta_shard))
-        meta_shard, meta_ids = meta_shard[order], meta_ids[order]
-    out = [(np.empty(0, np.int32), np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64))]
+    meta = {}
+    if plan.meta or plan.agg:
+        cols = ["doc_id"] + ([plan.agg.column] if plan.agg else [])
+        meta = _docmeta_rows(open_parts("docmeta"), shards, cols, plan)
+    out = []
     for s in shards:
+        m = meta.get(s)
         allowed = None
         if plan.meta:
-            lo, hi = np.searchsorted(meta_shard, [s, s + 1])
-            allowed = meta_ids[lo:hi]
+            allowed = m["doc_id"].to_numpy() if m is not None else np.empty(0, np.int64)
         docs, scores, hits = plan.scorer(rows.get(s, {}), allowed)
-        out.append(
-            (np.full(docs.size, s, np.int32), docs, scores, np.full(docs.size, hits, np.int64))
-        )
+        if plan.agg is None:
+            out.append((np.full(docs.size, s, np.int32), docs, scores, np.full(docs.size, hits, np.int64)))
+        elif docs.size:
+            keys, n = _shard_counts(plan.agg, m, docs)
+            out.append((np.full(n.size, s, np.int32), keys, n))
+    if plan.agg is not None:
+        key_type = pa.string() if plan.agg.lod is None else pa.int64()
+        shard, keys, n = zip(*out) if out else ((), (), ())
+        return pa.table({
+            "shard": np.concatenate([np.empty(0, np.int32), *shard]),
+            "key": pa.concat_arrays([pa.array([], key_type), *keys]),
+            "n": np.concatenate([np.empty(0, np.int64), *n]),
+        })
+    out.insert(0, (np.empty(0, np.int32), np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)))
     shard, doc_id, score, hits = (np.concatenate(c) for c in zip(*out))
     return pa.table({"shard": shard, "doc_id": doc_id, "score_e6": _score_e6(score), "hits": hits})
 
@@ -979,14 +1067,26 @@ def _spark_scored(rd: IndexReader, plan: _Plan) -> DataFrame:
     """The Spark executor: the shard ids as ``spark.range`` spread over
     at most defaultParallelism tasks, each running _task_scored for its
     own shards (mapInArrow). Segment bytes never enter the JVM and no
-    row is shuffled. Returns (shard, doc_id, score_e6, hits)."""
+    row is shuffled. Returns (shard, doc_id, score_e6, hits), or a
+    counting plan's (shard, key, n)."""
     parts = rd.parts
 
     def run(batches):
         yield from _task_scored(plan, parts, [s for b in batches for s in b.column(0).to_pylist()])
 
+    schema = CANDIDATE_SCHEMA
+    if plan.agg is not None:
+        schema = f"shard int, key {'string' if plan.agg.lod is None else 'long'}, n long"
     n_tasks = min(rd.n_shards, rd.spark.sparkContext.defaultParallelism)
-    return rd.spark.range(rd.n_shards, numPartitions=n_tasks).mapInArrow(run, CANDIDATE_SCHEMA)
+    return rd.spark.range(rd.n_shards, numPartitions=n_tasks).mapInArrow(run, schema)
+
+
+def _driver_sized(rd: IndexReader, plan: _Plan) -> bool:
+    """Whether an untruncated plan runs in the driver: its fetched
+    postings plus, when it reads docmeta, every docmeta row of the
+    collection are at most LOCAL_MAX_POSTINGS. Both bound the rows it
+    reads and the doc set it returns."""
+    return plan.postings + (rd.n_docs if plan.meta or plan.agg else 0) <= LOCAL_MAX_POSTINGS
 
 
 def _score_e6(scores) -> np.ndarray:
@@ -1087,11 +1187,66 @@ def matching_doc_ids(
     the F2/F5 filters minus the must_not terms' postings. Never
     touches the text column, unlike a brute matching_docs() scan which
     re-tokenizes the collection; this is the index-accelerated doc-set
-    feed for aggregation endpoints (facets/timeline/network over a
-    query-filtered corpus) and for count_hits. Returns
+    feed for aggregations the shard task cannot count (subgraphs, facet
+    keys outside docmeta). Routed: a plan that _driver_sized admits is
+    scored in the driver and its ids become a local DataFrame, with no
+    Python worker; larger ones run the Spark executor. Returns
     DataFrame(doc_id long)."""
     rd = _reader(spark, index_dir, reader)
-    return _candidates(spark, rd, spec, truncate=False).select("doc_id")
+    plan = _plan(rd, spec, truncate=False, count=False)
+    if plan is None:
+        return spark.createDataFrame([], "doc_id long")
+    if _driver_sized(rd, plan):
+        ids = score_shards(plan, range(rd.n_shards), rd.part_datasets).select(["doc_id"])
+        return spark.createDataFrame(ids)
+    return _spark_scored(rd, plan).select("doc_id")
+
+
+def count_by(
+    spark: SparkSession,
+    index_dir: str,
+    spec: QuerySpec,
+    column: str,
+    lod: str | None = None,
+) -> dict:
+    """The spec's matched docs (matching_doc_ids' set) counted by the
+    docmeta ``column`` (one of META_FACETS), or, with ``lod``, by the
+    time bucket of ``ts`` in the session time zone (facets
+    .bucket_ordinals keys): {key: n}, nulls dropped. Each shard counts
+    its own docs in the shard task and the driver sums the partials —
+    in the driver over the row-group cache when _driver_sized admits
+    the plan (no Spark job), in Spark tasks otherwise. These are the
+    index's docs: an aggregation served here describes the indexed
+    collection, as getDocs does."""
+    rd = _reader(spark, index_dir, None)
+    plan = _plan(rd, spec, truncate=False, count=False)
+    if plan is None:
+        return {}
+    plan = replace(plan, agg=Agg(column, lod, _arrow_zone(spark) if lod else None))
+    if _driver_sized(rd, plan):
+        tbl = score_shards(plan, range(rd.n_shards), rd.part_datasets)
+        pairs = zip(tbl["key"].to_pylist(), tbl["n"].to_pylist())
+    else:
+        pairs = ((r["key"], r["n"]) for r in _spark_scored(rd, plan).collect())
+    out: dict = {}
+    for key, n in pairs:
+        out[key] = out.get(key, 0) + n
+    return out
+
+
+_ZONES: dict = {}
+
+
+def _arrow_zone(spark: SparkSession) -> str | int:
+    """The session time zone parsed by Spark's own rules (so 'UTC',
+    'GMT+2' and '+02:00' agree with Spark): a tz database id, or a
+    fixed offset in seconds (facets.bucket_ordinals' ``zone``)."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz not in _ZONES:
+        zone = spark._jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(tz)
+        fixed = zone.getRules().isFixedOffset()
+        _ZONES[tz] = zone.normalized().getTotalSeconds() if fixed else zone.getId()
+    return _ZONES[tz]
 
 
 def count_hits(

@@ -7,13 +7,14 @@ however few rows are wanted, so the driver keeps decoded row groups in
 one process-wide, byte-budgeted, thread-safe LRU. Each entry is its row
 group ordered by the key column (a stable sort, so rows of one key keep
 their file order) with a key -> run directory, so a lookup is a dict
-probe plus one ``take``. An entry is filled on first miss with the
-columns asked for and grows a column when a later read asks for it
-(term-only queries never decode position columns). Entries are keyed
-by (path, size, mtime_ns, row-group id), with the file stats taken when
-the dataset opens: a reader or table handle opened on rewritten files
-never sees the old rows, and entries of files no handle reads any more
-age out of the LRU.
+probe plus one ``take``. Whole-row-group reads (a shard's docmeta, for
+filters and aggregations) keep the order but build no directory. An
+entry is filled on first miss with the columns asked for and grows a
+column when a later read asks for it (term-only queries never decode
+position columns). Entries are keyed by (path, size, mtime_ns,
+row-group id), with the file stats taken when the dataset opens: a
+reader or table handle opened on rewritten files never sees the old
+rows, and entries of files no handle reads any more age out of the LRU.
 
 Spark tasks read parquet directly: their ``Source`` has no stats.
 """
@@ -78,16 +79,23 @@ class _Entry:
     """One row group ordered by its key column: ``order`` the stable
     sort permutation (None when the file order is already sorted),
     ``index`` key -> run number (the key column holds no nulls),
-    ``bounds`` the run starts followed by the row count, ``columns`` the columns decoded so far, ``tables``
-    a table per column list read so far (columns are only ever added,
-    so a built table stays valid)."""
+    ``bounds`` the run starts followed by the row count (both None
+    without a ``directory``), ``columns`` the columns decoded so far,
+    ``tables`` a table per column list read so far (columns are only
+    ever added, so a built table stays valid)."""
 
     __slots__ = ("order", "index", "bounds", "columns", "tables", "nbytes")
 
-    def __init__(self, tbl: pa.Table, key: str):
+    def __init__(self, tbl: pa.Table, key: str, directory: bool = True):
         order = pc.sort_indices(tbl, sort_keys=[(key, "ascending")]).to_numpy()
         self.order = None if np.array_equal(order, np.arange(order.size)) else order
         tbl = self.ordered(tbl)
+        self.columns = dict(zip(tbl.column_names, tbl.columns))
+        self.tables: dict = {}
+        self.nbytes = sum(c.get_total_buffer_size() for c in self.columns.values())
+        self.index = self.bounds = None
+        if not directory:
+            return
         keys = tbl[key].combine_chunks()
         starts = np.flatnonzero(
             pc.not_equal(keys[1:], keys[:-1]).to_numpy(zero_copy_only=False)
@@ -98,16 +106,13 @@ class _Entry:
         # to_numpy().tolist(), not to_pylist(): ~20x faster for these types
         self.index = dict(zip(distinct.to_numpy(zero_copy_only=False).tolist(), range(len(starts))))
         self.bounds = np.append(starts, len(keys)).astype(np.int64)
-        self.columns = dict(zip(tbl.column_names, tbl.columns))
-        self.tables: dict = {}
         # the directory's Python objects, estimated: the dict, and per
         # key a str or int object header plus its run-number int
-        self.nbytes = (
+        self.nbytes += (
             sys.getsizeof(self.index)
             + distinct.get_total_buffer_size()
             + 80 * len(starts)
             + self.bounds.nbytes
-            + sum(c.get_total_buffer_size() for c in self.columns.values())
         )
 
     def ordered(self, tbl: pa.Table) -> pa.Table:
@@ -156,15 +161,18 @@ class RowGroupCache:
 
     def entry(self, key: tuple, fragment, schema, key_col: str, columns, keys, size: int) -> _Entry:
         """The entry of the row group ``fragment`` (cache key ``key``)
-        holding ``columns``, decoding what it lacks. A row group of more
-        than ``budget`` uncompressed bytes could never stay resident: it
-        is read filtered to ``keys`` into a transient entry instead."""
+        holding ``columns``, decoding what it lacks; ``keys`` None asks
+        for the whole row group, with no key directory. A row group of
+        more than ``budget`` uncompressed bytes could never stay
+        resident: it is read filtered to ``keys`` into a transient entry
+        instead."""
+        directory = keys is not None
         if size > self.budget:
             with self._lock:
                 self.misses += 1
-            flt = ds.field(key_col).isin(list(keys))
+            flt = ds.field(key_col).isin(list(keys)) if directory else None
             cols = list(dict.fromkeys([key_col, *columns]))
-            return _Entry(fragment.to_table(columns=cols, filter=flt, schema=schema), key_col)
+            return _Entry(fragment.to_table(columns=cols, filter=flt, schema=schema), key_col, directory)
         with self._lock:
             entry = self._entries.get(key)
             if entry is not None:
@@ -176,7 +184,7 @@ class RowGroupCache:
                 self.hits += 1
         if entry is None:
             read = fragment.to_table(columns=list(dict.fromkeys([key_col, *columns])), schema=schema)
-            entry = self._store(key, _Entry(read, key_col))
+            entry = self._store(key, _Entry(read, key_col, directory))
         elif missing:
             read = entry.ordered(fragment.to_table(columns=missing, schema=schema))
             self._grow(key, entry, dict(zip(read.column_names, read.columns)))
@@ -225,14 +233,17 @@ ROW_CACHE = RowGroupCache(ROW_CACHE_BYTES)
 
 def _entries(src: Source, key: str, keys, columns: list[str], partition: dict):
     """(hive partition values, entry holding ``columns``) of each row
-    group of the cached ``src`` that may hold ``keys``: files pruned by
-    ``partition`` (column -> allowed values), row groups by their
-    ``key`` min/max."""
+    group of the cached ``src`` that may hold ``keys`` (every row group
+    when None): files pruned by ``partition`` (column -> allowed
+    values), row groups by their ``key`` min/max. Whole-row-group
+    entries, which have no directory, are cached apart from keyed ones."""
     schema = src.dataset.schema
     for part, ckey, rg, lo, hi, size in src.row_groups(key):
         if any(part.get(c) not in vals for c, vals in partition.items()):
             continue
-        if lo is not None and hi is not None and not any(lo <= k <= hi for k in keys):
+        if keys is None:
+            ckey = (*ckey, "rows")
+        elif lo is not None and hi is not None and not any(lo <= k <= hi for k in keys):
             continue
         yield part, ROW_CACHE.entry(ckey, rg, schema, key, columns, keys, size)
 
@@ -273,3 +284,12 @@ def read_runs(src: Source, key: str, keys, columns: list[str], partition: dict |
             tbl = entry.table(columns)
             for i, k in runs:
                 yield part, k, entry.run(tbl, i)
+
+
+def read_groups(src: Source, key: str, columns: list[str], partition: dict | None = None):
+    """Every row group of the cached ``src`` in the files whose hive
+    partition values are in ``partition``, whole, through ROW_CACHE:
+    yields (hive partition values, its ``columns`` ordered by ``key``)."""
+    partition = {c: set(v) for c, v in (partition or {}).items()}
+    for part, entry in _entries(src, key, None, columns, partition):
+        yield part, entry.table(columns)

@@ -240,13 +240,14 @@ def test_router_sends_large_plans_to_spark(spark, index_dir, monkeypatch):
     assert sorted(remote, key=key) == sorted(local, key=key)
 
 
-def test_local_filters_match_spark_filters(spark, tmp_path):
+def test_local_filters_match_spark_filters(spark, tmp_path, monkeypatch):
     """The Arrow twin of the F2/F5 filters keeps exactly the docs
     Spark's keeps: role, tool (null tools never match), and ts bounds
     on a day boundary of a non-UTC session time zone, where cast(ts as
     date) takes the session zone's date. Every doc holds the query
-    term, so the shard task's doc set, in Spark tasks (matching_doc_ids)
-    and in the driver (ranked_heaps), is the filtered docmeta."""
+    term, so the shard task's doc set, in Spark tasks (matching_doc_ids
+    above the router's bound) and in the driver (ranked_heaps, and
+    matching_doc_ids under the bound), is the filtered docmeta."""
     from newsleak_spark.query.brute import _apply_filters
     from newsleak_spark.transcripts import TRANSCRIPT_SCHEMA
 
@@ -290,9 +291,12 @@ def test_local_filters_match_spark_filters(spark, tmp_path):
                     r["doc_id"]
                     for r in _apply_filters(spark.read.parquet(f"{d}/docmeta"), spec).collect()
                 )
-                got = sorted(r["doc_id"] for r in engine.matching_doc_ids(spark, d, spec).collect())
                 local = sorted(r["doc_id"] for r in engine.ranked_heaps(spark, d, spec))
-                assert got == local == want, (tz, spec)
+                driver = sorted(r["doc_id"] for r in engine.matching_doc_ids(spark, d, spec).collect())
+                with monkeypatch.context() as m:
+                    m.setattr(engine, "LOCAL_MAX_POSTINGS", -1)
+                    got = sorted(r["doc_id"] for r in engine.matching_doc_ids(spark, d, spec).collect())
+                assert got == local == driver == want, (tz, spec)
                 per_zone[tz, spec] = got
     finally:
         spark.conf.set(conf, zone)
@@ -339,10 +343,10 @@ def test_english_highlight_non_ascii_terms(spark):
     """english mode highlights surface words its analyzer tokenizes
     with unicode word characters ('Café', 'Straße')."""
     from newsleak_spark.analysis import analyze
-    from newsleak_spark.api import _highlight_analyzed
+    from newsleak_spark.api import _highlight
 
     text = "Der Café-Besitzer sagte: Straße gesperrt"
-    out = _highlight_analyzed(text, set(analyze("café straße", "english")), "english")
+    (out,) = _highlight([text], set(analyze("café straße", "english")), "english")
     assert out == "Der <em>Café</em>-Besitzer sagte: <em>Straße</em> gesperrt"
 
 
@@ -755,34 +759,55 @@ def _fresh_pages(spark, table_dir, index_dir, monkeypatch):
         return _pages(NewsleakAPI(spark, spark.read.parquet(table_dir), index_dir))
 
 
-def test_highlight_memo_matches_unmemoized():
-    """A page's shared highlight memo gives the same markup as analyzing
-    every surface word, in both modes, for words that analyze to
-    several tokens or hold non-ASCII letters."""
+def _highlight_per_word(text: str, targets: set[str], mode: str) -> str:
+    """The per-word highlighter, the oracle of api._highlight: every
+    surface word (english: analysis.WORD_RE; standard: a run of ASCII
+    letters, digits and apostrophes starting at a letter or digit) is
+    analyzed on its own and wrapped when a token of it is a target."""
     import re
 
     from newsleak_spark.analysis import WORD_RE, analyze
-    from newsleak_spark.api import _STANDARD_WORD_RE, _highlight_analyzed
 
-    bodies = [
+    word_re = WORD_RE if mode == "english" else re.compile(r"[0-9A-Za-z][0-9A-Za-z'’]*")
+
+    def repl(m: "re.Match[str]") -> str:
+        hit = any(t in targets for t in analyze(m.group(0), mode))
+        return f"<em>{m.group(0)}</em>" if hit else m.group(0)
+
+    return word_re.sub(repl, text)
+
+
+def test_page_highlight_matches_per_word_oracle(transcripts):
+    """api._highlight's one scan per page marks exactly the words the
+    per-word oracle marks, in both modes, on real bodies and on
+    adversarial ones: words that analyze to several tokens (o'brien),
+    runs of ’ and ' around and inside words, terms that are a prefix or
+    suffix of a run, case, and non-ASCII letters (Café, Straße)."""
+    from newsleak_spark.analysis import analyze
+    from newsleak_spark.api import _highlight
+
+    adversarial = [
         "O'Brien met o'brien at the Café; Straße closed, the café reopened.",
         "Brien's tables: TABLE table-join o'brien CAFÉ Strasse straße",
         "",
         "Databases and database tables merge windows; O’Brien’s café",
+        "''brien ’’Brien’ x'brien brien'' o''brien o’’brien’s brienx xbrien 'o'",
+        "S's t'T s’ 's 42 4'2 T42 t42's 7table table7 tab'le",
     ]
-    for mode, word_re in (("standard", _STANDARD_WORD_RE), ("english", WORD_RE)):
-        for query in ("brien table", "café straße", "o'brien", "databases merge"):
+    real = [r["text"] for r in transcripts.orderBy("doc_id").limit(400).collect()]
+    pages = [adversarial] + [real[i : i + 50] for i in range(0, len(real), 50)]
+    words = [w for b in real[:40] for w in b.split()[:2]]
+    queries = ["brien table", "café straße", "o'brien", "databases merge", "s t 42 t42", "tab le"]
+    queries += [" ".join(words[i : i + 3]) for i in range(0, len(words), 12)]
+    hits = 0
+    for mode in ("standard", "english"):
+        for query in queries:
             targets = set(analyze(query, mode))
-
-            def plain(m: "re.Match[str]") -> str:
-                hit = any(t in targets for t in analyze(m.group(0), mode))
-                return f"<em>{m.group(0)}</em>" if hit else m.group(0)
-
-            memo: dict = {}
-            got = [_highlight_analyzed(b, targets, mode, memo) for b in bodies]
-            assert got == [word_re.sub(plain, b) for b in bodies], (mode, query)
-            assert got == [_highlight_analyzed(b, targets, mode) for b in bodies]
-            assert any("<em>" in g for g in got), (mode, query)
+            for page in pages:
+                got = _highlight(page, targets, mode)
+                assert got == [_highlight_per_word(b, targets, mode) for b in page], (mode, query)
+                hits += sum("<em>" in g for g in got)
+    assert hits > 100
 
 
 def test_row_cache_follows_index_mutations(spark, transcripts, table_dir, tmp_path, monkeypatch):
@@ -862,3 +887,196 @@ def test_row_cache_tiny_budget(spark, table_dir, index_dir, monkeypatch):
         stats = engine.row_cache_stats()
         assert stats["budget"] == budget and stats["misses"] > 0
         assert stats["evictions"] > 0 if budget else stats["entries"] == stats["hits"] == 0
+
+
+# index-served aggregation shapes: scored, AND, phrase, not-only,
+# role-filtered, time-ranged should-only, match-all, an empty doc set
+AGG_SPECS = [
+    QuerySpec(terms=("table",)),
+    QuerySpec(terms=("merge", "window")),
+    QuerySpec(phrases=(("fast", "table"),)),
+    QuerySpec(not_terms=("merge",)),
+    QuerySpec(terms=("table",), role_filter=("user", "tool")),
+    QuerySpec(boost_terms=("merge", "window"), ts_from=dt.date(2018, 1, 1), ts_to=dt.date(2019, 6, 30)),
+    QuerySpec(),
+    QuerySpec(terms=("zzabsentzz",)),
+]
+# (column, size, include, exclude)
+AGG_FACETS = [
+    ("role", 3, None, None),
+    ("tool", 50, None, None),
+    ("tool", 4, ("tool_1", "zzz_never", "tool_2"), None),
+    ("role", 50, None, ("user",)),
+    ("tool", 50, ("tool_3", "tool_0"), ("tool_0",)),
+]
+
+
+def _agg_requests():
+    """(spec, facet tuple or timeline lod) pairs: every spec with two
+    facet variants and two levels of detail, every variant and level
+    used."""
+    out = []
+    for i, spec in enumerate(AGG_SPECS):
+        out += [(spec, AGG_FACETS[i % 5]), (spec, AGG_FACETS[(i + 2) % 5])]
+        out += [(spec, facets_mod.LODS[i % 4]), (spec, facets_mod.LODS[(i + 1) % 4])]
+    return out
+
+
+def _index_agg(spark, d, spec, what):
+    """A request's rows from the index: count_by's counts through
+    top_values or dense_buckets."""
+    if isinstance(what, tuple):
+        col, size, include, exclude = what
+        return facets_mod.top_values(engine.count_by(spark, d, spec, col), size, include, exclude)
+    return facets_mod.dense_buckets(engine.count_by(spark, d, spec, "ts", what), what)
+
+
+@pytest.fixture(scope="module")
+def scan_aggs(transcripts):
+    """_agg_requests' answers from the table scan: facet_counts and
+    date_histogram over matching_docs."""
+    assert transcripts.filter(F.col("tool").isNull()).count() > 0  # null tools are dropped
+    out = {}
+    for spec, what in _agg_requests():
+        docs = matching_docs(transcripts, spec)
+        if isinstance(what, tuple):
+            col, size, include, exclude = what
+            lists = [list(v) if v else None for v in (include, exclude)]
+            rows = facets_mod.facet_counts(docs, col, size, *lists).collect()
+            out[spec, what] = [(r["value"], r["n_docs"]) for r in rows]
+        else:
+            key = "decade" if what == "decade" else "bucket"
+            out[spec, what] = [(str(r[key]), r["n_docs"]) for r in facets_mod.date_histogram(docs, what).collect()]
+    assert any(not rows for rows in out.values()) and all(out[s, w] for s, w in out if s == QuerySpec())
+    return out
+
+
+@pytest.fixture(scope="module")
+def compacted_index_dir(delta_index_dir, spark, tmp_path_factory):
+    from newsleak_spark.indexing import compact_index
+
+    d = str(tmp_path_factory.mktemp("apicompacted") / "idx")
+    compact_index(spark, delta_index_dir, d)
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("which", ["index_dir", "delta_index_dir", "compacted_index_dir"])
+def test_index_aggregations_equal_scan(spark, request, scan_aggs, which):
+    """Role/tool facets (size, include with zero-fill, exclude; null
+    tools dropped) and day, month, year and decade timelines counted in
+    the driver's shard task, with no Spark job, equal facet_counts and
+    date_histogram over the scanned doc set for scored, AND, phrase,
+    not-only, role-filtered, time-ranged, match-all and empty specs, on
+    a single-part, a base+delta and a compacted index."""
+    d = request.getfixturevalue(which)
+    got, jobs = spark_jobs(spark, lambda: {k: _index_agg(spark, d, *k) for k in scan_aggs})
+    assert jobs == 0
+    for k, want in scan_aggs.items():
+        assert got[k] == want, k
+
+
+@pytest.mark.parametrize("which", ["index_dir", "delta_index_dir"])
+def test_index_aggregations_spark_executor_agrees(spark, request, monkeypatch, which):
+    """Above LOCAL_MAX_POSTINGS the shard task counts in Spark tasks:
+    count_by's merged partials equal the driver's, and
+    matching_doc_ids' Spark doc set equals its local DataFrame."""
+    d = request.getfixturevalue(which)
+    cases = [
+        (spec, col, lod)
+        for spec in AGG_SPECS[::2] + AGG_SPECS[5:7]
+        for col, lod in (("tool", None), ("ts", "month"))
+    ]
+    local = {c: engine.count_by(spark, d, *c) for c in cases}
+    ids = {spec: engine.matching_doc_ids(spark, d, spec) for spec in AGG_SPECS[3:5]}
+    assert all(df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation" for df in ids.values())
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", -1)
+    remote, jobs = spark_jobs(spark, lambda: {c: engine.count_by(spark, d, *c) for c in cases})
+    assert jobs > 0
+    assert remote == local and any(local.values())
+    for spec, df in ids.items():
+        spark_ids = engine.matching_doc_ids(spark, d, spec)
+        assert "MapInArrow" in spark_ids._jdf.queryExecution().executedPlan().toString()
+        assert sorted(r[0] for r in spark_ids.collect()) == sorted(r[0] for r in df.collect()), spec
+
+
+def test_timeline_session_time_zone_dst(spark, tmp_path, monkeypatch):
+    """Timelines bucket in the session time zone. In America/New_York,
+    turns on both sides of the 2021 March and November DST switches and
+    of day, month, year and decade boundaries land in the buckets
+    date_histogram puts them in, from the driver and from Spark tasks;
+    a null ts is in no bucket, a null tool in no facet value."""
+    from newsleak_spark.transcripts import TRANSCRIPT_SCHEMA
+
+    utc = dt.timezone.utc
+    stamps = [
+        dt.datetime(2020, 1, 1, 4, 59, tzinfo=utc),  # NY: 2019-12-31 23:59, the 2010s
+        dt.datetime(2020, 1, 1, 5, 0, tzinfo=utc),  # NY: 2020-01-01 00:00
+        dt.datetime(2021, 3, 1, 4, 59, tzinfo=utc),  # NY: Feb 28 23:59 EST
+        dt.datetime(2021, 3, 14, 4, 59, tzinfo=utc),  # NY: Mar 13 23:59 EST
+        dt.datetime(2021, 3, 14, 6, 59, tzinfo=utc),  # NY: Mar 14 01:59 EST
+        dt.datetime(2021, 3, 14, 7, 0, tzinfo=utc),  # NY: Mar 14 03:00 EDT
+        dt.datetime(2021, 3, 15, 3, 59, tzinfo=utc),  # NY: Mar 14 23:59 EDT
+        dt.datetime(2021, 3, 15, 4, 0, tzinfo=utc),  # NY: Mar 15 00:00 EDT
+        dt.datetime(2021, 11, 7, 3, 59, tzinfo=utc),  # NY: Nov 6 23:59 EDT
+        dt.datetime(2021, 11, 7, 5, 30, tzinfo=utc),  # NY: Nov 7 01:30 EDT
+        dt.datetime(2021, 11, 7, 6, 30, tzinfo=utc),  # NY: Nov 7 01:30 EST
+        dt.datetime(2021, 11, 8, 4, 59, tzinfo=utc),  # NY: Nov 7 23:59 EST
+        dt.datetime(2021, 11, 8, 5, 0, tzinfo=utc),  # NY: Nov 8 00:00 EST
+        dt.datetime(2022, 1, 1, 4, 59, tzinfo=utc),  # NY: 2021-12-31 23:59
+        None,
+    ]
+    tools = [None, "grep", "sed"]
+    rows = [
+        (i, f"c{i % 3}", i, "user", f"alpha {'beta' if i % 2 else 'gamma'} w{i}", tools[i % 3], ts)
+        for i, ts in enumerate(stamps)
+    ]
+    table = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    d = str(tmp_path / "idx")
+    build_index(spark, table, d, IndexConfig(n_shards=2, n_term_buckets=2, block_size=4))
+    scan = NewsleakAPI(spark, table, None)
+    conf = "spark.sql.session.timeZone"
+    zone = spark.conf.get(conf)
+    got = {}
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set(conf, tz)
+            for query in ("", "beta"):
+                want = [scan.get_timeline(query, lod=lod) for lod in facets_mod.LODS]
+                want.append(scan.aggregate("tool", query))
+                assert None not in [b["key"] for b in want[-1]["buckets"]]
+                for bound in (10**12, -1):
+                    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", bound)
+                    # a new handle per request: the aggregation cache
+                    # does not key on the session time zone
+                    outs = [NewsleakAPI(spark, table, d).get_timeline(query, lod=lod) for lod in facets_mod.LODS]
+                    outs.append(NewsleakAPI(spark, table, d).aggregate("tool", query))
+                    assert outs == want, (tz, query, bound)
+                for lod, out in zip(facets_mod.LODS, want):
+                    got[tz, query, lod] = out["buckets"]
+    finally:
+        spark.conf.set(conf, zone)
+    keys = lambda tz, lod: [b["key"] for b in got[tz, "", lod] if b["docCount"]]
+    assert keys("UTC", "decade") == ["2020"] and keys("America/New_York", "decade") == ["2010", "2020"]
+    assert "2021-03-13" in keys("America/New_York", "day") and "2021-03-13" not in keys("UTC", "day")
+    assert sum(b["docCount"] for b in got["America/New_York", "", "day"]) == len(stamps) - 1
+
+
+def test_cold_aggregations_start_no_spark_job(spark, transcripts, index_dir):
+    """Under the bound a cold facet and a cold timeline, scored or
+    match-all, start no Spark job, and neither does building
+    matching_doc_ids' DataFrame: the shard task runs in the driver and
+    the doc set is a local relation."""
+    fresh = NewsleakAPI(spark, transcripts, index_dir)
+    outs, jobs = spark_jobs(
+        spark,
+        lambda: [
+            fresh.aggregate("role", "table"),
+            fresh.get_timeline("table", lod="year"),
+            fresh.aggregate("tool"),
+            fresh.get_timeline(lod="month"),
+            engine.matching_doc_ids(spark, index_dir, QuerySpec(terms=("table",))),
+        ],
+    )
+    assert jobs == 0
+    assert fresh.agg_runs == 4 and all(o["buckets"] for o in outs[:4])

@@ -248,17 +248,26 @@ def test_a10_single_scan_broadcast_only(spark):
 
 
 def test_filtered_search_docmeta_pushdown(spark, index_dir, reads):
-    """F2/F5 filters are part of the docmeta read: the role predicate
-    is pushed into it (with the shard predicate), only (shard, doc_id)
-    is read, and a Spark task opens only its own shards' docmeta."""
+    """F2/F5 filters are part of the docmeta read. The driver decodes
+    each shard's docmeta row group once, through the row-group cache,
+    with only doc_id and the filter's column, filters it in Arrow, and
+    decodes nothing for a repeated query. A Spark task pushes the role
+    predicate (with the shard predicate) into its parquet read, reads
+    only (shard, doc_id), and opens only its own shards' docmeta."""
     spec = QuerySpec(terms=("spark",), role_filter=("user",), k=10)
-    _plan, driver, task = shard_task_reads(spark, index_dir, reads, spec, [3])
-    for log, shards in ((driver, range(4)), (task, [3])):
-        (files, cols, flt), = [r[1:] for r in log if "/docmeta/" in r[0]]
-        assert cols == ["shard", "doc_id"]
-        assert "role" in str(flt) and "shard" in str(flt), flt
-        dirs = {f.split("/docmeta/", 1)[1].rsplit("/", 1)[0] for f in files}
-        assert dirs == {f"shard={s}" for s in shards}, dirs
+    plan, driver, task = shard_task_reads(spark, index_dir, reads, spec, [3])
+    shard_dir = lambda f: f.split("/docmeta/", 1)[1].rsplit("/", 1)[0]
+    decoded = [r for r in driver if "/docmeta/" in r[0]]
+    assert len({r[0] for r in decoded}) == len(decoded)
+    assert {shard_dir(r[0]) for r in decoded} == {f"shard={s}" for s in range(4)}, decoded
+    assert all(r[2] == ["doc_id", "role"] and r[3] == "row group" for r in decoded), decoded
+    del reads[:]
+    engine.score_shards(plan, range(4), IndexReader(spark, index_dir).part_datasets)
+    assert not [r for r in reads if "/docmeta/" in r[0]]
+    (files, cols, flt), = [r[1:] for r in task if "/docmeta/" in r[0]]
+    assert cols == ["shard", "doc_id"]
+    assert "role" in str(flt) and "shard" in str(flt), flt
+    assert {shard_dir(f) for f in files} == {"shard=3"}
 
 
 def test_decontaminate_no_cartesian(spark):
