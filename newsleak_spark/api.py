@@ -505,7 +505,9 @@ class NewsleakAPI:
 
     def _agg_cached(self, key: tuple, compute, spec: QuerySpec):
         """Aggregation result memo (facet/timeline/network): bounded
-        FIFO keyed on (request, index state). Only scored specs are
+        FIFO keyed on (request, index state, session time zone: a
+        timeline buckets in the zone, and a facet or subgraph keyed the
+        same way costs nothing extra). Only scored specs are
         cached: a match_all / filters-only subgraph or facet on a
         column outside docmeta computes from self.transcripts via brute
         matching_docs, which carries no invalidation signal — the
@@ -516,7 +518,11 @@ class NewsleakAPI:
             with self._lock:
                 self.agg_runs += 1
             return compute()
-        full_key = (key, index_state_key(self.index_dir))
+        full_key = (
+            key,
+            index_state_key(self.index_dir),
+            self.spark.conf.get("spark.sql.session.timeZone"),
+        )
         with self._lock:
             hit = self._agg_cache.get(full_key)
             if hit is not None:

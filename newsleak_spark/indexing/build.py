@@ -6,9 +6,9 @@
     → postings groupBy (doc_id, term)              [stage: postings]
     → dictionary (term, df, cf, is_hot)            [stage: dictionary]
     → hot-pair bigram sidecar (positions indexes)  [stage: bigrams]
-    → salted repartition by (shard, bucket, salt)
-    → delta+varint block encode (applyInPandas,
-      whole-bucket vectorized numpy)               [stage: segments]
+    → group by (shard, bucket, salt), delta+varint
+      block encode (one vectorized numpy encode per
+      group; driver or Spark, routed by size)      [stage: segments]
     → manifest with per-partition lineage          (committed last)
 
 Layout (SURVEY §4.2 "Partition pruning" — two-level):
@@ -33,14 +33,24 @@ the tokenized checkpoint when it exists and from the postings'
 positions when it does not (a compacted index). Indexes without
 positions build no sidecar — they reject phrase queries.
 
+Segments (stage 5) run one per-group encode (_encode_bucket_fn) on
+either of two executors, picked like the query engine's router by the
+stage's input rows (unigram plus sidecar postings, both already in the
+manifest): within engine.LOCAL_MAX_SEGMENT_ROWS the driver reads the
+checkpoints with pyarrow, groups them with one sort and writes one file
+per (shard, bucket) directory (_driver_segments) with no Spark job;
+above it a postings ⋈ dictionary join feeds a grouped applyInArrow
+shuffle and a partitioned Spark write (_spark_segments). Both write the
+same rows, layout and lineage.
+
 Skew (north_rule "skew handled explicitly"): terms with
-df ≥ hot_df_ratio·N get ``salt = doc_id % n_salts`` in the encode
+df ≥ hot_df_ratio·N get ``salt = pmod(doc_id, n_salts)`` in the encode
 group key, so a stopword-frequency term (df ≈ 0.4N in the fixtures)
 encodes as n_salts parallel groups instead of one straggler. Non-hot
-terms share the (shard, bucket, salt=0) group, so the encode UDF runs
-over ~n_shards·n_term_buckets LARGE pandas frames (vectorized numpy
-across every block in the group) instead of one tiny frame per term —
-per-group Python overhead amortizes to ~zero. Salted sub-lists stay
+terms share the (shard, bucket, salt=0) group, so the encode runs over
+~n_shards·n_term_buckets LARGE Arrow tables (vectorized numpy across
+every block in the group) instead of one tiny table per term: its
+~1 ms of fixed cost is paid per group, not per term. Salted sub-lists stay
 separate block runs in the segment; the query side merges them (they
 are disjoint by construction).
 
@@ -52,6 +62,7 @@ drop-and-recreate (Postgres2ElasticsearchIndexer.java:82,368-372).
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
@@ -105,9 +116,9 @@ class IndexConfig:
 # Separator for synthetic bigram terms ("a\x1fb"): the ASCII unit
 # separator cannot appear in analyzed tokens (both analyzer modes emit
 # [0-9a-z']-class words), so bigram terms can never collide with a real
-# term. NOT NUL: pandas' object-dtype groupby hashes str keys with
-# C-string semantics, so "a\x00b" silently collides with "a" inside the
-# shard scorer's groupby("term").
+# term. Not NUL, which C-string handling truncates ("a\x00b" once
+# collided with "a" in a pandas groupby). The separator is part of the
+# on-disk term format.
 BIGRAM_SEP = "\x1f"
 
 
@@ -346,16 +357,31 @@ def _bigram_from_postings(postings: DataFrame, hot_terms: list[str]) -> DataFram
     )
 
 
+def _blocks(buf: bytes, offsets: np.ndarray):
+    """Binary array whose value i is ``buf[offsets[i]:offsets[i+1]]``,
+    built zero-copy over ``buf``. Its offsets are int32, so a stream of
+    2 GiB or more raises instead of wrapping."""
+    import pyarrow as pa
+
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise OverflowError(f"block stream of {int(offsets[-1])} bytes exceeds 2 GiB")
+    return pa.BinaryArray.from_buffers(
+        pa.binary(),
+        offsets.size - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(buf)],
+    )
+
+
 def _encode_bucket_fn(cfg: IndexConfig, n_docs: float, avgdl: float):
-    """Vectorized whole-group encoder (applyInArrow): one Arrow table
-    per (shard, bucket, salt) group, every term run and every block
-    inside it encoded with numpy array programs — varint streams are
-    encoded ONCE for the whole group and sliced per block via byte
-    offsets (codec.varint_encode_with_offsets), block maxima via
-    np.maximum.reduceat. The ragged positions column arrives as a
-    ListArray and is consumed as its (offsets, values) buffers — no
-    per-posting Python objects. Per-block Python work is a handful of
-    byte slices.
+    """Vectorized whole-group encoder: one Arrow table per
+    (shard, bucket, salt) group, every term run and every block inside
+    it encoded with numpy array programs — varint streams are encoded
+    ONCE for the whole group (codec.varint_encode_with_offsets) and each
+    binary block column is a zero-copy view of its stream cut at the
+    block boundaries (_blocks); block maxima via np.maximum.reduceat.
+    The ragged positions column arrives as a ListArray and is consumed
+    as its (offsets, values) buffers. No Python loop runs per block or
+    per posting.
 
     Byte format per block is IDENTICAL to encoding each block alone:
     doc deltas reset to absolute at block starts; position deltas reset
@@ -367,9 +393,9 @@ def _encode_bucket_fn(cfg: IndexConfig, n_docs: float, avgdl: float):
     blocks store docs varints only, with empty tfs/dls/poscnt/posflat
     bytes and zero block maxima. The sidecar is ~25-33% of all postings
     at the default top-8 hot set, so skipping its three dead varint
-    streams and per-block byte slices is a measurable slice of the
-    segments stage (the build's dominant cost). The decoder treats an
-    empty tf/dl stream as all-ones (_decode_term_blocks).
+    streams is a measurable slice of the segments stage (the build's
+    dominant cost). The decoder treats an empty tf/dl stream as
+    all-ones (_decode_term_blocks).
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -420,22 +446,18 @@ def _encode_bucket_fn(cfg: IndexConfig, n_docs: float, avgdl: float):
         bucket = int(table.column("bucket")[0].as_py())
         salt = int(table.column("salt")[0].as_py())
 
-        # term runs → block boundaries (every run restarts block_seq)
+        # term runs → blocks of block_size (every run restarts block_seq)
         new_term = np.empty(n, dtype=bool)
         new_term[0] = True
         new_term[1:] = term_codes[1:] != term_codes[:-1]
         run_starts = np.flatnonzero(new_term)
-        run_ends = np.append(run_starts[1:], n)
-        block_starts = np.concatenate(
-            [np.arange(s, e, block_size) for s, e in zip(run_starts, run_ends)]
+        run_blocks = -(-np.diff(np.append(run_starts, n)) // block_size)
+        block_seq = np.arange(run_blocks.sum()) - np.repeat(
+            np.cumsum(run_blocks) - run_blocks, run_blocks
         )
-        block_ends = np.append(block_starts[1:], n)
-        # block_seq within each term run
-        run_of_block = np.searchsorted(run_starts, block_starts, side="right") - 1
-        block_seq = (
-            np.arange(block_starts.size)
-            - np.searchsorted(block_starts, run_starts[run_of_block], side="left")
-        )
+        block_starts = np.repeat(run_starts, run_blocks) + block_seq * block_size
+        cuts = np.append(block_starts, n)  # block i is rows cuts[i]:cuts[i+1]
+        block_ends = cuts[1:]
 
         if slim:
             # membership-only blocks: never scored, never position-
@@ -486,6 +508,7 @@ def _encode_bucket_fn(cfg: IndexConfig, n_docs: float, avgdl: float):
                 fbuf, foffs = b"", np.zeros(1, dtype=np.int64)
 
         nb = block_starts.size
+        empty = _blocks(b"", np.zeros(nb + 1, dtype=np.int64))
         cols = {
             "shard": pa.array(np.full(nb, shard, dtype=np.int32)),
             "bucket": pa.array(np.full(nb, bucket, dtype=np.int32)),
@@ -497,41 +520,147 @@ def _encode_bucket_fn(cfg: IndexConfig, n_docs: float, avgdl: float):
             "doc_last": pa.array(docs[block_ends - 1], type=pa.int64()),
             "max_tf": pa.array(max_tfs.astype(np.int32)),
             "max_score": pa.array(max_scores, type=pa.float64()),
-            "docs": pa.array(
-                [dbuf[doffs[s] : doffs[e]] for s, e in zip(block_starts, block_ends)],
-                type=pa.binary(),
-            ),
-            "tfs": pa.array(
-                [b""] * nb
-                if slim
-                else [tbuf[toffs[s] : toffs[e]] for s, e in zip(block_starts, block_ends)],
-                type=pa.binary(),
-            ),
-            "dls": pa.array(
-                [b""] * nb
-                if slim
-                else [lbuf[loffs[s] : loffs[e]] for s, e in zip(block_starts, block_ends)],
-                type=pa.binary(),
-            ),
+            "docs": _blocks(dbuf, doffs[cuts]),
+            "tfs": empty if slim else _blocks(tbuf, toffs[cuts]),
+            "dls": empty if slim else _blocks(lbuf, loffs[cuts]),
+            "poscnt": _blocks(cbuf, coffs[cuts]) if with_pos and not slim else empty,
+            "posflat": _blocks(fbuf, foffs[pcum[cuts]]) if with_pos and not slim else empty,
         }
-        if with_pos and not slim:
-            cols["poscnt"] = pa.array(
-                [cbuf[coffs[s] : coffs[e]] for s, e in zip(block_starts, block_ends)],
-                type=pa.binary(),
-            )
-            cols["posflat"] = pa.array(
-                [
-                    fbuf[foffs[pcum[s]] : foffs[pcum[e]]]
-                    for s, e in zip(block_starts, block_ends)
-                ],
-                type=pa.binary(),
-            )
-        else:
-            cols["poscnt"] = pa.array([b""] * nb, type=pa.binary())
-            cols["posflat"] = pa.array([b""] * nb, type=pa.binary())
         return pa.table(cols)
 
     return encode
+
+
+# Segment files written in the driver: zstd at Spark's level 3, no
+# dictionary pages, no embedded Arrow schema, and min/max statistics on
+# `term` only (the one file column a segment read filters on). On the
+# 4k-turn perfbench serving index these write 9.6% fewer parquet bytes
+# than Spark's writer and the fewest of the settings measured (pyarrow
+# defaults: +5.9%; BASELINE.md "Segments stage in the driver").
+SEGMENT_WRITER = {
+    "compression": "zstd",
+    "compression_level": 3,
+    "use_dictionary": False,
+    "store_schema": False,
+    "write_statistics": ["term"],
+}
+
+
+def _driver_segments(sources: list, encode, n_salts: int, seg_path: str) -> dict:
+    """Stage 5 in the driver: each (postings, dictionary) checkpoint
+    pair of ``sources`` read with pyarrow, the posting rows given their
+    term's df/bucket/is_hot by a term lookup (the Spark route's join),
+    salted as the Spark route salts, ordered by (shard, bucket, salt)
+    with one sort and ``encode``d one group at a time. ``seg_path`` is
+    replaced by one parquet file per shard=S/bucket=B directory.
+    Returns the stage's lineage, counted from the blocks in memory."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    tables = []
+    for post, dic in sources:
+        rows = ds.dataset(post, format="parquet").to_table()
+        terms = ds.dataset(dic, format="parquet", partitioning="hive").to_table(
+            columns=["term", "df", "bucket", "is_hot"]
+        )
+        # every posting's term is in the dictionary aggregated from it
+        idx = pc.index_in(rows["term"], value_set=terms["term"])
+        for name in ("df", "bucket", "is_hot"):
+            rows = rows.append_column(name, terms[name].take(idx))
+        tables.append(rows)
+    # a compaction's sidecar (_bigram_from_postings) writes non-null
+    # fields where the postings' are nullable
+    rows = pa.concat_tables(tables, promote_options="default")
+    doc_id = rows["doc_id"].to_numpy()
+    shard = rows["shard"].to_numpy()
+    bucket = rows["bucket"].to_numpy()
+    # Spark's pmod: non-negative for negative doc ids, as np.mod is
+    salt = np.where(rows["is_hot"].to_numpy(), np.mod(doc_id, n_salts), 0).astype(np.int32)
+    order = np.lexsort((salt, bucket, shard))
+    rows = rows.append_column("salt", pa.array(salt)).take(order)
+    shard, bucket, salt = shard[order], bucket[order], salt[order]
+    starts = np.flatnonzero(np.concatenate((
+        [True], (shard[1:] != shard[:-1]) | (bucket[1:] != bucket[:-1]) | (salt[1:] != salt[:-1])
+    )))
+    by_dir: dict = {}
+    for lo, hi in zip(starts.tolist(), np.append(starts[1:], rows.num_rows).tolist()):
+        by_dir.setdefault((int(shard[lo]), int(bucket[lo])), []).append(encode(rows.slice(lo, hi - lo)))
+    if os.path.exists(seg_path):
+        shutil.rmtree(seg_path)
+    lineage = {}
+    for (s, b), parts in by_dir.items():
+        blocks = pa.concat_tables(parts)
+        leaf = f"shard={s}/bucket={b}"
+        os.makedirs(os.path.join(seg_path, leaf))
+        pq.write_table(
+            blocks.drop_columns(["shard", "bucket"]),
+            os.path.join(seg_path, leaf, "part-00000.parquet"),
+            **SEGMENT_WRITER,
+        )
+        n = blocks["n"].to_numpy()
+        is_bigram = pc.match_substring(blocks["term"], BIGRAM_SEP).to_numpy(zero_copy_only=False)
+        lineage[leaf] = {
+            "blocks": blocks.num_rows,
+            "postings": int(n[~is_bigram].sum()),
+            "bigram_postings": int(n[is_bigram].sum()),
+        }
+    return lineage
+
+
+def _spark_segments(read, sources: list, encode, n_salts: int, seg_path: str) -> dict:
+    """Stage 5 as Spark jobs: the (postings, dictionary) checkpoint pairs
+    of ``sources`` joined on term and unioned, salted, grouped by
+    (shard, bucket, salt) and ``encode``d (applyInArrow), written
+    partitioned by shard and bucket. ``read`` is build_index's memoized
+    parquet reader. Returns the stage's lineage, counted by re-reading
+    the written segments."""
+    joined = functools.reduce(
+        DataFrame.unionByName,
+        [read(post).join(read(dic).select("term", "df", "bucket", "is_hot"), "term") for post, dic in sources],
+    ).withColumn(
+        "salt",
+        F.when(F.col("is_hot"), F.pmod(F.col("doc_id"), F.lit(n_salts)))
+        .otherwise(F.lit(0))
+        .cast("int"),
+    )
+    blocks = joined.groupBy("shard", "bucket", "salt").applyInArrow(encode, BLOCK_SCHEMA)
+    # second (cheap) shuffle: co-locate each (shard,bucket) partition's
+    # blocks. The planned partitionBy write sorts by the partition
+    # columns and drops this sort, so files are NOT term-sorted; a
+    # sort led by "shard", "bucket" would keep it, at +2.5% segment
+    # bytes on the 4k-turn perfbench index (CHANGES.md).
+    (
+        blocks.repartition("shard", "bucket")
+        .sortWithinPartitions("term", "salt", "block_seq")
+        .write.mode("overwrite")
+        .partitionBy("shard", "bucket")
+        .parquet(seg_path)
+    )
+    # lineage splits unigram vs bigram-sidecar rows so n_postings
+    # keeps its stage-3 meaning (unigram postings; the pinned
+    # invariant sum(lineage postings) == n_postings survives the
+    # sidecar riding the same segment files)
+    is_bigram = F.col("term").contains(BIGRAM_SEP)
+    lineage_rows = (
+        read(seg_path)
+        .groupBy("shard", "bucket")
+        .agg(
+            F.count("*").alias("blocks"),
+            F.sum(F.when(~is_bigram, F.col("n")).otherwise(F.lit(0))).alias("postings"),
+            F.sum(F.when(is_bigram, F.col("n")).otherwise(F.lit(0))).alias("bigram_postings"),
+        )
+        .collect()
+    )
+    return {
+        f"shard={r['shard']}/bucket={r['bucket']}": {
+            "blocks": int(r["blocks"]),
+            "postings": int(r["postings"]),
+            "bigram_postings": int(r["bigram_postings"]),
+        }
+        for r in lineage_rows
+    }
 
 
 def build_index(
@@ -610,22 +739,18 @@ def build_index(
             StageRecord("tokenized", rows, time.time() - t0, dir_bytes(tok_path), chash)
         )
 
-    # tokenized checkpoint is read LAZILY: a compacted index
-    # (compact_index) seeds docmeta+postings directly and has no
-    # tokenized dir — stages that are already committed must not
-    # touch it
-    _tok_cache: list = []
-
-    def _tokenized() -> DataFrame:
-        if not _tok_cache:
-            _tok_cache.append(spark.read.parquet(tok_path))
-        return _tok_cache[0]
+    # checkpoints are read LAZILY, once, by the first stage that needs
+    # them: a compacted index (compact_index) seeds docmeta+postings
+    # directly and has no tokenized dir, and a resumed build or a
+    # driver-encoded segments stage reads no checkpoint with Spark —
+    # even inferring a parquet schema runs a Spark job
+    read = functools.cache(spark.read.parquet)
 
     # ---- stage 2: docmeta + collection stats ------------------------------
     if not (resume and man.stage_done("docmeta", chash)):
         t0 = time.time()
         obs = Observation("docmeta")
-        meta = _tokenized().select("doc_id", "role", "tool", "ts", "dl", "shard").observe(
+        meta = read(tok_path).select("doc_id", "role", "tool", "ts", "dl", "shard").observe(
             obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
         )
         meta.write.mode("overwrite").partitionBy("shard").parquet(meta_path)
@@ -655,7 +780,7 @@ def build_index(
     # ---- stage 3: postings checkpoint (computed once, reused twice) -------
     if not (resume and man.stage_done("postings", chash)):
         t0 = time.time()
-        p = _postings(_tokenized(), cfg.with_positions)
+        p = _postings(read(tok_path), cfg.with_positions)
         obs = Observation("postings")
         p = p.observe(obs, F.count(F.lit(1)).alias("rows"))
         p.write.mode("overwrite").parquet(post_path)
@@ -665,13 +790,11 @@ def build_index(
             StageRecord("postings", n_post, time.time() - t0, dir_bytes(post_path), chash)
         )
 
-    postings = spark.read.parquet(post_path)
-
     # ---- stage 4: dictionary (re-agg of the postings checkpoint) ----------
     if not (resume and man.stage_done("dictionary", chash)):
         t0 = time.time()
         dictionary = (
-            postings.groupBy("term")
+            read(post_path).groupBy("term")
             .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
             .withColumn("bucket", _bucket_col(F.col("term"), cfg.n_term_buckets))
             .withColumn("is_hot", F.col("df") >= F.lit(cfg.hot_df_ratio) * F.lit(n_docs))
@@ -693,8 +816,6 @@ def build_index(
             )
         )
 
-    dictionary = spark.read.parquet(dict_path)
-
     # ---- stage 4b: hot-pair bigram sidecar (phrase acceleration) ----------
     # A phrase of two HOT terms is the engine's worst case (a
     # multi-million-candidate AND pays full position decode); indexing
@@ -710,7 +831,7 @@ def build_index(
         # (cf desc, term asc) ordering keeps the set deterministic
         hot_terms = sorted(
             r["term"]
-            for r in dictionary.orderBy(F.desc("cf"), F.asc("term"))
+            for r in read(dict_path).orderBy(F.desc("cf"), F.asc("term"))
             .limit(cfg.bigram_top_terms)
             .select("term")
             .collect()
@@ -720,9 +841,9 @@ def build_index(
             # both extractors give identical rows; the tokens pass is
             # faster, and a compacted index has only its merged postings
             if os.path.exists(tok_path):
-                bp = _bigram_postings(_tokenized(), hot_terms)
+                bp = _bigram_postings(read(tok_path), hot_terms)
             else:
-                bp = _bigram_from_postings(postings, hot_terms)
+                bp = _bigram_from_postings(read(post_path), hot_terms)
             obs = Observation("bigrams")
             bp = bp.observe(obs, F.count(F.lit(1)).alias("rows"))
             bp.write.mode("overwrite").parquet(big_post_path)
@@ -748,67 +869,25 @@ def build_index(
             )
         )
 
-    # ---- stage 5: segments (salted encode shuffle) -------------------------
+    # ---- stage 5: segments (one encode, routed by size) --------------------
+    # The stage's input rows — unigram plus sidecar postings, both in the
+    # manifest already, so sizing runs no job — pick the executor as the
+    # query engine's router does: small inputs encode in the driver,
+    # larger ones as a salted Spark shuffle. Both run the same per-group
+    # encode and write the same hive layout and column types.
     if not (resume and man.stage_done("segments", chash)):
+        from newsleak_spark.query import engine  # lazy: engine imports this package
+
         t0 = time.time()
-        joined = postings.join(
-            dictionary.select("term", "df", "bucket", "is_hot"), "term"
-        )
-        if sidecar and int(man.stats.get("n_bigram_postings") or 0) > 0:
-            # bigram sidecar rows ride the same salted encode: their
-            # synthetic terms bucket/salt/encode like any other term
-            joined = joined.unionByName(
-                spark.read.parquet(big_post_path).join(
-                    spark.read.parquet(big_dict_path).select(
-                        "term", "df", "bucket", "is_hot"
-                    ),
-                    "term",
-                )
-            )
-        joined = joined.withColumn(
-            "salt",
-            F.when(F.col("is_hot"), F.pmod(F.col("doc_id"), F.lit(cfg.n_salts)))
-            .otherwise(F.lit(0))
-            .cast("int"),
-        )
-        blocks = joined.groupBy("shard", "bucket", "salt").applyInArrow(
-            _encode_bucket_fn(cfg, n_docs, avgdl), BLOCK_SCHEMA
-        )
-        # second (cheap) shuffle: co-locate each (shard,bucket) partition's
-        # blocks. The planned partitionBy write sorts by the partition
-        # columns and drops this sort, so files are NOT term-sorted; a
-        # sort led by "shard", "bucket" would keep it, at +2.5% segment
-        # bytes on the 4k-turn perfbench index (CHANGES.md).
-        (
-            blocks.repartition("shard", "bucket")
-            .sortWithinPartitions("term", "salt", "block_seq")
-            .write.mode("overwrite")
-            .partitionBy("shard", "bucket")
-            .parquet(seg_path)
-        )
-        seg = spark.read.parquet(seg_path)
-        # lineage splits unigram vs bigram-sidecar rows so n_postings
-        # keeps its stage-3 meaning (unigram postings; the pinned
-        # invariant sum(lineage postings) == n_postings survives the
-        # sidecar riding the same segment files)
-        is_bigram = F.col("term").contains(BIGRAM_SEP)
-        lineage_rows = (
-            seg.groupBy("shard", "bucket")
-            .agg(
-                F.count("*").alias("blocks"),
-                F.sum(F.when(~is_bigram, F.col("n")).otherwise(F.lit(0))).alias("postings"),
-                F.sum(F.when(is_bigram, F.col("n")).otherwise(F.lit(0))).alias("bigram_postings"),
-            )
-            .collect()
-        )
-        lineage = {
-            f"shard={r['shard']}/bucket={r['bucket']}": {
-                "blocks": int(r["blocks"]),
-                "postings": int(r["postings"]),
-                "bigram_postings": int(r["bigram_postings"]),
-            }
-            for r in lineage_rows
-        }
+        n_big = int(man.stats.get("n_bigram_postings") or 0) if sidecar else 0
+        # bigram sidecar rows ride the same salted encode: their
+        # synthetic terms bucket/salt/encode like any other term
+        sources = [(post_path, dict_path)] + ([(big_post_path, big_dict_path)] if n_big else [])
+        encode = _encode_bucket_fn(cfg, n_docs, avgdl)
+        if int(man.stats["n_postings"]) + n_big <= engine.LOCAL_MAX_SEGMENT_ROWS:
+            lineage = _driver_segments(sources, encode, cfg.n_salts, seg_path)
+        else:
+            lineage = _spark_segments(read, sources, encode, cfg.n_salts, seg_path)
         total_postings = sum(v["postings"] for v in lineage.values())
         man.set_stats(n_postings=total_postings)
         man.commit_stage(

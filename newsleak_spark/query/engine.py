@@ -747,6 +747,18 @@ CANDIDATE_SCHEMA = "shard int, doc_id long, score_e6 long, hits long"
 # AND and filtered plans between 0.7M and 1.5M rows to Spark.
 LOCAL_MAX_POSTINGS = 1_500_000
 
+# Build stage 5 (segments) encodes in the driver when its input rows
+# (unigram plus bigram-sidecar postings) are at most this many, and as a
+# Spark shuffle above (build._driver_segments / _spark_segments).
+# Measured on 4 cores with the default 8x32 layout (BASELINE.md
+# "Segments stage in the driver"), the driver stage took 2.2-4.5 s
+# against Spark's 7.1-16.9 s at 0.36M-1.45M rows and 6.6-7.6 s against
+# 14.1-15.9 s at 5.8M: no crossover, the gap widening with size. So the
+# bound is the driver's memory instead, which holds every input row: the
+# process peaked at 0.26 GB RSS at 0.36M rows and 1.07 GB at 5.8M, the
+# largest size measured, which 6M rounds.
+LOCAL_MAX_SEGMENT_ROWS = 6_000_000
+
 
 # The docmeta columns a facet counts in the shard task (count_by); a
 # facet on any other table column semi-joins the table.

@@ -1035,20 +1035,24 @@ def test_timeline_session_time_zone_dst(spark, tmp_path, monkeypatch):
     d = str(tmp_path / "idx")
     build_index(spark, table, d, IndexConfig(n_shards=2, n_term_buckets=2, block_size=4))
     scan = NewsleakAPI(spark, table, None)
+    one = NewsleakAPI(spark, table, d)  # one handle across both zones
     conf = "spark.sql.session.timeZone"
     zone = spark.conf.get(conf)
     got = {}
     try:
         for tz in ("UTC", "America/New_York"):
             spark.conf.set(conf, tz)
+            # a cached timeline is served only in the zone it was counted in
+            first = [b["key"] for b in one.get_timeline("alpha", lod="year")["buckets"]][0]
+            assert first == {"UTC": "2020", "America/New_York": "2019"}[tz]
             for query in ("", "beta"):
                 want = [scan.get_timeline(query, lod=lod) for lod in facets_mod.LODS]
                 want.append(scan.aggregate("tool", query))
                 assert None not in [b["key"] for b in want[-1]["buckets"]]
                 for bound in (10**12, -1):
                     monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", bound)
-                    # a new handle per request: the aggregation cache
-                    # does not key on the session time zone
+                    # a new handle per request: LOCAL_MAX_POSTINGS is
+                    # not in the aggregation cache key
                     outs = [NewsleakAPI(spark, table, d).get_timeline(query, lod=lod) for lod in facets_mod.LODS]
                     outs.append(NewsleakAPI(spark, table, d).aggregate("tool", query))
                     assert outs == want, (tz, query, bound)
